@@ -13,7 +13,7 @@ object StageProfile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")

@@ -385,12 +385,6 @@ object VectorFunctions {
   def quantVecSum(vec: Column): Column =
     GraftGlue.column(
       QuantVecSum(toExpr(vec)).toAggregateExpression())
-  /** Aggregate: exact elementwise Σ over `array<long>` rows — the
-    * integer-grid sibling of [[quantVecSum]] for frames that already
-    * hold BIGINT grid values (residual-PQ codebook rounds). */
-  def longVecSum(vec: Column): Column =
-    GraftGlue.column(
-      LongVecSum(toExpr(vec)).toAggregateExpression())
   /** Space-join of `words` at 1-based positions NOT in the sorted
     * duplicate-free `drop` array — the dedup_span_removal rebuild. */
   def dropSortedPositionsJoin(words: Column, drop: Column): Column =

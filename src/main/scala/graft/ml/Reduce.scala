@@ -1,8 +1,13 @@
 package graft.ml
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.QuantOuterProduct
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Dimensionality reduction + clustering on the embedding corpus via
   * MLlib (SURVEY.md §2.2 #29/#30; reference wrapper.R:259-348 — denoised
@@ -191,12 +196,15 @@ object Reduce {
   //  - assignment distances are Σ(Δ grid)² over round(x·1e3) BIGINTs —
   //    integer argmin with cluster-id tiebreak, NO fp ambiguity;
   //  - 3 unrolled rounds; every k of the elbow sweep rides ONE
-  //    pipeline (the kval column), so the 7-fit sweep is 3 aggregation
-  //    rounds total, not 21.
-  // Scale: centroid tables are ≤Σk rows of d-arrays (broadcast); the
-  // fact side is one narrow zip_with fold per assignment and one
-  // posexplode per centroid aggregation; assignments localCheckpoint
-  // between rounds (the Harmony contract).
+  //    pipeline (the kval column), so the 7-fit sweep is 3 rounds
+  //    total, not 21.
+  // Every grid-Lloyd trainer (k-means, elbow, IVF, PQ, residual PQ,
+  // bisecting) runs on one round primitive, [[lloydRounds]]: the
+  // points persist once as long arrays and each round is ONE job — a
+  // mapPartitions that assigns every point against the driver-held
+  // centroid table and sums its long vector per (group, k), whose
+  // partials the driver merges (the MLlib KMeans shape). Rounds are
+  // Scala closures, so they plan and generate no code per round.
   private[graft] val LloydRounds = 3
 
   private def quant1e6(v: String) =
@@ -204,83 +212,135 @@ object Reduce {
   private def gridded(v: String) =
     expr(s"transform($v, x -> CAST(round(x * 1000, 0) AS BIGINT))")
 
+  /** One training point: `x` is what the centroid sums add (round(v·1e6)
+    * for real vectors, the residual itself for residual PQ), `xq` what
+    * the argmin measures, `k` its cluster in the first round. */
+  private final case class LloydPoint(group: Any, id: Any, x: Array[Long],
+      xq: Array[Long], k: Long)
+
+  /** One group's centroid table, ascending by cluster id k: member
+    * count, mean and grid centroid per cluster. */
+  private final case class LloydCents(k: Array[Long], n: Array[Long],
+      cv: Array[Array[Double]], cq: Array[Array[Long]])
+
+  /** Nearest centroid as (k, d²): integer d², the smaller k wins a tie —
+    * the (d2, k) total order of the oracle's row_number. */
+  private def nearest(xq: Array[Long], c: LloydCents): (Long, Long) = {
+    var best = 0; var bd = 0L; var j = 0
+    while (j < c.k.length) {
+      val cq = c.cq(j); var d2 = 0L; var i = 0
+      while (i < xq.length) { val e = xq(i) - cq(i); d2 += e * e; i += 1 }
+      if (j == 0 || d2 < bd) { best = j; bd = d2 }
+      j += 1
+    }
+    (c.k(best), bd)
+  }
+
+  /** A cluster's mean and grid centroid from its long-vector sum, in
+    * the same double operations as the SQL: `cv = sq / (1e6 * n)`,
+    * `cq = round(cv * 1000)` over quant_vec_sum sums, or for residuals
+    * `cv = sq / n`, `cq = round(cv)`. */
+  private def centroid(sum: Array[Long], n: Long, residual: Boolean)
+      : (Array[Double], Array[Long]) =
+    if (residual) { val cv = sum.map(_ / n.toDouble); (cv, cv.map(QuantOuterProduct.q)) }
+    else { val cv = sum.map(_ / (1e6 * n)); (cv, cv.map(c => QuantOuterProduct.q(c * 1000))) }
+
+  /** [[LloydRounds]] rounds over `points`, one job each; returns every
+    * group's final-round centroid table. A cluster that no point chose
+    * drops out of the table. */
+  private def lloydRounds(points: RDD[LloydPoint], residual: Boolean)
+      : Map[Any, LloydCents] = {
+    var table: Map[Any, LloydCents] = null
+    for (_ <- 1 to LloydRounds) {
+      val prev = table
+      val partials = points.mapPartitions { it =>
+        val acc = scala.collection.mutable.HashMap.empty[(Any, Long), (Array[Long], Array[Long])]
+        it.foreach { p =>
+          val k = if (prev == null) p.k else nearest(p.xq, prev(p.group))._1
+          val (sum, n) = acc.getOrElseUpdate((p.group, k),
+            (new Array[Long](p.x.length), new Array[Long](1)))
+          var i = 0
+          while (i < sum.length) { sum(i) += p.x(i); i += 1 }
+          n(0) += 1
+        }
+        acc.iterator.map { case ((g, k), (sum, n)) => (g, k, n(0), sum) }
+      }.collect()
+      table = partials.groupBy(_._1).map { case (g, ps) =>
+        val cs = ps.groupBy(_._2).toArray.sortBy(_._1).map { case (k, pk) =>
+          val n = pk.map(_._3).sum
+          (k, n, centroid(pk.map(_._4).reduce((a, b) => a.zip(b).map(t => t._1 + t._2)), n, residual))
+        }
+        g -> LloydCents(cs.map(_._1), cs.map(_._2), cs.map(_._3._1), cs.map(_._3._2))
+      }
+    }
+    table
+  }
+
+  /** `pts` (group, id, vector, grid vector, initial k) as points; group
+    * and id must be integral. */
+  private def lloydPoints(pts: DataFrame, residual: Boolean): RDD[LloydPoint] = {
+    val types = pts.schema.fields.map(_.dataType)
+    pts.queryExecution.toRdd.map { r =>
+      val x = if (residual) r.getArray(2).toLongArray()
+        else r.getArray(2).toDoubleArray().map(v => QuantOuterProduct.q(v * 1e6))
+      LloydPoint(r.get(0, types(0)), r.get(1, types(1)), x, r.getArray(3).toLongArray(),
+        r.get(4, types(4)).asInstanceOf[Number].longValue)
+    }
+  }
+
+  /** Grid-Lloyd training of `pts` (group, id, vector, grid vector,
+    * initial k): `array<double>` vectors sum on the 1e-6 grid,
+    * `array<bigint>` ones are residuals. Returns the final assignment
+    * (group, id, k, d2), checkpointed, and the final-round centroids
+    * (group, k, cv, cq) as a local table. The points persist for the
+    * rounds only. */
+  private[graft] def gridLloydFit(pts: DataFrame): (DataFrame, DataFrame) = {
+    val s = pts.sparkSession
+    val Array(gf, idf, xf, _, _) = pts.schema.fields
+    val residual = xf.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    val points = lloydPoints(pts, residual).persist()
+    try {
+      val table = lloydRounds(points, residual)
+      val assign = s.createDataFrame(points.map { p =>
+          val (k, d2) = nearest(p.xq, table(p.group))
+          Row(p.group, p.id, k, d2)
+        }, StructType(Seq(gf, idf,
+          StructField("k", LongType, nullable = false), StructField("d2", LongType, nullable = false))))
+        .localCheckpoint()
+      val cents = table.toSeq.flatMap { case (g, c) =>
+        c.k.indices.map(j => Row(g, c.k(j), c.cv(j).toSeq, c.cq(j).toSeq))
+      }
+      (assign, s.createDataFrame(cents.asJava, StructType(Seq(
+        StructField(gf.name, gf.dataType, nullable = false),
+        StructField("k", LongType, nullable = false),
+        StructField("cv", ArrayType(DoubleType, containsNull = false), nullable = false),
+        StructField("cq", ArrayType(LongType, containsNull = false), nullable = false)))))
+    } finally { points.unpersist(blocking = false); () }
+  }
+
   /** Grid Lloyd over an arbitrary `(vec_id, v: array<double>)` frame,
     * all `kvals` in one pipeline. Returns (final assignment
     * (kval, vec_id, k, d2), final-round centroids (kval, k, cv, cq));
     * d2 is the grid-unit squared distance to the assigned centroid
     * (SSE numerator), cq the assignment-grid centroid used by IVF
     * probing. */
-  /** Per-row argmin over a broadcast centroid array: grid-unit integer
-    * d² per centroid, struct (d2, k) min — the same total order as the
-    * min(struct(d2, k)) exchange it replaces, evaluation-order-free. */
-  private def argminCents: org.apache.spark.sql.Column = expr(
-    """array_min(transform(cents, ce -> named_struct(
-      |  'd2', aggregate(zip_with(xq, ce.cq, (a, b) -> (a - b) * (a - b)),
-      |          0L, (s, e) -> s + e),
-      |  'k', ce.k)))""".stripMargin)
-
-  private[graft] def gridLloyd(base0: DataFrame, kvals: Seq[Int])
-      : (DataFrame, DataFrame) = {
-    val base = base0
+  private[graft] def gridLloyd(base: DataFrame, kvals: Seq[Int]): (DataFrame, DataFrame) =
+    gridLloydFit(base
       .withColumn("kval", explode(array(kvals.map(lit(_)): _*)))
-      .withColumn("xq", gridded("v"))
-      .localCheckpoint() // every round scans it; corpus-bounded
-    // r15 optimization (guide §2.3 "aggregate before you shuffle" +
-    // §2.4 "remove shuffles outright"): the assignment column rides the
-    // base frame through every round, so the ONLY per-round exchange is
-    // the centroid partial-aggregate (≤ Σkvals rows after map-side
-    // combine) — the corpus itself never shuffles. The old shape paid,
-    // per round, a base⋈assignment equi-join (two fact-sized
-    // exchanges), an n·k exploded argmin re-shuffle, and a fact-sized
-    // localCheckpoint; the argmin now folds over the broadcast centroid
-    // ARRAY per row (bit-identical integer d² and (d2, k) total order,
-    // so assignments — and the oracle hashes — are unchanged).
-    var g = base.select(col("kval"), col("vec_id"), col("v"), col("xq"),
-      pmod(col("vec_id"), col("kval")).as("k"))
-    var lastCents: DataFrame = null
-    for (i <- 1 to LloydRounds) {
-      // one checkpoint before the FINAL round only: the callers
-      // materialize assignment AND centroids separately, and without
-      // this the centroid plan re-executes every earlier round
-      if (i == LloydRounds) g = g.localCheckpoint()
-      // centroid phase: one native quant_vec_sum aggregate — long[d]
-      // buffer per (kval, k), map-side partial merge; bit-identical to
-      // the per-dim posexplode sum it replaces (same q() rounding,
-      // order-free long addition)
-      val cents = g.groupBy(col("kval"), col("k"))
-        .agg(graft.functions.VectorFunctions.quantVecSum(col("v")).as("sq"),
-          count(lit(1)).as("n"))
-        .select(col("kval"), col("k"),
-          expr("transform(sq, q -> q / (1e6 * n))").as("cv"))
-        .withColumn("cq", gridded("cv"))
-      lastCents = cents
-      val carr = cents.groupBy(col("kval"))
-        .agg(collect_list(struct(col("k"), col("cq"))).as("cents"))
-      g = base.join(broadcast(carr), Seq("kval"))
-        .withColumn("m", argminCents)
-        .select(col("kval"), col("vec_id"), col("v"), col("xq"),
-          col("m.k").as("k"), col("m.d2").as("d2"))
-    }
-    (g.select(col("kval"), col("vec_id"), col("k"), col("d2")), lastCents)
-  }
+      .select(col("kval"), col("vec_id"), col("v"), gridded("v"),
+        pmod(col("vec_id"), col("kval"))))
 
-  /** Final assignment (kval, vec_id, k, d2) over the embeddings table
-    * after [[LloydRounds]] synchronous rounds. Memoized per (session,
-    * dir, kvals) — the harmonyState contract: the checkpointed
-    * assignment is corpus-bounded and consumed by repeated bench runs
-    * and (for the same kvals) multiple queries. */
-  private val lloydCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long, Seq[Int]), DataFrame]()
-  graft.api.Memo.register(() => lloydCache.clear())
-
-  /** Memoized FULL grid-Lloyd training — (assignment, final centroids),
-    * both localCheckpointed — keyed by (dir, tag, kvals). The IVF/PQ
-    * index families consume this: in production the trained coarse
-    * quantizer is persisted index state, rebuilt only when the corpus
-    * changes, and every index query rides it. Before this, the warm
-    * bench column exposed that ann_ivf_* re-ran the whole training per
-    * query even with a hot memo (r9 finding: ann_ivf_sq_topk warm 5.37
-    * vs suite 5.74 — the "state" the memo held didn't include the
+  /** Memoized FULL grid-Lloyd training — (assignment, final centroids)
+    * — keyed by (dir, tag, kvals). The clustering queries and the
+    * IVF/PQ index families consume this: in production the trained
+    * coarse quantizer is persisted index state, rebuilt only when the
+    * corpus changes, and every index query rides it. Before this, the
+    * warm bench column exposed that ann_ivf_* re-ran the whole training
+    * per query even with a hot memo (r9 finding: ann_ivf_sq_topk warm
+    * 5.37 vs suite 5.74 — the "state" the memo held didn't include the
     * coarse quantizer). All raw-corpus consumers share tag "raw": the
     * training is deterministic in the input VALUES (the DuckDB-replay
     * contract), so identical (tag, kvals) content yields identical
@@ -292,8 +352,10 @@ object Reduce {
     * value-different frame under an existing tag would silently
     * receive the other frame's training state. Registered tags:
     *   "raw" — the full-precision embeddings corpus, projected
-    *           (vec_id, v) (Ann.annIvfTopk / ivfCellBalance /
-    *           ivfNprobeSweep, Quantize PQ/IVFPQ coarse steps)
+    *           (vec_id, v) (lloydClusters / lloydElbow /
+    *           lloydTransitions / lloydAri, Ann.annIvfTopk /
+    *           ivfCellBalance / ivfNprobeSweep, Quantize PQ/IVFPQ
+    *           coarse steps)
     *   "sq"  — the int8-dequantized corpus (Quantize.annIvfSqTopk
     *           via Ann.ivfTopkFrom; bit-exact dequantized values)
     * Introducing a new corpus variant REQUIRES a new tag — never reuse
@@ -304,18 +366,14 @@ object Reduce {
 
   private[graft] def gridLloydMemo(s: SparkSession, dir: String, tag: String,
       kvals: Seq[Int])(base: => DataFrame): (DataFrame, DataFrame) =
-    graft.api.Memo.stamped(lloydFullCache, s, dir, (tag, kvals)) {
-      val (a, c) = gridLloyd(base, kvals)
-      (a.localCheckpoint(), c.localCheckpoint())
-    }
+    graft.api.Memo.stamped(lloydFullCache, s, dir, (tag, kvals))(gridLloyd(base, kvals))
 
-  private def lloydState(s: SparkSession, dir: String, kvals: Seq[Int]): DataFrame =
-    graft.api.Memo.stamped(lloydCache, s, dir, kvals) {
-      gridLloyd(
-        Tables.embeddings(s, dir)
-          .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
-        kvals)._1.localCheckpoint()
-    }
+  /** Final assignment (kval, vec_id, k, d2) over the embeddings table
+    * after [[LloydRounds]] rounds, shared by the clustering queries. */
+  private[graft] def lloydState(s: SparkSession, dir: String, kvals: Seq[Int]): DataFrame =
+    gridLloydMemo(s, dir, "raw", kvals)(
+      Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))._1
 
   /** 30 (hash-checked): k=10 Lloyd assignment per vector. */
   def lloydClusters(s: SparkSession, dir: String): DataFrame =
@@ -403,53 +461,39 @@ object Reduce {
   private val BisectSplits = 7
 
   def bisectingGridClusters(s: SparkSession, dir: String): DataFrame = {
-    // r15 optimization (the gridLloyd rewrite, guide §2.3/§2.4): the
-    // cluster label rides the vector frame, so picking a split's
-    // members is a narrow filter (no base⋈members join per round) and
-    // each 2-means round's only exchange is the 2-row centroid
-    // partial-aggregate; the argmin folds over the broadcast 2-centroid
-    // array per row. The per-split checkpoint now carries (v, xq) —
-    // one corpus-sized materialization per split, in place of the two
-    // fact-sized join exchanges ×3 rounds the old shape paid. Integer
-    // d² and the (d2, b) total order are unchanged, so assignments and
-    // the oracle hash replay exactly.
-    val base = Tables.embeddings(s, dir)
+    // Each split runs the 2-means rounds of EVERY current cluster at
+    // once on the round primitive (groups train independently, and a
+    // point costs one 2-centroid argmin either way), so the pick's
+    // cluster sizes come from the final centroid counts with no extra
+    // job. A point's cluster is a pure function of its grid vector and
+    // the split history, so the corpus persists once for all splits.
+    val points = lloydPoints(Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .withColumn("xq", gridded("v"))
-      .localCheckpoint() // every split's rounds scan it
-    var c = base.select(col("vec_id"), col("v"), col("xq"), lit(1L).as("c"))
-    for (_ <- 1 to BisectSplits) {
-      val pick = c.groupBy(col("c")).agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("c").asc).limit(1)
-        .collect()(0).getLong(0)
-      val members = c.filter(col("c") === pick)
-        .select(col("vec_id"), col("v"), col("xq"))
-      var g = members.withColumn("b", pmod(col("vec_id"), lit(2)).cast("long"))
-      for (_ <- 1 to LloydRounds) {
-        // 2-row centroid table via one native quant_vec_sum pass
-        // (bit-identical to the posexplode per-dim sums it replaces)
-        val cents = g.groupBy(col("b"))
-          .agg(graft.functions.VectorFunctions.quantVecSum(col("v")).as("sq"),
-            count(lit(1)).as("n"))
-          .select(col("b"), expr("transform(sq, q -> q / (1e6 * n))").as("cv"))
-          .withColumn("cq", gridded("cv"))
-        val carr = cents.agg(collect_list(struct(col("b"), col("cq"))).as("cents"))
-        g = members.crossJoin(broadcast(carr))
-          .withColumn("m", expr(
-            """array_min(transform(cents, ce -> named_struct(
-              |  'd2', aggregate(zip_with(xq, ce.cq, (a, b) -> (a - b) * (a - b)),
-              |          0L, (s, e) -> s + e),
-              |  'b', ce.b)))""".stripMargin))
-          .select(col("vec_id"), col("v"), col("xq"), col("m.b").as("b"))
+      .select(lit(1L), col("vec_id"), col("v"), gridded("v"), pmod(col("vec_id"), lit(2L))),
+      residual = false).persist()
+    try {
+      var splits = Vector.empty[(Long, LloydCents)]
+      for (_ <- 1 to BisectSplits) {
+        val done = splits
+        val table = lloydRounds(points.map(p => p.copy(group = bisectLabel(done, p.xq))),
+          residual = false)
+        val pick = table.map { case (c, t) => (c.asInstanceOf[Long], t.n.sum) }
+          .maxBy { case (c, n) => (n, -c) }._1
+        splits :+= (pick -> table(pick))
       }
-      c = c.filter(col("c") =!= pick)
-        .unionAll(g.select(col("vec_id"), col("v"), col("xq"),
-          (lit(2L) * pick + col("b")).as("c")))
-        .localCheckpoint() // truncate the per-split lineage
-    }
-    c.join(Tables.embeddings(s, dir).select(col("vec_id"), col("label")), "vec_id")
-      .select(col("vec_id"), col("label"), col("c").as("cluster"))
+      val done = splits
+      val labels = s.createDataFrame(points.map(p => Row(p.id, bisectLabel(done, p.xq))),
+          StructType(Seq(StructField("vec_id", LongType), StructField("cluster", LongType))))
+        .localCheckpoint()
+      labels.join(Tables.embeddings(s, dir).select(col("vec_id"), col("label")), "vec_id")
+        .select(col("vec_id"), col("label"), col("cluster"))
+    } finally { points.unpersist(blocking = false); () }
   }
+
+  /** A point's cluster after `splits`: from the root 1, each split of
+    * its cluster p moves it to 2p + its nearest of p's final centroids. */
+  private def bisectLabel(splits: Seq[(Long, LloydCents)], xq: Array[Long]): Long =
+    splits.foldLeft(1L) { case (c, (p, t)) => if (c == p) 2 * p + nearest(xq, t)._1 else c }
 
   /** One bisecting split as CTEs: pick (1-row), member subset, 3 grid
     * 2-means rounds, relabel. */

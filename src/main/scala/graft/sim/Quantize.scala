@@ -133,61 +133,27 @@ object Quantize {
   private val PqK = 16
 
   /** PQ training state, memoized per (session, dir) — the lloydState
-    * contract: (base sub-vector grid table, final codes, final
-    * codebooks), each localCheckpointed; consumed by #230 and the
-    * IVF+PQ composition #258. */
+    * contract: (sub-vector grid table, final codes, final codebooks);
+    * consumed by #230 and the IVF+PQ composition #258. Codebooks train
+    * on the Reduce.gridLloydFit round primitive, one group per subspace. */
   private val pqCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, Long, Unit), (DataFrame, DataFrame, DataFrame)]()
   graft.api.Memo.register(() => pqCache.clear())
 
   private def pqState(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     graft.api.Memo.stamped(pqCache, s, dir, ()) {
-      val R = graft.ml.Reduce.LloydRounds
-      val base = graft.api.Analytics.spread(
-          Tables.embeddings(s, dir)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
+      val vecs = Tables.embeddings(s, dir)
+        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
+      def subVectors(df: DataFrame): DataFrame = df
         .withColumn("sub", explode(array((0 until PqSubs).map(lit(_)): _*)))
         .select(col("vec_id"), col("sub"),
           expr(s"slice(v, sub * $PqSubDim + 1, $PqSubDim)").as("sv"))
         .withColumn("xq", expr("transform(sv, x -> CAST(round(x * 1000, 0) AS BIGINT))"))
-        .localCheckpoint() // every round + the encode/query passes scan it
-      // r15 optimization (the gridLloyd rewrite, guide §2.3/§2.4): the
-      // code column rides the sub-vector frame, so each codebook round's
-      // only exchange is the (sub, k) partial-aggregate (≤ m·PqK rows
-      // after map-side combine); the corpus never re-shuffles and the
-      // n·m·PqK exploded argmin exchange is a per-row fold over the
-      // broadcast codebook array — bit-identical integer d² with the
-      // same (d2, k) total order, so codes and oracle hashes are
-      // unchanged.
-      var g = base.select(col("vec_id"), col("sub"), col("sv"), col("xq"),
-        pmod(col("vec_id"), lit(PqK.toLong)).as("k"))
-      var cents: DataFrame = null
-      for (i <- 1 to R) {
-        // one checkpoint before the FINAL round (the gridLloyd note):
-        // codes and codebooks materialize separately below
-        if (i == R) g = g.localCheckpoint()
-        // codebook phase: one native quant_vec_sum aggregate per
-        // (sub, k) — bit-identical to the posexplode per-dim sums it
-        // replaces, no n·m·subdim explode
-        cents = g.groupBy(col("sub"), col("k"))
-          .agg(graft.functions.VectorFunctions.quantVecSum(col("sv")).as("sq"),
-            count(lit(1)).as("n"))
-          .select(col("sub"), col("k"),
-            expr("transform(sq, q -> q / (1e6 * n))").as("cv"))
-          .withColumn("cq", expr("transform(cv, x -> CAST(round(x * 1000, 0) AS BIGINT))"))
-        val carr = cents.groupBy(col("sub"))
-          .agg(collect_list(struct(col("k"), col("cq"))).as("cents"))
-        g = base.join(broadcast(carr), Seq("sub"))
-          .withColumn("m", expr(
-            """array_min(transform(cents, ce -> named_struct(
-              |  'd2', aggregate(zip_with(xq, ce.cq, (a, b) -> (a - b) * (a - b)),
-              |          0L, (s, e) -> s + e),
-              |  'k', ce.k)))""".stripMargin))
-          .select(col("vec_id"), col("sub"), col("sv"), col("xq"),
-            col("m.k").as("k"))
-      }
-      (base, g.select(col("vec_id"), col("sub"), col("k")).localCheckpoint(),
-        cents.localCheckpoint())
+      val (codes, cents) = graft.ml.Reduce.gridLloydFit(
+        subVectors(graft.api.Analytics.spread(vecs))
+          .select(col("sub"), col("vec_id"), col("sv"), col("xq"),
+            pmod(col("vec_id"), lit(PqK.toLong))))
+      (subVectors(vecs), codes.select(col("vec_id"), col("sub"), col("k")), cents)
     }
 
   /** Per-query ADC distance tables (qid, sub, k, d2) over the final
@@ -293,7 +259,6 @@ object Quantize {
   private def residualState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
     graft.api.Memo.stamped(residualCache, s, dir, ()) {
-      val R = graft.ml.Reduce.LloydRounds
       val vecs = graft.api.Analytics.spread(
           Tables.embeddings(s, dir)
             .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
@@ -302,57 +267,22 @@ object Quantize {
       val (assign, icents) = graft.ml.Reduce.gridLloydMemo(s, dir, "raw",
         Seq(Ann.IvfCells))(vecs.select(col("vec_id"), col("v")))
       val cells = assign.select(col("vec_id"), col("k").as("cell"))
-        .localCheckpoint()
       val ccq = icents.select(col("k").as("cell"), col("cq").as("ccq"))
-      // residual sub-vectors on the integer grid: rxq = xq − ccq(cell)
-      val rbase = vecs.select(col("vec_id"), col("xq"))
+      // residual sub-vectors on the integer grid: rq = xq − ccq(cell),
+      // trained by the residual rule of the round primitive (exact long
+      // sums, one round(sq / n) per dim, (d2, k) argmin order)
+      val residuals = vecs.select(col("vec_id"), col("xq"))
         .join(cells, "vec_id")
         .join(broadcast(ccq), Seq("cell"))
         .withColumn("rxq", expr("zip_with(xq, ccq, (a, b) -> a - b)"))
         .withColumn("sub", explode(array((0 until PqSubs).map(lit(_)): _*)))
-        .select(col("vec_id"), col("cell"), col("sub"),
+        .select(col("sub"), col("vec_id"),
           expr(s"slice(rxq, sub * $PqSubDim + 1, $PqSubDim)").as("rq"))
-        .localCheckpoint() // every residual-Lloyd round + encode scans it
-      // residual grid-Lloyd: vec_id mod 16 init, integer centroids.
-      // r15 optimization (the gridLloyd/pqState rewrite, guide §2.3/
-      // §2.4): the code column rides the residual frame — each round's
-      // exchanges carry only centroid partials (the per-dim sums
-      // map-side-combine into ≤ m·PqK·subdim groups) and the argmin is
-      // a per-row fold over the broadcast codebook array. Bit-identical
-      // per-dim round(sq/n) centroids and (d2, k) argmin order, so
-      // codes and oracle hashes are unchanged.
-      var g = rbase.select(col("vec_id"), col("sub"), col("rq"),
-        pmod(col("vec_id"), lit(PqK.toLong)).as("k"))
-      var rcents: DataFrame = null
-      for (i <- 1 to R) {
-        // one checkpoint before the FINAL round (the gridLloyd note)
-        if (i == R) g = g.localCheckpoint()
-        // r16 (guide §2.3 "aggregate before you shuffle"): the residual
-        // centroid phase was the one Lloyd loop still paying a per-round
-        // n·m·subdim posexplode exchange + a (sub, k, dim) re-collect —
-        // the native long_vec_sum aggregate holds ONE long[subdim]
-        // buffer per (sub, k) per partition, so the exchange carries
-        // ≤ m·PqK array partials and the re-collect shuffle disappears.
-        // Bit-identical: exact long sums in any order, then the same
-        // round(sq / CAST(n AS DOUBLE)) per element as the per-dim form.
-        rcents = g.groupBy(col("sub"), col("k"))
-          .agg(graft.functions.VectorFunctions.longVecSum(col("rq")).as("sq"),
-            count(lit(1)).as("n"))
-          .select(col("sub"), col("k"),
-            expr("transform(sq, q -> CAST(round(q / CAST(n AS DOUBLE), 0) AS BIGINT))").as("rcq"))
-        val carr = rcents.groupBy(col("sub"))
-          .agg(collect_list(struct(col("k"), col("rcq"))).as("cents"))
-        g = rbase.join(broadcast(carr), Seq("sub"))
-          .withColumn("m", expr(
-            """array_min(transform(cents, ce -> named_struct(
-              |  'd2', aggregate(zip_with(rq, ce.rcq, (a, b) -> (a - b) * (a - b)),
-              |          0L, (s, e) -> s + e),
-              |  'k', ce.k)))""".stripMargin))
-          .select(col("vec_id"), col("sub"), col("rq"), col("m.k").as("k"))
-      }
-      (vecs, cells, icents,
-        g.select(col("vec_id"), col("sub"), col("k")).localCheckpoint(),
-        rcents.localCheckpoint())
+      val (codes, rcents) = graft.ml.Reduce.gridLloydFit(
+        residuals.select(col("sub"), col("vec_id"), col("rq"), col("rq"),
+          pmod(col("vec_id"), lit(PqK.toLong))))
+      (vecs, cells, icents, codes.select(col("vec_id"), col("sub"), col("k")),
+        rcents.withColumnRenamed("cq", "rcq"))
     }
 
   def annIvfPqResidualTopk(s: SparkSession, dir: String): DataFrame = {

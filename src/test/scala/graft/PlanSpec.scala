@@ -356,9 +356,8 @@ class PlanSpec extends SparkSpecBase {
       "mnn_pairs", "mnn_shift", "mnn_correct",
       // harmony assignment crosses each cell with the ≤32-row broadcast
       // centroid table — the label_silhouette "every point must see
-      // every centroid" shape, bounded by cluster count; the bisecting
-      // splits cross members with the 2-row split-centroid broadcast
-      "harmony_correct", "harmony_mixing", "bisecting_clusters",
+      // every centroid" shape, bounded by cluster count
+      "harmony_correct", "harmony_mixing",
       // matryoshka eval rides the documented brute-force scorer on both
       // rank cuts (the ann_recall_eval precedent)
       "ann_matryoshka_eval",
