@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** Per-round benchmark main: times the headline queries at
@@ -119,26 +118,8 @@ object Bench {
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576") // native TopK agg state is O(k) per group; the 128-key default would sort-fallback and re-sort every scored row
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: parquet footers, codegen JIT, broadcast machinery —
-    // otherwise the alphabetically-first query absorbs ~4s of one-time
-    // session cost and the per-query numbers lie.
-    Tables.names.foreach { t =>
-      try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    try SparkEntry.queries("q5_region_revenue")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = GraftSession()
+    GraftSession.warm(spark, sfDir)
     // min of N consecutive runs per query: single-run numbers on a
     // shared box swing ±50% with machine load; the minimum is the
     // reproducible steady-state cost that projects to cluster scale
@@ -149,10 +130,12 @@ object Bench {
     // local iteration aid: SPARK_GRAFT_BENCH_ONLY=q1,q2 times a subset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    // each query also reports whether its cold runs built memoized state
+    val suite = SparkEntry.queries.toSeq.sortBy(_._1)
       .filterNot(q => skip.contains(q._1))
       .filter(q => only.forall(_.contains(q._1)))
       .map { case (name, fn) =>
+        val builds0 = graft.api.Memo.builds
         val times = (1 to runs).map { _ =>
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -160,38 +143,9 @@ object Bench {
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: $e"); -1.0 }
           finally {
-            // drop per-build persists, EMPTY the memo caches (r6 ADVICE:
-            // every timed run is COLD — a query that consumes a shared
-            // Lloyd/Louvain/PQ/Harmony state pays its own state build;
-            // cache-hit times no longer leak into the committed map and
-            // the numbers are independent of query execution order), and
-            // release localCheckpoint blocks DIRECTLY: localCheckpoint
-            // registers its RDD in sc.persistentRdds, so a blocking
-            // unpersist sweep frees the blocks deterministically. The
-            // old System.gc() route (lean on the ContextCleaner's weak
-            // refs) was the r10 regression cluster: with
-            // -XX:+ExplicitGCInvokesConcurrent the "untimed" GC ran
-            // concurrently INSIDE the next timed run (dsir_weights_hashed
-            // isolated 1.38→3.03 s with zero code change); without the
-            // flag a 100 GB-heap STW full GC between every run dominated
-            // sf1 WALL time. Explicit unpersist has neither cost.
-            graft.api.Memo.reset()
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.values
-              .foreach(_.unpersist(blocking = true))
-            // ... and a SYNCHRONOUS full GC so every timed run starts
-            // from a compact old gen. r11 measured all three protocols
-            // on annotate_corr (solo JVM, sf1, min-of-3): no-GC 154 s,
-            // 16g heap 24.6 s, unpersist+System.gc() at 100g ≈ the r9
-            // 10.6 s class — without between-run GC, G1's old gen fills
-            // with promoted object-agg garbage and every later
-            // allocation-heavy query pays mixed-collection stalls
-            // (the r11 sweep's +13.5% "regression" cluster). The r10
-            // pathology was ONLY the -XX:+ExplicitGCInvokesConcurrent
-            // flag (run_bench.sh) making this call CONCURRENT so its
-            // work bled into the next timed window; the default STW
-            // System.gc() completes before t0.
-            System.gc()
+            // every timed run is cold: it pays its own state builds,
+            // and its number does not depend on query order
+            GraftSession.reset(spark)
           }
         }
         // a failed query must NOT flatter the total with its fail-fast
@@ -199,18 +153,20 @@ object Bench {
         val best = if (times.exists(_ < 0)) -1.0 else times.min
         // progress to stderr so a long (sf1-scale) run is monitorable
         System.err.println(f"[bench] $name%s ${best}%.2f s")
-        name -> best
+        (name -> best, graft.api.Memo.builds > builds0)
       }
+    val results = suite.map(_._1)
     // SPARK_GRAFT_BENCH_PROTOCOL=full (builder-side only) appends two
     // extra per-query fields to the FULL_OUT map (r7 verdict items 4+5;
     // the driver's stdout line stays scalar suite numbers):
     //  - isolated: min-of-5 consecutive cold runs for the known
     //    suite-load drift set — committed next to the suite number so
     //    verdicts stop re-measuring drift query by query;
-    //  - warm: for the memoized iteration families, one run consuming
-    //    an already-built state — the documented cluster pattern (the
-    //    caller persists Lloyd/Louvain/PQ/Harmony state and fans out);
-    //    cold stays the headline suite number.
+    //  - warm: for every query whose cold suite runs built memoized
+    //    state, one run consuming an already-built state — the
+    //    documented cluster pattern (the caller persists
+    //    Lloyd/Louvain/PQ/Harmony state and fans out); cold stays the
+    //    headline suite number.
     val extras: Map[String, Map[String, Double]] =
       if (!sys.env.get("SPARK_GRAFT_BENCH_PROTOCOL").contains("full")) Map.empty
       else {
@@ -221,19 +177,11 @@ object Bench {
             (System.nanoTime() - t0) / 1e9 }
           catch { case _: Throwable => -1.0 }
         }
-        def cold(name: String): Double = {
-          graft.api.Memo.reset(); spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = true))
-          System.gc() // same compact-old-gen start as the suite loop
-          timed(name)
-        }
+        def cold(name: String): Double = { GraftSession.reset(spark); timed(name) }
         // r10 verdict item 5: the isolated re-measure set is DATA-DRIVEN,
         // not a hand-kept list — SPARK_GRAFT_BENCH_PREV names the previous
         // round's committed full map; any query whose suite number moved
         // >50% in either direction gets an isolated min-of-5 re-measure.
-        // Without PREV (first round / local iteration) fall back to the
-        // r9 hand list so the field never silently disappears.
         // r14 verdict item 4: drift auto-isolation must be STANDING, not
         // env-wired — r14's four no-iso offenders happened because PREV
         // pointed at the driver wrapper (different suite environment) for
@@ -252,40 +200,26 @@ object Bench {
         if (sys.env.contains("SPARK_GRAFT_BENCH_PREV")) {
           System.err.println(s"[bench] PREV map parsed: ${prevMap.size} queries")
           // r12 ADVICE: an explicitly-set PREV that parses to zero
-          // queries means a format the widened regex still misses —
-          // the silent hand-list fallback is the exact failure this
-          // machinery exists to prevent (it burned the r12 sf1 sweep).
-          // Fail hard so the sweep is rerun with a fixed parser instead
-          // of committing a map with a degraded drift set.
+          // queries means a format the widened regex still misses, and
+          // would silently empty the drift set (it burned the r12 sf1
+          // sweep). Fail hard so the sweep is rerun with a fixed parser
+          // instead of committing a map with a degraded drift set.
           require(prevMap.nonEmpty,
             s"SPARK_GRAFT_BENCH_PREV set (${sys.env("SPARK_GRAFT_BENCH_PREV")}) " +
               "but zero queries parsed — fix the PREV parser or unset PREV")
         }
-        val driftSet: Seq[String] =
-          if (prevMap.nonEmpty)
-            results.collect { case (n, t)
-              if t > 0 && prevMap.get(n).exists(p =>
-                p > 0 && (t / p > 1.5 || p / t > 1.5)) => n }
-          else Seq("annotate_corr", "dsir_weights_hashed",
-            "winnow_dup_pairs", "fuzzy_blocked_join", "dedup_cluster_sizes",
-            "classifier_eval", "golden_record", "acf_daily")
-        val memoSet = Seq("kmeans_clusters", "kmeans_elbow",
-          "cluster_transitions", "mahalanobis_outliers", "louvain_knn",
-          "louvain_knn_lsh", "leiden_refine", "modularity_score",
-          "harmony_correct", "harmony_mixing", "ann_pq_topk",
-          "ann_ivf_topk", "ann_ivf_sq_topk", "ann_ivfpq_topk",
-          "ann_ivfpq_residual_topk", "bpe_train_deep", "bpe_vocab_inventory")
-        val present = (n: String) =>
-          SparkEntry.queries.contains(n) && !skip.contains(n) &&
-            only.forall(_.contains(n))
-        val iso = driftSet.filter(present).map { n =>
+        val driftSet = results.collect { case (n, t)
+          if t > 0 && prevMap.get(n).exists(p =>
+            p > 0 && (t / p > 1.5 || p / t > 1.5)) => n }
+        val memoSet = suite.collect { case ((n, _), true) => n }
+        val iso = driftSet.map { n =>
           n -> Map("isolated" -> (1 to 5).map(_ => cold(n)).min)
         }
-        val warm = memoSet.filter(present).map { n =>
+        val warm = memoSet.map { n =>
           cold(n) // untimed state build; next run rides the memo
           n -> Map("warm" -> timed(n))
         }
-        graft.api.Memo.reset(); spark.catalog.clearCache()
+        GraftSession.reset(spark)
         (iso ++ warm).groupBy(_._1)
           .map { case (n, vs) => n -> vs.map(_._2).reduce(_ ++ _) }
       }

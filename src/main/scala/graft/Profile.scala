@@ -1,62 +1,65 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.GraftGlue
+import scala.collection.mutable
 
-/** Measurement aid (guide §1): decomposes a registered query's cold
-  * wall time into DataFrame build, analysis+optimization+physical
-  * planning, and execution, and counts jobs/stages/tasks plus shuffle
-  * bytes. `runMain graft.Profile q1,q2,...` — same session config as
-  * Bench so the numbers are comparable.
+/** Measurement aid that needs no Spark UI. For each named query
+  * it prints one row that splits the cold wall time into DataFrame
+  * build, analysis+optimization+physical planning and execution, with
+  * the query's jobs, stages, tasks and shuffle MB. Under the row come
+  * its costliest stages (wall and CPU ms, tasks, shuffle MB) and the
+  * driver's gaps between jobs: the local-mode stand-in for the Stages
+  * tab. All of it is from the fastest of SPARK_GRAFT_BENCH_RUNS
+  * (default 2) cold samples, on the same session as Bench.
+  *
+  *   runMain graft.Profile q1,q2,...|all
+  *
+  * SPARK_GRAFT_PROFILE_SQL=true also prints the per-operator SQL
+  * metrics of each query's last execution (the SQL tab's stand-in).
   */
 object Profile {
+  private final case class Stage(id: Int, name: String, wallMs: Long, cpuMs: Long,
+      tasks: Int, shufR: Long, shufW: Long)
+
+  /** Stages and jobs (id → start and end event time, ms) since the last
+    * clear. A stage's metrics are the sums over its tasks. */
+  private final class Recorder extends SparkListener {
+    private val stages = mutable.ArrayBuffer[Stage]()
+    private val jobs = mutable.LinkedHashMap[Int, (Long, Long)]()
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      synchronized { jobs(e.jobId) = (e.time, 0L) }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      synchronized { jobs.get(e.jobId).foreach(t => jobs(e.jobId) = (t._1, e.time)) }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+      val i = e.stageInfo
+      val m = i.taskMetrics
+      stages += Stage(i.stageId, i.name.split("\n")(0),
+        i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L),
+        m.executorCpuTime / 1000000, i.numTasks,
+        m.shuffleReadMetrics.totalBytesRead, m.shuffleWriteMetrics.bytesWritten)
+    }
+    def clear(): Unit = synchronized { stages.clear(); jobs.clear() }
+    def snapshot(): (Seq[Stage], Seq[(Long, Long)]) =
+      synchronized { (stages.toSeq, jobs.toSeq.sortBy(_._1).map(_._2)) }
+  }
+
   def main(args: Array[String]): Unit = {
     val names: Seq[String] =
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(0).split(",").map(_.trim).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val jobs = new AtomicInteger(0); val stages = new AtomicInteger(0)
-    val tasks = new AtomicInteger(0)
-    val shufRead = new AtomicLong(0L); val shufWrite = new AtomicLong(0L)
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = stages.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = t.taskMetrics
-        if (m != null) {
-          shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
-    // same untimed warmup as Bench
-    Tables.names.foreach { t =>
-      try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => () }
-    }
-    try SparkEntry.queries("q5_region_revenue")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = GraftSession()
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
+    GraftSession.warm(spark, sfDir)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     println(f"${"query"}%-32s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"shufMB"}%7s")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val samples = (1 to runs).map { _ =>
-        graft.api.Memo.reset(); spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-        System.gc()
-        jobs.set(0); stages.set(0); tasks.set(0); shufRead.set(0); shufWrite.set(0)
+        GraftSession.reset(spark)
+        GraftGlue.drainListenerBus(spark)
+        rec.clear()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -65,12 +68,33 @@ object Profile {
         val t2 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val t3 = System.nanoTime()
-        (( t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9, (t3 - t0) / 1e9,
-          jobs.get, stages.get, tasks.get,
-          (shufRead.get + shufWrite.get) / 1e6)
+        GraftGlue.drainListenerBus(spark)
+        (Seq(t1 - t0, t2 - t1, t3 - t2, t3 - t0).map(_ / 1e9), rec.snapshot())
       }
-      val s = samples.minBy(_._4)
-      println(f"$name%-32s ${s._1}%7.2f ${s._2}%7.2f ${s._3}%7.2f ${s._4}%7.2f ${s._5}%5d ${s._6}%5d ${s._7}%6d ${s._8}%7.1f")
+      val (secs, (stages, jobs)) = samples.minBy(_._1(3))
+      val shufMb = stages.map(s => s.shufR + s.shufW).sum / 1e6
+      println(f"$name%-32s ${secs(0)}%7.2f ${secs(1)}%7.2f ${secs(2)}%7.2f ${secs(3)}%7.2f ${jobs.size}%5d ${stages.size}%5d ${stages.map(_.tasks).sum}%6d $shufMb%7.1f")
+      println(f"  ${"stageId"}%7s ${"ms"}%7s ${"cpuMs"}%8s ${"tasks"}%5s ${"shufR_MB"}%9s ${"shufW_MB"}%9s  name")
+      stages.sortBy(-_.wallMs).take(10).foreach { s =>
+        println(f"  ${s.id}%7d ${s.wallMs}%7d ${s.cpuMs}%8d ${s.tasks}%5d ${s.shufR / 1e6}%9.1f ${s.shufW / 1e6}%9.1f  ${s.name.take(90)}")
+      }
+      val gaps = jobs.sliding(2).collect {
+        case Seq((_, e1), (s2, _)) if e1 > 0 && s2 > e1 => s2 - e1
+      }.toSeq
+      println(s"  interJobGapMs total=${gaps.sum} max=${gaps.maxOption.getOrElse(0L)}")
+      if (sys.env.get("SPARK_GRAFT_PROFILE_SQL").contains("true")) {
+        val store = spark.sharedState.statusStore
+        store.executionsList().lastOption.foreach { ex =>
+          val vals = store.executionMetrics(ex.executionId)
+          println(s"  -- SQL execution ${ex.executionId} operators:")
+          store.planGraph(ex.executionId).allNodes.foreach { n =>
+            val ms = n.metrics.flatMap(m => vals.get(m.accumulatorId)
+              .map(v => s"${m.name}=${v.replace("\n", " ")}"))
+            if (ms.nonEmpty)
+              println(s"     [${n.id}] ${n.name}: ${ms.mkString(", ")}")
+          }
+        }
+      }
     }
     spark.stop()
   }

@@ -31,6 +31,12 @@ object Memo {
   /** Empty every registered memo cache. */
   def reset(): Unit = clearers.forEach(f => f())
 
+  private val buildCount = new java.util.concurrent.atomic.AtomicLong()
+
+  /** State builds [[stamped]] has run in this JVM: a query whose cold
+    * run raises it builds memoized state (Bench's warm set). */
+  def builds: Long = buildCount.get
+
   /** Fingerprint of a data directory: name, length and mtime of every
     * file under it (one driver-side listing — bounded by file count,
     * no data read). Regenerated inputs change the stamp, so (dir,
@@ -63,6 +69,6 @@ object Memo {
     val key = (s, dir, stamp, extra)
     if (!cache.containsKey(key))
       cache.keySet().removeIf(k => (k._1 eq s) && k._2 == dir && k._3 != stamp)
-    cache.computeIfAbsent(key, _ => build)
+    cache.computeIfAbsent(key, _ => { buildCount.incrementAndGet(); build })
   }
 }

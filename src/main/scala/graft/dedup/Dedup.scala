@@ -202,7 +202,7 @@ object Dedup {
     // r16 (second pass): floor the rendezvous checkpoint's parallelism.
     // AQE coalesces the byte-small (~1.5 MB at sf0.1) groupBy output to
     // ONE partition, which made every downstream shingle explode +
-    // normalize pass single-threaded (StageProfile: two 1-task
+    // normalize pass single-threaded (Profile stage table: two 1-task
     // 2-2.6 s stages). But an UNCONDITIONAL repartition to the full
     // shuffle parallelism measured ~25% SLOWER at sf3, where the
     // checkpoint arrives 16-way already (local-mode hash-stage
@@ -273,8 +273,9 @@ object Dedup {
     // slower than partitioned hash build at sf0.1); equi-partitioning
     // on gid keeps per-partition builds small and cache-resident.
     // r16 (second pass; guide §2.4 "remove shuffles outright", measured
-    // with StageProfile + a microbench): the old `.distinct()` BEFORE
-    // verification was the query's single hottest operator — the
+    // with the Profile stage table + a microbench): the old
+    // `.distinct()` BEFORE verification was the query's single hottest
+    // operator — the
     // candidate stream emits each pair once per shared prefix token
     // (~2.75× dup factor), and deduping 8.2M (long, long) rows through
     // a full exchange + two hash-agg passes measured 3-5 s on local[32]

@@ -334,8 +334,6 @@ object DotProduct {
 /** Column-level helpers wrapping the native expressions. */
 object VectorFunctions {
   private def toExpr(c: Column): Expression = GraftGlue.expression(c)
-  def minhashSig(c: Column, numHashes: Int = 64): Column =
-    GraftGlue.column(MinHashSig(toExpr(c), numHashes))
   def ophMinhashSig(c: Column): Column =
     GraftGlue.column(OnePermMinHashSig(toExpr(c)))
   def simhash64(c: Column): Column = GraftGlue.column(SimHash64(toExpr(c)))

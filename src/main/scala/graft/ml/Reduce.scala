@@ -9,61 +9,15 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Dimensionality reduction + clustering on the embedding corpus via
-  * MLlib (SURVEY.md §2.2 #29/#30; reference wrapper.R:259-348 — denoised
-  * PCA and graph/kmeans clustering re-expressed as distributed MLlib
-  * estimators). Rows-only driver check (eigenvector sign and exact
-  * cluster ids are not portable across linalg backends); semantics are
-  * asserted in ScalaTest against structural invariants instead.
+/** Dimensionality reduction + clustering on the embedding corpus
+  * (SURVEY.md §2.2 #29/#30; reference wrapper.R:259-348 — denoised PCA,
+  * k-means and hierarchical clustering, plus the tradeseq.R:6-40
+  * evaluate-k sweep and the wrapper.R:350-360 clustree). Each is an
+  * integer-grid replay: fixed iterations over quantized coordinates
+  * with exact-integer tie-breaks, so the DuckDB oracle recomputes the
+  * identical result and the driver hash-checks it.
   */
 object Reduce {
-
-  /** 29. PCA to 8 components over the 64-d embeddings — the MLlib
-    * estimator path, kept as the spec'd alternate; the registry entry
-    * is [[pcaGridEmbeddings]] (hash-checked replay below). */
-  def pcaEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.feature.PCA
-    import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-    val vecs = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        array_to_vector(col("embedding").cast("array<double>")).as("fv"))
-    val model = new PCA().setK(8).setInputCol("fv").setOutputCol("pc").fit(vecs)
-    // scalar columns only: the driver's pandas compare sorts every output
-    // column, and a list-typed cell is unhashable there (r1 failure)
-    model.transform(vecs)
-      .withColumn("pcs", vector_to_array(col("pc")))
-      .select(col("vec_id") +: (1 to 8).map(i =>
-        round(element_at(col("pcs"), i), 4).as(s"pc$i")): _*)
-  }
-
-  /** 30. KMeans clustering (k=10, seeded) over the embeddings — the
-    * MLlib estimator path, kept as the spec'd alternate; the registry
-    * entry is [[lloydClusters]] (hash-checked grid replay below). */
-  def kmeansClusters(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val vecs = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        array_to_vector(col("embedding").cast("array<double>")).as("fv"))
-    val model = new KMeans().setK(10).setSeed(42L).setFeaturesCol("fv").fit(vecs)
-    model.transform(vecs)
-      .select(col("vec_id"), col("label"), col("prediction").as("cluster"))
-  }
-
-  /** Hierarchical-clustering analog (wrapper.R:267-348 hclust path):
-    * MLlib BisectingKMeans — divisive hierarchy, seeded. Kept as the
-    * spec'd alternate; the registry entry is [[bisectingGridClusters]]
-    * (hash-checked grid replay below). */
-  def bisectingClusters(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.BisectingKMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val vecs = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"),
-        array_to_vector(col("embedding").cast("array<double>")).as("fv"))
-    val model = new BisectingKMeans().setK(8).setSeed(42L).setFeaturesCol("fv").fit(vecs)
-    model.transform(vecs)
-      .select(col("vec_id"), col("label"), col("prediction").as("cluster"))
-  }
 
   /** 115. label-centroid (simplified) silhouette — embedding-space
     * health per label: a(i) = distance to the OWN label centroid,
@@ -121,73 +75,11 @@ object Reduce {
               round(avg(b), 6) AS mean_nearest_other
        FROM per GROUP BY 1"""
 
-  /** 131. evaluate-k sweep (tradeseq.R:6-40 run_evaluatek_ntimes: pick
-    * the knot count by repeated fits across a k range — re-expressed as
-    * the clustering elbow): KMeans training cost (within-cluster SSE)
-    * for k = 2..8, repeated `n` times with distinct seeds (the
-    * reference's seed_val = 290 base), reporting mean/min cost per k.
-    * MLlib estimator path, kept as the spec'd alternate; the registry
-    * entry is [[lloydElbow]] (hash-checked grid replay below). */
-  def kmeansElbow(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val vecs = Tables.embeddings(s, dir)
-      .select(array_to_vector(col("embedding").cast("array<double>")).as("fv"))
-    vecs.persist()
-    try {
-      val rows = for (k <- 2 to 8) yield {
-        val costs = for (rep <- 0 until 2) yield {
-          val m = new KMeans().setK(k).setSeed(290L + rep).setFeaturesCol("fv").fit(vecs)
-          m.summary.trainingCost
-        }
-        (k, costs.min, costs.sum / costs.size)
-      }
-      import s.implicits._
-      rows.toDF("k", "min_cost", "mean_cost")
-        .select(col("k"), round(col("min_cost"), 4).as("min_cost"),
-          round(col("mean_cost"), 4).as("mean_cost"))
-    } finally { vecs.unpersist(); () }
-  }
-
-  /** 163. clustree analog (wrapper.R:350-360 plot_classific_tree /
-    * clustree: how clusters split as resolution increases): seeded
-    * KMeans assignments at successive k = 2..6, then the k→k+1
-    * contingency — overlap counts between clusterings at adjacent
-    * resolutions, i.e. the edge weights of the clustering tree the plot
-    * draws. Each fit is a distributed MLlib estimator over the
-    * persisted corpus; each transition is one vec_id equi-join +
-    * bounded (k × k+1)-key aggregation. MLlib estimator path, kept as
-    * the spec'd alternate; the registry entry is [[lloydTransitions]]
-    * (hash-checked grid replay below). */
-  def clusterTransitions(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val vecs = Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        array_to_vector(col("embedding").cast("array<double>")).as("fv"))
-    vecs.persist()
-    try {
-      val assigned = (2 to 6).map { k =>
-        val m = new KMeans().setK(k).setSeed(290L).setFeaturesCol("fv").fit(vecs)
-        k -> m.transform(vecs).select(col("vec_id"), col("prediction"))
-      }
-      assigned.sliding(2).collect { case Seq((k1, a), (k2, b)) =>
-        a.select(col("vec_id"), col("prediction").as("cluster_from"))
-          .join(b.select(col("vec_id"), col("prediction").as("cluster_to")), "vec_id")
-          .groupBy(col("cluster_from"), col("cluster_to"))
-          .agg(count(lit(1)).as("n_cells"))
-          .select(lit(k1).as("k_from"), col("cluster_from"),
-            lit(k2).as("k_to"), col("cluster_to"), col("n_cells"))
-      }.reduce(_ unionByName _)
-    } finally { vecs.unpersist(); () }
-  }
-
   // ---------------------------------------------------------------
   // 30/131 hash-checked replay: fixed-iteration Lloyd on the integer
-  // grid — the harmony_correct determinism template applied to KMeans
-  // so both clustering queries graduate from rows-only to DuckDB
-  // hash-checked (the MLlib estimators above remain the spec'd
-  // alternates; their seeded fits aren't SQL-replayable).
+  // grid — the harmony_correct determinism template applied to KMeans,
+  // so the clustering queries are DuckDB hash-checked (a seeded
+  // floating-point fit would not be SQL-replayable).
   //  - init: random-partition (cluster = vec_id mod k) — the classic
   //    Forgy-alternative, deterministic and SQL-trivial;
   //  - centroids accumulate integer-quantized coordinates
@@ -381,8 +273,9 @@ object Reduce {
       .join(Tables.embeddings(s, dir).select(col("vec_id"), col("label")), "vec_id")
       .select(col("vec_id"), col("label"), col("k").cast("long").as("cluster"))
 
-  /** 131 (hash-checked): the elbow sweep — grid-exact SSE for k=2..8,
-    * all seven runs in one pipeline. */
+  /** 131 (hash-checked): the evaluate-k sweep as a clustering elbow —
+    * grid-exact within-cluster SSE for k=2..8, all seven runs in one
+    * pipeline. */
   def lloydElbow(s: SparkSession, dir: String): DataFrame =
     lloydState(s, dir, 2 to 8)
       .groupBy(col("kval").cast("long").as("k"))
@@ -456,8 +349,7 @@ object Reduce {
   // relabel c → 2c/2c+1 (binary path labels, root=1). The pick is a
   // bounded driver scalar (≤8-row size table — the pageRank
   // vertex-count precedent); the SQL oracle computes the identical
-  // pick as a 1-row CTE. MLlib BisectingKMeans stays the spec'd
-  // alternate.
+  // pick as a 1-row CTE.
   private val BisectSplits = 7
 
   def bisectingGridClusters(s: SparkSession, dir: String): DataFrame = {
@@ -562,7 +454,6 @@ object Reduce {
   //     to largest-|loading| positive (first index on ties), and the
   //     corpus projects through the broadcast 64×8 Q — one narrow
   //     distributed pass.
-  // MLlib PCA stays the spec'd alternate.
   private val PcaK = 8
   private val PcaIters = 12
 
@@ -733,8 +624,9 @@ object Reduce {
 
   /** 163 (hash-checked): the clustree transition table over the grid
     * Lloyd assignments at k=2..6 — one shared pipeline (kval column),
-    * one vec_id self-join per adjacent resolution pair. The MLlib
-    * estimator version above stays the spec'd alternate. */
+    * one vec_id self-join per adjacent resolution pair: the overlap
+    * counts between clusterings at adjacent k, i.e. the edge weights
+    * of the clustering tree. */
   def lloydTransitions(s: SparkSession, dir: String): DataFrame = {
     val g = lloydState(s, dir, 2 to 6)
     val a = g.select(col("kval").as("k_from"), col("vec_id"),

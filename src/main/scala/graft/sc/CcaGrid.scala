@@ -4,14 +4,13 @@ import graft.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** #214 cca_project GRADUATED rows-only → hash-checked: the breeze
-  * LAPACK chain (Cholesky → SVD → triangular solve) re-derived as
+/** #214 cca_project, hash-checked: the Cholesky → SVD → triangular
+  * solve chain of the CCA derivation in Integrate.scala, run as
   * deterministic driver-side algebra on the integer-quantized Grams,
   * with every loop a STRICTLY ascending-index left fold seeded at 0.0 —
-  * the pca_embeddings program applied to the last linalg holdout.
+  * the pca_embeddings program applied to CCA.
   *
-  * Pipeline (mirrors Integrate.ccaProject's semantics — reference
-  * /root/reference/R/integrate.R:126-152 CCAIntegration):
+  * Pipeline (reference integrate.R:126-152 CCAIntegration):
   *  1. per-(batch,dim) standardization stats from integer-quantized
   *     sums of x and x² (order-free, bit-identical across engines);
   *  2. per-batch d×d Grams of the standardized z from quantized
@@ -32,9 +31,9 @@ import org.apache.spark.sql.functions._
   * corpus touched exactly twice). The oracle unrolls at d=64 (the
   * embeddings schema); the Scala side is d-generic.
   *
-  * The breeze implementation stays as Integrate.ccaProject, pinned by
-  * IntegrateSpec's SVD-algebra test; this replay must satisfy the same
-  * algebra (looser tolerance — 12 subspace rounds, not exact LAPACK).
+  * IntegrateSpec pins the SVD algebra the result must satisfy: per-batch
+  * orthonormal loadings and a diagonal, decreasing UᵀMV (at a tolerance
+  * that allows for 12 subspace rounds).
   */
 object CcaGrid {
 

@@ -519,79 +519,15 @@ object Integrate {
   //   X₀X₁ᵀ = Q₀ (R₀R₁ᵀ) Q₁ᵀ — SVD of the 64×64 core on the driver
   //   (the |clusters|²-bounded driver-geometry precedent), then each
   //   cell projects through a broadcast d×5 matrix: U = X₀·W₀.
-  // Driver-side SVD/Cholesky (breeze/LAPACK) has no DuckDB replay —
-  // this breeze version stays as the spec'd alternate (IntegrateSpec
-  // pins the algebra: orthonormal per-batch loadings, decreasing
-  // singular values, U_kᵀ(X₀X₁ᵀ)V_k = s_k recomputed distributively).
-  // The REGISTERED cca_project query is CcaGrid.ccaGridProject: the
-  // same pipeline re-derived as deterministic ascending-fold algebra
-  // on quantized Grams, hash-checked against a full DuckDB replay.
-  private val CcaK = 5
-
-  def ccaProject(s: SparkSession, dir: String): DataFrame = {
-    import breeze.linalg.{cholesky, inv, svd, DenseMatrix => BDM}
-    val vecs = batched(s, dir)
-    // standardize per (batch, dim) — Seurat's Std.Dev-scaled input
-    val stats = vecs
-      .select(col("batch"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("batch"), col("dim"))
-      .agg(avg(col("x")).as("mu"), stddev_pop(col("x")).as("sd"))
-      .groupBy(col("batch"))
-      .agg(expr("transform(sort_array(collect_list(struct(dim, mu))), s -> s.mu)").as("mus"),
-        expr("transform(sort_array(collect_list(struct(dim, sd))), s -> s.sd)").as("sds"))
-    val std = vecs.join(broadcast(stats), "batch")
-      .withColumn("z", expr(
-        "zip_with(v, zip_with(mus, sds, (m, s) -> named_struct('m', m, 's', s)), " +
-          "(x, p) -> IF(p.s = 0D, 0D, (x - p.m) / p.s))"))
-      .select(col("vec_id"), col("batch"), col("z"))
-      .localCheckpoint() // grams + projection both scan it; bounded by the corpus itself
-    // d×d Gram per batch: one exploded outer-product aggregation
-    def gram(b: Int): BDM[Double] = {
-      val rows = std.filter(col("batch") === b)
-        .select(posexplode(expr(
-          """flatten(transform(sequence(0, size(z) - 1), i ->
-            |  transform(sequence(0, size(z) - 1), j ->
-            |    named_struct('k', i * size(z) + j, 'p', z[i] * z[j]))))""".stripMargin))
-          .as(Seq("ord", "e")))
-        .groupBy(col("e.k").cast("long").as("k")).agg(sum(col("e.p")).as("g"))
-        .collect()
-      val d = math.sqrt(rows.length).round.toInt
-      val m = BDM.zeros[Double](d, d)
-      rows.foreach(r => m(r.getLong(0).toInt / d, r.getLong(0).toInt % d) = r.getDouble(1))
-      m
-    }
-    val (g0, g1) = (gram(0), gram(1))
-    val d = g0.rows
-    val eye = BDM.eye[Double](d) * 1e-9
-    val l0 = cholesky(g0 + eye) // G = L Lᵀ, so R = Lᵀ and Q = X R⁻¹
-    val l1 = cholesky(g1 + eye)
-    val svd.SVD(u, _, vt) = svd(l0.t * l1) // R₀R₁ᵀ = L₀ᵀ (L₁ᵀ)ᵀ = L₀ᵀL₁
-    // sign convention: flip each component so its largest-|.| loading
-    // (lowest index on ties) is positive — LAPACK's sign is arbitrary
-    val w0 = inv(l0.t) * u
-    val w1 = inv(l1.t) * vt.t
-    (0 until CcaK).foreach { k =>
-      val c = w0(::, k)
-      val iMax = (0 until d).maxBy(i => (math.abs(c(i)), -i))
-      if (c(iMax) < 0) { w0(::, k) :*= -1.0; w1(::, k) :*= -1.0 }
-    }
-    def lits(m: BDM[Double]): Column = array((0 until CcaK).map(k =>
-      array((0 until d).map(i => lit(m(i, k))): _*)): _*)
-    val wCol = when(col("batch") === 0, lits(w0)).otherwise(lits(w1))
-    std.withColumn("w", wCol)
-      .select(col("vec_id"), col("batch").cast("long").as("batch"),
-        posexplode(expr(
-          "transform(w, wk -> aggregate(zip_with(z, wk, (a, b) -> a * b), 0D, (acc, e) -> acc + e))"))
-          .as(Seq("cc", "value")))
-      .select(col("vec_id"), col("batch"), (col("cc") + 1).cast("long").as("cc"),
-        r(col("value"), 6).as("cc_value"))
-  }
+  // The registered cca_project query is CcaGrid.ccaGridProject, which
+  // runs this pipeline as deterministic ascending-fold algebra on
+  // quantized Grams, hash-checked against a full DuckDB replay.
 
   // ---------------------------------------------------------------
   // cca_grams — the hash-checked distributed 90% of #214: the per-batch
   // d×d Gram matrices of the standardized embeddings (the ONLY
-  // cluster-side aggregation ccaProject runs; everything after is a
-  // 64×64 driver-side SVD with no SQL replay). Entries accumulate
+  // cluster-side aggregation cca_project runs; everything after is
+  // 64×64 driver-side algebra). Entries accumulate
   // integer-quantized products (round(zᵢ·zⱼ·1e6) as BIGINT — the
   // mnn_shift trick), so the sum is order-independent and the DuckDB
   // replay is exact. Scale: one flatten-posexplode pass over the
@@ -712,7 +648,7 @@ object Integrate {
     "mnn_correct"     -> (mnnCorrect _),
     "harmony_correct" -> (harmonyCorrect _),
     "harmony_mixing"  -> (harmonyMixing _),
-    "cca_project"     -> (CcaGrid.ccaGridProject _), // hash-checked grid replay; breeze ccaProject stays the spec'd alternate
+    "cca_project"     -> (CcaGrid.ccaGridProject _),
     "cca_grams"       -> (ccaGrams _),
     "bitext_margin_mining" -> (bitextMarginMining _),
     "bitext_margin_mining_lsh" -> (bitextMarginMiningLsh _))

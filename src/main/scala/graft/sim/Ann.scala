@@ -44,11 +44,6 @@ object Ann {
 
   private def cosCol: Column = dot(col("qv"), col("v")) / (col("qn") * col("nrm"))
 
-  /** Query subset: every 50th vector — the "needles" side. */
-  private[sim] def queriesSide(vecs: DataFrame): DataFrame =
-    vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-
   // per-query top-k via the native bounded-heap aggregate: candidates
   // fold into map-side k-heaps, the exchange carries O(queries·k) rows
   private[sim] def topk(scored: DataFrame, k: Int): DataFrame =

@@ -18,4 +18,10 @@ object GraftGlue {
       builder: Seq[Expression] => Expression): Unit =
     classic.ClassicConversions.castToImpl(spark).sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
+
+  /** Block until every listener event posted so far has been delivered:
+    * listeners see events asynchronously, so counters read or reset
+    * right after an action can miss its last events. */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
 }

@@ -169,14 +169,6 @@ class AnnotateScoresSpec extends SparkSpecBase {
     assert(cr.forall(r => math.abs(r - 0.2) < 1e-12), s"cycle must stay uniform: ${cr.toSeq}")
   }
 
-  test("kmeansElbow cost curve decreases from k=2 to k=8") {
-    val out = ml.Reduce.kmeansElbow(spark, sf)
-      .collect().map(r => r.getInt(0) -> r.getDouble(2)).toMap
-    assert(out.keySet === (2 to 8).toSet)
-    assert(out(8) < out(2), "more clusters must not cost more SSE at the endpoints")
-    assert(out.values.forall(_ >= 0.0))
-  }
-
   test("split conformal: binned qhat brackets the exact order statistic and covers") {
     import org.apache.spark.sql.functions._
     val out = core.Scores.conformalIntervals(spark, sf).collect()

@@ -119,12 +119,14 @@ class IntegrateSpec extends SparkSpecBase {
     assert(recall >= 0.2, s"LSH bitext recall $recall below floor")
   }
 
-  /** Shared SVD-algebra check for both CCA implementations: U/V
-    * column-orthonormality and UᵀMV diagonal-decreasing-positive, at an
-    * implementation-appropriate tolerance (breeze = exact LAPACK;
-    * the grid replay = 12 subspace rounds, so looser). */
-  private def ccaAlgebraCheck(proj: Map[(Long, Long), Array[Double]],
-                              tolOrtho: Double, tolOff: Double): Unit = {
+  test("grid cca_project (the registered hash-checked query) satisfies the SVD algebra") {
+    // U/V column-orthonormality and UᵀMV diagonal-decreasing-positive.
+    // 12 subspace-iteration rounds approximate an exact SVD, and the grid
+    // standardization quantizes mu/sd at 1e-6, so the tolerances are
+    // loose but still pin the semantics.
+    val proj = sc.CcaGrid.ccaGridProject(spark, sf).collect()
+      .groupBy(r => (r.getLong(0), r.getLong(1)))
+      .map { case (kk, rs) => kk -> rs.sortBy(_.getLong(2)).map(_.getDouble(3)) }
     val emb = Tables.embeddings(spark, sf)
       .select(col("vec_id"), pmod(col("vec_id"), lit(2)).as("batch"),
         posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
@@ -149,8 +151,8 @@ class IntegrateSpec extends SparkSpecBase {
         math.abs(dotv - (if (a == b) 1.0 else 0.0))
       }).max
     }
-    assert(gramErr(u) < tolOrtho, s"U columns must be orthonormal, err ${gramErr(u)}")
-    assert(gramErr(v) < tolOrtho, s"V columns must be orthonormal, err ${gramErr(v)}")
+    assert(gramErr(u) < 1e-2, s"U columns must be orthonormal, err ${gramErr(u)}")
+    assert(gramErr(v) < 1e-2, s"V columns must be orthonormal, err ${gramErr(v)}")
     val d = x0(0).length
     val m01 = Array.tabulate(x0.length, x1.length)((i, j) =>
       (0 until d).map(t => x0(i)(t) * x1(j)(t)).sum)
@@ -165,64 +167,7 @@ class IntegrateSpec extends SparkSpecBase {
     // don't transfer across SFs
     val offMax = (for (a <- 0 until k; b <- 0 until k if a != b)
       yield math.abs(umv(a)(b))).max / diag.min
-    assert(offMax < tolOff, s"UᵀMV must be diagonal, worst relative off-diagonal $offMax")
-  }
-
-  test("grid cca_project (the registered hash-checked query) satisfies the SVD algebra") {
-    // 12 subspace-iteration rounds approximate exact LAPACK; the grid
-    // standardization also quantizes mu/sd at 1e-6, so tolerances are
-    // looser than the breeze test below but still pin the semantics.
-    val proj = sc.CcaGrid.ccaGridProject(spark, sf).collect()
-      .groupBy(r => (r.getLong(0), r.getLong(1)))
-      .map { case (kk, rs) => kk -> rs.sortBy(_.getLong(2)).map(_.getDouble(3)) }
-    ccaAlgebraCheck(proj, tolOrtho = 1e-2, tolOff = 0.05)
-  }
-
-  test("cca projections satisfy the SVD algebra they claim") {
-    // recompute the operator's standardized matrices in-test
-    val emb = Tables.embeddings(spark, sf)
-      .select(col("vec_id"), pmod(col("vec_id"), lit(2)).as("batch"),
-        posexplode(col("embedding").cast("array<double>")).as(Seq("dim", "x")))
-    val stats = emb.groupBy(col("batch"), col("dim"))
-      .agg(avg(col("x")).as("mu"), stddev_pop(col("x")).as("sd"))
-    val z = emb.join(stats, Seq("batch", "dim"))
-      .withColumn("z", when(col("sd") === 0, 0.0).otherwise((col("x") - col("mu")) / col("sd")))
-      .select(col("vec_id"), col("batch"), col("dim"), col("z")).collect()
-    def mat(b: Int): (Array[Long], Array[Array[Double]]) = {
-      val rows = z.filter(_.getLong(1) == b).groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-      (rows.map(_._1).toArray,
-        rows.map(_._2.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray).toArray)
-    }
-    val (ids0, x0) = mat(0)
-    val (ids1, x1) = mat(1)
-    val proj = sc.Integrate.ccaProject(spark, sf).collect()
-      .groupBy(r => (r.getLong(0), r.getLong(1)))
-      .map { case (k, rs) => k -> rs.sortBy(_.getLong(2)).map(_.getDouble(3)) }
-    val u = ids0.map(id => proj((id, 0L)))
-    val v = ids1.map(id => proj((id, 1L)))
-    // orthonormal per-batch loadings (6dp rounding → loose tolerance)
-    def gramErr(m: Array[Array[Double]]): Double = {
-      val k = m(0).length
-      (for (a <- 0 until k; b <- 0 until k) yield {
-        val dotv = m.map(r => r(a) * r(b)).sum
-        math.abs(dotv - (if (a == b) 1.0 else 0.0))
-      }).max
-    }
-    assert(gramErr(u) < 1e-3, s"U columns must be orthonormal, err ${gramErr(u)}")
-    assert(gramErr(v) < 1e-3, s"V columns must be orthonormal, err ${gramErr(v)}")
-    // UᵀMV must be diagonal with decreasing positive diagonal (M = X0 X1ᵀ)
-    val d = x0(0).length
-    val m01 = Array.tabulate(x0.length, x1.length)((i, j) =>
-      (0 until d).map(t => x0(i)(t) * x1(j)(t)).sum)
-    val k = u(0).length
-    val umv = Array.tabulate(k, k)((a, b) =>
-      (for (i <- x0.indices; j <- x1.indices) yield u(i)(a) * m01(i)(j) * v(j)(b)).sum)
-    val diag = (0 until k).map(a => umv(a)(a))
-    assert(diag.forall(_ > 0), s"singular values must be positive: $diag")
-    assert(diag.sliding(2).forall(p => p(0) >= p(1) - 1e-6), s"decreasing: $diag")
-    val offMax = (for (a <- 0 until k; b <- 0 until k if a != b)
-      yield math.abs(umv(a)(b))).max
-    assert(offMax < 1e-2, s"UᵀMV must be diagonal, worst off-diagonal $offMax")
+    assert(offMax < 0.05, s"UᵀMV must be diagonal, worst relative off-diagonal $offMax")
   }
 
   test("the LSH twin recovers a usable fraction of the exact anchor pairs") {

@@ -1,24 +1,12 @@
 package graft
 
-/** MLlib reductions: structural invariants (component variance ordering,
-  * cluster arity, determinism under a fixed seed). */
+/** Grid reductions: structural invariants (component variance ordering,
+  * cluster arity, determinism, clustree mass conservation). */
 class ReduceSpec extends SparkSpecBase {
 
-  test("PCA components are variance-ordered") {
-    val rows = ml.Reduce.pcaEmbeddings(spark, sf).select("pc1", "pc2").collect()
-    assert(rows.length == 500)
-    def variance(xs: Seq[Double]): Double = {
-      val m = xs.sum / xs.size
-      xs.map(x => (x - m) * (x - m)).sum / xs.size
-    }
-    val v1 = variance(rows.map(_.getDouble(0)).toSeq)
-    val v2 = variance(rows.map(_.getDouble(1)).toSeq)
-    assert(v1 >= v2, s"pc1 var $v1 < pc2 var $v2")
-  }
-
   test("cluster transitions conserve mass across resolutions (clustree contract)") {
-    val t = ml.Reduce.clusterTransitions(spark, sf).collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getInt(3), r.getLong(4)))
+    val t = ml.Reduce.lloydTransitions(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(t.nonEmpty)
     // every transition level accounts for the full corpus
     t.groupBy(_._1).foreach { case (kFrom, rows) =>
@@ -31,17 +19,6 @@ class ReduceSpec extends SparkSpecBase {
     val inMass = t.groupBy(r => (r._3, r._4)).view.mapValues(_.map(_._5).sum)
     for (((k, c), m) <- outMass if inMass.contains((k, c)))
       assert(inMass((k, c)) == m, s"cluster ($k,$c) mass in ${inMass((k, c))} != out $m")
-  }
-
-  test("KMeans assigns every vector to one of k clusters, deterministically") {
-    val a = ml.Reduce.kmeansClusters(spark, sf)
-    val clusters = a.select("cluster").distinct().collect().map(_.getInt(0)).toSet
-    assert(clusters.forall(c => c >= 0 && c < 10))
-    assert(a.count() == 500)
-    val b = ml.Reduce.kmeansClusters(spark, sf)
-    assert(a.collect().map(r => (r.getLong(0), r.getInt(2))).toMap ==
-      b.collect().map(r => (r.getLong(0), r.getInt(2))).toMap,
-      "same seed must give the same assignment")
   }
 
   test("Lloyd grid replay: valid assignments, elbow SSE drops with k") {

@@ -6,14 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local session for all suites (sbt forks one test JVM; the
   * session is reused across suites and torn down with the JVM). */
 object SparkTestSession {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576") // native TopK agg state is O(k) per group; the 128-key default would sort-fallback and re-sort every scored row
-      .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession(cpus = 4)
 }
 
 trait SparkSpecBase extends AnyFunSuite {

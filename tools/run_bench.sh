@@ -4,8 +4,9 @@
 #   tools/run_bench.sh <sfDir> <fullOutJson> [runs] [protocol]
 #
 # Heap and Spark jar dir are env-overridable (r10 ADVICE: don't tie the
-# runner to one builder box): BENCH_XMX (default 100g) and SPARK_JARS_DIR
-# (default /opt/spark/jars).
+# runner to one builder box): BENCH_XMX (default: half of MemTotal,
+# clamped to 2-8 GB, as the tier-1 test run sizes its heap) and
+# SPARK_JARS_DIR (default /opt/spark/jars).
 #
 # No GC flags — but Bench DOES call a plain STW System.gc() between
 # runs (after its blocking unpersist sweep). Both halves matter and
@@ -25,7 +26,7 @@ FULL_OUT="${2:?fullOutJson}"
 RUNS="${3:-3}"
 PROTOCOL="${4:-}"
 
-BENCH_XMX="${BENCH_XMX:-100g}"
+BENCH_XMX="${BENCH_XMX:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}"
 SPARK_JARS_DIR="${SPARK_JARS_DIR:-/opt/spark/jars}"
 
 sbt -batch compile > /tmp/bench_compile.log 2>&1 || { tail -30 /tmp/bench_compile.log; exit 1; }

@@ -4,9 +4,10 @@
 #   tools/run_gate.sh [sfDir] [outDir] [nShards] [jsonOut]
 #
 # Compiles once via sbt, fans the registry out over nShards bare JVMs
-# (Verify --shard k/n, each local[32/n]), then runs the parallel DuckDB
-# compare and writes the per-query JSON artifact the builder commits as
-# CORRECTNESS_builder_rN.json. Whole-registry wall target: ≤ ~10 min.
+# (Verify --shard k/n, each local[cpus/n] with 1/n of the heap), then
+# runs the parallel DuckDB compare and writes the per-query JSON
+# artifact the builder commits as CORRECTNESS_builder_rN.json.
+# Whole-registry wall target: ≤ ~10 min.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
@@ -29,12 +30,16 @@ JOPTS=()
 for p in "${ADD_OPENS[@]}"; do JOPTS+=(--add-opens "$p=ALL-UNNAMED"); done
 
 rm -rf "$OUT_DIR"; mkdir -p "$OUT_DIR"
-TOTAL_CPUS="${SPARK_GRAFT_TOTAL_CPUS:-32}"
+# machine defaults, as the tier-1 test run sizes them: every core, and
+# half of MemTotal clamped to 2-8 GB of heap, split across the shards
+TOTAL_CPUS="${SPARK_GRAFT_TOTAL_CPUS:-$(env -u OMP_NUM_THREADS nproc)}"
 PER=$(( TOTAL_CPUS / N )); [ "$PER" -lt 1 ] && PER=1
+HEAP_GB=$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g)}' /proc/meminfo)
+SHARD_XMX_MB=$(( HEAP_GB * 1024 / N ))
 
 pids=()
 for k in $(seq 0 $((N - 1))); do
-  SPARK_GRAFT_CPUS="$PER" java "${JOPTS[@]}" -Xmx20g -cp "$CP" \
+  SPARK_GRAFT_CPUS="$PER" java "${JOPTS[@]}" -Xmx"${SHARD_XMX_MB}m" -cp "$CP" \
     graft.Verify "$SF_DIR" "$OUT_DIR" --shard "$k/$N" \
     > "/tmp/gate_shard_$k.log" 2>&1 &
   pids+=($!)
