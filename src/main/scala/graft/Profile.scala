@@ -6,7 +6,10 @@ import scala.collection.mutable
 /** Measurement aid that needs no Spark UI. For each named query
   * it prints one row that splits the cold wall time into DataFrame
   * build, analysis+optimization+physical planning and execution, with
-  * the query's jobs, stages, tasks and shuffle MB. Under the row come
+  * the query's jobs, stages, tasks and shuffle MB, and its codegen
+  * footprint: the classes Spark compiled during its first sample (those
+  * the codegen cache did not already hold) and their compile ms, from
+  * `CodegenMetrics`. Under the row come
   * its costliest stages (wall and CPU ms, tasks, shuffle MB) and the
   * driver's gaps between jobs: the local-mode stand-in for the Stages
   * tab. All of it is from the fastest of SPARK_GRAFT_BENCH_RUNS
@@ -43,6 +46,19 @@ object Profile {
       synchronized { (stages.toSeq, jobs.toSeq.sortBy(_._1).map(_._2)) }
   }
 
+  /** Codegen compiles so far: their count and the compile-ms samples
+    * the histogram's reservoir holds (every sample up to its 1028). */
+  private def compiles(): (Long, Seq[Long]) = {
+    val h = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    (h.getCount, h.getSnapshot.getValues.toSeq)
+  }
+
+  /** Classes compiled since `c0` and their total compile ms. */
+  private def compiledSince(c0: (Long, Seq[Long])): (Long, Long) = {
+    val c1 = compiles()
+    (c1._1 - c0._1, c1._2.diff(c0._2).sum)
+  }
+
   def main(args: Array[String]): Unit = {
     val names: Seq[String] =
       if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
@@ -53,13 +69,14 @@ object Profile {
     spark.sparkContext.addSparkListener(rec)
     GraftSession.warm(spark, sfDir)
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    println(f"${"query"}%-32s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"shufMB"}%7s")
+    println(f"${"query"}%-32s ${"build"}%7s ${"plan"}%7s ${"exec"}%7s ${"total"}%7s ${"jobs"}%5s ${"stg"}%5s ${"tasks"}%6s ${"shufMB"}%7s ${"classes"}%7s ${"compMs"}%7s")
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       val samples = (1 to runs).map { _ =>
         GraftSession.reset(spark)
         GraftGlue.drainListenerBus(spark)
         rec.clear()
+        val c0 = compiles()
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
         val t1 = System.nanoTime()
@@ -69,11 +86,12 @@ object Profile {
         df.write.format("noop").mode("overwrite").save()
         val t3 = System.nanoTime()
         GraftGlue.drainListenerBus(spark)
-        (Seq(t1 - t0, t2 - t1, t3 - t2, t3 - t0).map(_ / 1e9), rec.snapshot())
+        (Seq(t1 - t0, t2 - t1, t3 - t2, t3 - t0).map(_ / 1e9), rec.snapshot(), compiledSince(c0))
       }
-      val (secs, (stages, jobs)) = samples.minBy(_._1(3))
+      val (secs, (stages, jobs), _) = samples.minBy(_._1(3))
+      val compiled = samples.head._3
       val shufMb = stages.map(s => s.shufR + s.shufW).sum / 1e6
-      println(f"$name%-32s ${secs(0)}%7.2f ${secs(1)}%7.2f ${secs(2)}%7.2f ${secs(3)}%7.2f ${jobs.size}%5d ${stages.size}%5d ${stages.map(_.tasks).sum}%6d $shufMb%7.1f")
+      println(f"$name%-32s ${secs(0)}%7.2f ${secs(1)}%7.2f ${secs(2)}%7.2f ${secs(3)}%7.2f ${jobs.size}%5d ${stages.size}%5d ${stages.map(_.tasks).sum}%6d $shufMb%7.1f ${compiled._1}%7d ${compiled._2}%7d")
       println(f"  ${"stageId"}%7s ${"ms"}%7s ${"cpuMs"}%8s ${"tasks"}%5s ${"shufR_MB"}%9s ${"shufW_MB"}%9s  name")
       stages.sortBy(-_.wallMs).take(10).foreach { s =>
         println(f"  ${s.id}%7d ${s.wallMs}%7d ${s.cpuMs}%8d ${s.tasks}%5d ${s.shufR / 1e6}%9.1f ${s.shufW / 1e6}%9.1f  ${s.name.take(90)}")

@@ -146,183 +146,100 @@ object Dedup {
   // 307. prefix-filtered exact Jaccard join (All-Pairs, Bayardo et al.
   // WWW 2007; PPJoin, Xiao et al. WWW 2008) — the EXACT scalable path
   // for #33's contract. The inverted-index form above pays Σ df² rows
-  // on the shingle join (1.5e9 at sf0.1 — Bench-quarantined); prefix
-  // filtering shrinks the joined index to each doc's (1−t)·|A|+1
-  // RAREST shingles under a global (df, shingle) order: any pair with
-  // J ≥ t must share one token inside both prefixes (prefix-filter
-  // lemma), and rare-first ordering makes prefix df's the corpus's
-  // smallest — candidates collapse from Σ df² to Σ df_prefix² ≈ true
-  // pairs + collisions. The length filter (10·|B| ≥ 7·|A|, exact
-  // integers — a float ⌈0.7·n⌉ could round the prefix UNSAFELY short)
-  // and PPJoin's positional filter prune before verification.
+  // on the shingle join; prefix filtering joins only each set's RAREST
+  // shingles under a global (df, shingle) order: a pair with J ≥ t
+  // shares a token inside both prefixes (prefix-filter lemma), and
+  // rare-first order keeps the prefix df's small.
   //
-  // Plan shape (r10 rewrite — the first cut spent 30 s at sf0.1 on a
-  // per-doc (df,g) rank window over every exploded shingle plus
-  // string-set Jaccard over 4.7M candidates): shingles are DICTIONARY
-  // -ENCODED to dense ints whose ascending order IS the global (df, g)
-  // All-Pairs order, so (a) a doc's prefix is just the HEAD of its
-  // sorted gid array — the fact-sized rank window disappears, (b) the
-  // candidate join carries only ints, (c) PPJoin's positional filter
-  // (overlap ubound 1 + min(remaining suffixes) ≥ ⌈7(n₁+n₂)/17⌉ at the
-  // first shared prefix token — sound because both arrays share one
-  // global order) prunes per-row BEFORE the distinct shuffle, and
-  // (d) verification is one native sorted-int merge per pair
-  // (SortedIntersectCount) against the doc-keyed gid arrays — int
-  // compares, not per-element string hashing. The dictionary rank
-  // window is VOCAB-bounded (distinct 5-grams — corpus-sublinear,
-  // charset⁵-capped; PlanSpec-allowlisted); at dictionary scale swap
-  // in the heapsFit range-bucketed two-pass rank. Verify joins hit a
-  // |docs|-row int-array table (auto-broadcast at test SF; equi-key
-  // shuffle-hash at corpus scale). Same output, same oracle as #33.
+  // Plan shape:
+  //  1. `gr`: one md5 rendezvous over the normalized text (distinct
+  //     texts run the pair machinery once; members expand at the end)
+  //     that also shingles each distinct text once. The explicit
+  //     repartition on the md5 key is the aggregation's own exchange;
+  //     AQE does not coalesce a numbered repartition, so the shingle
+  //     pass runs on every core however small the texts are in bytes.
+  //  2. The dictionary: (shingle, df) counts collected to the driver,
+  //     ranked by (df, shingle) into dense 1-based ids and broadcast.
+  //     It is vocabulary-bounded (distinct 5-grams, charset⁵-capped).
+  //  3. `docs`: one narrow map per rep encodes its shingles to the
+  //     sorted id array `ids`, so a prefix is the HEAD of `ids`.
+  //  4. The candidate join on a prefix id, both sides carrying the full
+  //     `ids` (record replication, Vernica et al. SIGMOD 2010). The
+  //     probe prefix for J ≥ 0.7 is n − ⌈0.7n⌉ + 1 = n − (7n+9) div 10
+  //     + 1; the (n, id)-smaller side only needs its index prefix
+  //     n − ⌈14n/17⌉ + 1 (overlap ≥ 2t/(1+t)·|smaller|). Integer bounds
+  //     throughout: a float ⌈0.7n⌉ could cut a prefix unsafely short.
+  //     The condition runs the O(1) length filter (10·|B| ≥ 7·|A|) and
+  //     positional filter first, then FirstSharedOverlap, which keeps
+  //     the row only if its id is the FIRST id the two sets share and
+  //     returns the exact overlap, stopping early once J ≥ 0.7 is out
+  //     of reach.
+  //
+  // Exactness of the first-shared rule: let s be the smallest id a
+  // qualifying pair shares. Some shared id lies in both prefixes, and
+  // prefixes are heads of the sorted arrays, so s (no later than it in
+  // either array) lies in both prefixes too: the pair meets at s. At s
+  // nothing has matched yet, so the overlap is at most 1 + min(ids left
+  // after s on either side) — the positional filter's bound there, and
+  // no larger than at any later shared id. So every qualifying pair is
+  // emitted exactly once (at s, oriented by (n, id)) and no pruning
+  // drops it; the kernel's stop rule uses the same bound with the
+  // matches so far. No distinct is needed. Same output, same oracle
+  // as #33.
   def dedupJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
-    // Distinct-text rendezvous FIRST (the fuzzy_blocked_join /
-    // golden_record r9 lesson, and the production order of operations:
-    // exact-dedup before near-dup). The r10 sf1 sweep measured the
-    // doc-level prefix join at 611 s / 134x on 10x data — replicated
-    // texts multiply every posting list, so Σ pdf² grows ~(dup rate)²;
-    // running the pair machinery once per DISTINCT normalized text and
-    // expanding group members back at the end restores the sf0.1 cost
-    // (the candidate volume depends on unique content, not corpus
-    // size). Exactness is preserved: identical texts share a shingle
-    // set (J = 1 ≥ t, emitted as in-group pairs), and two DIFFERENT
-    // texts with equal sets still meet in the rep-level join.
+    import s.implicits._
     val nrm = docsNorm(s, dir)
-    // r15 note: checkpoint-removal was TRIED here (the kneser_ney
-    // ReuseExchange pattern) and measured 7.1 → 27.1 s — the prefix and
-    // index sides are DIFFERENT subplans over `docs`, so no canonical
-    // exchange is shared and the whole dict build re-executes per
-    // consumer. The eager checkpoints stay.
-    // r16 (r15 verdict item 1): ONE md5-keyed rendezvous aggregation
-    // (the nearDupPairsLsh shape) carries rep id, rep text AND the
-    // member list — the old shape paid a full-text groupBy + a second
-    // full-text join for `members`, and, because `groups` was never
-    // materialized, re-ran the corpus scan + groupBy inside EACH
-    // consumer of `sh` (the dfreq build and the dict join — two more
-    // scans). Everything below derives from this one checkpoint.
-    // r16 (second pass): floor the rendezvous checkpoint's parallelism.
-    // AQE coalesces the byte-small (~1.5 MB at sf0.1) groupBy output to
-    // ONE partition, which made every downstream shingle explode +
-    // normalize pass single-threaded (Profile stage table: two 1-task
-    // 2-2.6 s stages). But an UNCONDITIONAL repartition to the full
-    // shuffle parallelism measured ~25% SLOWER at sf3, where the
-    // checkpoint arrives 16-way already (local-mode hash-stage
-    // contention, the sf1 scaling finding) — so only re-spread when
-    // the materialized frame is severely under-partitioned (< 1/4 of
-    // the session parallelism). Deterministic hash on the rep key.
-    val grParts = nrm.sparkSession.sessionState.conf.numShufflePartitions
-    val gr0 = nrm.withColumn("h", md5(col("t")))
+    val parts = s.sessionState.conf.numShufflePartitions
+    val gr = nrm.withColumn("h", md5(col("t")))
+      .repartition(parts, col("h"))
       .groupBy(col("h"))
       .agg(min(col("doc_id")).as("rep"), max(col("t")).as("t"),
         collect_list(col("doc_id")).as("ms"))
-      .select(col("rep"), col("t"), col("ms"))
+      .select(col("rep"), col("ms"), shinglesExpr("t").as("sg"))
       .localCheckpoint()
-    val gr = if (gr0.rdd.getNumPartitions * 4 < grParts)
-      gr0.repartition(grParts, col("rep")).localCheckpoint()
-    else gr0
-    val sh = gr
-      .select(col("rep").as("doc_id"), explode(shinglesExpr("t")).as("g"))
-    val dfreq = sh.groupBy(col("g")).agg(count(lit(1)).as("df"))
-    // r16 (second pass): the (df, g) rank was a single-partition window
-    // — one task sorting the whole dictionary (~2 s at sf0.1, and THE
-    // at-dictionary-scale bottleneck its allowlist entry documented).
-    // This is the promised swap: a distributed range sort + the
-    // zipWithIndex two-pass rank (count per sorted partition, then
-    // offset + local index). Bit-identical to row_number over
-    // (df asc, g asc): same strict total order (g is unique), same
-    // dense 1-based int ranks; the emitted pair set depends only on
-    // that order, and verification is exact regardless.
-    val dfreqC = dfreq.localCheckpoint() // rank consumes it twice (sample + sort)
-    val dict = {
-      val ss = dfreqC.sparkSession
-      val ranked = dfreqC.select(col("g"), col("df")).rdd
-        .map(r => (r.getLong(1), r.getString(0)))
-        .sortBy(identity)
-        .zipWithIndex()
-        .map { case ((_, g), i) => org.apache.spark.sql.Row(g, (i + 1).toInt) }
-      ss.createDataFrame(ranked, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("g", org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("gid", org.apache.spark.sql.types.IntegerType))))
-    }
-    // one gid per distinct shingle per doc; ascending = rare-first.
-    // localCheckpoint: feeds the prefix explode AND both verify joins.
-    // r16: the dict join BROADCASTS the vocab-bounded dictionary (the
-    // same boundedness argument as its single-partition rank window),
-    // so the exploded shingle stream pays its ONE exchange in dfreq
-    // and streams through the encode join unshuffled (guide §2.4).
-    val docs = sh.join(broadcast(dict), "g")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("gid"))).as("ids"))
-      .select(col("doc_id"), col("ids"), size(col("ids")).cast("long").as("n"))
-      .localCheckpoint()
-    // probe prefix for J >= 0.7: n - ceil(0.7 n) + 1 = n - (7n+9) div 10 + 1.
-    // The (n, id)-SMALLER side of a pair additionally only needs its
-    // INDEX prefix n - ceil(2t/(1+t) n) + 1 = n - (14n+16) div 17 + 1
-    // (All-Pairs asymmetry: overlap >= 2t/(1+t)·|smaller|, so the first
-    // shared token sits that early in the smaller set). The positional
-    // filter already implies this bound post-join; cutting the index
-    // side pre-join shrinks the streamed match volume ~1.6x (39.5M ->
-    // 25.3M at sf0.1) for free.
-    val prefix = docs.select(col("doc_id"), col("n"),
+    val ranked = gr.select(explode(col("sg"))).as[String].rdd.countByValue()
+      .toSeq.map { case (g, df) => (df, g) }.sorted
+    val dict = s.sparkContext.broadcast(
+      ranked.iterator.zipWithIndex.map { case ((_, g), i) => g -> (i + 1) }.toMap)
+    val docs = gr.select(col("rep"), col("sg")).as[(Long, Array[String])]
+      .map { case (rep, sg) =>
+        val ids = sg.map(dict.value)
+        java.util.Arrays.sort(ids)
+        (rep, ids, ids.length.toLong)
+      }.toDF("doc_id", "ids", "n")
+    val prefix = docs.select(col("doc_id"), col("n"), col("ids"),
       posexplode(slice(col("ids"), lit(1),
         (col("n") - expr("(n * 7 + 9) div 10") + 1).cast("int"))).as(Seq("pos", "gid")))
     val idx = prefix.filter(
       col("pos") + 1 <= col("n") - expr("(n * 14 + 16) div 17") + 1)
-    // shuffle_hash, not broadcast: the dictionary has few DISTINCT
-    // gids, so a broadcast relation over the index rows degenerates to
-    // ~|idx|/|vocab|-long hash chains probed per row (measured 4x
-    // slower than partitioned hash build at sf0.1); equi-partitioning
-    // on gid keeps per-partition builds small and cache-resident.
-    // r16 (second pass; guide §2.4 "remove shuffles outright", measured
-    // with the Profile stage table + a microbench): the old
-    // `.distinct()` BEFORE verification was the query's single hottest
-    // operator — the
-    // candidate stream emits each pair once per shared prefix token
-    // (~2.75× dup factor), and deduping 8.2M (long, long) rows through
-    // a full exchange + two hash-agg passes measured 3-5 s on local[32]
-    // (thread dumps: 31/32 task threads inside hashAgg_doAggregate).
-    // Verification itself is CHEAP (one sorted-int merge, ~400 int
-    // compares): verifying every duplicate emission costs far less than
-    // deduping first, and the exact-Jaccard filter leaves only true
-    // pairs (~hundreds), whose distinct is free. Same bytes at scale —
-    // the dup-candidate stream flows into the d1-verify join's exchange
-    // instead of the distinct's — and one full exchange+agg round fewer.
-    // Duplicate emissions carry identical jaccard, so the post-filter
-    // distinct returns exactly the old pair set.
-    // The candidate join's exchanges are BYTE-small (a few MB of int
-    // rows) but their downstream work — per-gid hash-chain scans + the
-    // inline verification — is ~1000× a normal exchange's per-byte
-    // cost, so AQE's size-based coalescing under-provisions them
-    // (measured: 5 post-AQE partitions, 15 s wall on 57 CPU-s of work).
-    // Pin both sides at the session's shuffle parallelism (cluster-
-    // parameterized, not a constant); the explicit repartition count
-    // also co-partitions the join so no extra exchange is added.
-    val candParts = prefix.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = prefix.repartition(candParts, col("gid")).as("a")
-      .join(idx.repartition(candParts, col("gid")).hint("shuffle_hash").as("b"),
+    // Both sides are pinned at the shuffle parallelism: the exchanges
+    // are byte-small but each row's downstream work (the hash-chain
+    // scan and the verify) is heavy, so AQE's size-based coalescing
+    // would leave cores idle. shuffle_hash, not broadcast: few distinct
+    // gids means long hash chains in one broadcast relation.
+    // The Jaccard filter sits in the join condition, after the kernel:
+    // as a filter over the join's output, Catalyst would push it into
+    // the condition AHEAD of the O(1) filters, running the kernel on
+    // every hash match.
+    val overlap = graft.functions.VectorFunctions.firstSharedOverlap(
+      col("a.ids"), col("b.ids"), col("a.gid"))
+    val jac = overlap.cast("double") / (col("a.n") + col("b.n") - overlap)
+    val repPairs = prefix.repartition(parts, col("gid")).as("a")
+      .join(idx.repartition(parts, col("gid")).hint("shuffle_hash").as("b"),
         col("a.gid") === col("b.gid") &&
           (col("b.n") < col("a.n") ||
             (col("b.n") === col("a.n") && col("b.doc_id") < col("a.doc_id"))) &&
           col("a.n") * 7 <= col("b.n") * 10 &&
           (lit(1L) + least(col("a.n") - 1 - col("a.pos"), col("b.n") - 1 - col("b.pos"))) * 17
-            >= (col("a.n") + col("b.n")) * 7)
+            >= (col("a.n") + col("b.n")) * 7 &&
+          overlap >= 0 && jac >= 0.7)
       .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"))
-    val repPairs = cand
-      .join(docs.select(col("doc_id").as("d1"), col("ids").as("i1"), col("n").as("n1")), "d1")
-      .join(docs.select(col("doc_id").as("d2"), col("ids").as("i2"), col("n").as("n2")), "d2")
-      .withColumn("i", graft.functions.VectorFunctions
-        .sortedIntersectCount(col("i1"), col("i2")).cast("long"))
-      .withColumn("jac", col("i").cast("double") / (col("n1") + col("n2") - col("i")))
-      .filter(col("jac") >= 0.7)
-      .select(col("d1"), col("d2"), r(col("jac"), 6).as("jaccard"))
-      .distinct()
+        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"), r(jac, 6).as("jaccard"))
     // expand rep-level matches back to record pairs: identical texts
-    // are J = 1 pairs within their group; qualifying DISTINCT-text rep
-    // pairs fan out over both member lists (disjoint groups, so
-    // least/greatest is a pure orientation fix). Output-bounded —
-    // these ARE the result rows, not intermediate state. r16: in-group
-    // pairs expand per row from the SORTED member array (no rep-keyed
-    // self-join shuffle) — the nearDupPairsLsh expansion.
+    // are J = 1 pairs within their group, expanded per row from the
+    // sorted member array; qualifying distinct-text rep pairs fan out
+    // over both member lists (disjoint groups, so least/greatest is a
+    // pure orientation fix). Output-bounded: these are the result rows.
     val selfPairs = gr.filter(size(col("ms")) > 1)
       .withColumn("msrt", array_sort(col("ms")))
       .select(explode(expr(
@@ -330,11 +247,12 @@ object Dedup {
           |  j -> transform(slice(msrt, 1, j),
           |         x -> struct(x AS d1, msrt[j] AS d2))))""".stripMargin)).as("p"))
       .select(col("p.d1").as("d1"), col("p.d2").as("d2"), lit(1.0).as("jaccard"))
+    val members = gr.select(col("rep"), explode(col("ms")).as("m"))
     val crossPairs = repPairs
-      .join(gr.select(col("rep").as("d1"), explode(col("ms")).as("da")), "d1")
-      .join(gr.select(col("rep").as("d2"), explode(col("ms")).as("db")), "d2")
-      .select(least(col("da"), col("db")).as("d1"),
-        greatest(col("da"), col("db")).as("d2"), col("jaccard"))
+      .join(members.as("ma"), col("d1") === col("ma.rep"))
+      .join(members.as("mb"), col("d2") === col("mb.rep"))
+      .select(least(col("ma.m"), col("mb.m")).as("d1"),
+        greatest(col("ma.m"), col("mb.m")).as("d2"), col("jaccard"))
     selfPairs.unionByName(crossPairs)
   }
 
@@ -839,13 +757,15 @@ object Dedup {
   // distinct 20-char shingles with the eval set (source 'src0' plays
   // the benchmark corpus). Eval shingles broadcast; train side is one
   // narrow scan — no pair join (graft.api.Similarity.decontaminate).
-  def decontaminate(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
+  def decontaminate(s: SparkSession, dir: String): DataFrame =
+    decontaminate(Tables.documents(s, dir))
+
+  /** #64 over an already-read `documents` frame. */
+  def decontaminate(docs: DataFrame): DataFrame =
     graft.api.Similarity.decontaminate(
       docs.filter(col("source") =!= "src0"), col("doc_id"), col("text"),
       docs.filter(col("source") === "src0"), col("text"),
       shingle = 20, minShared = 5)
-  }
 
   // ---------------------------------------------------------------
   // 270. leakage-by-source rollup — the per-source read on #64's

@@ -1097,7 +1097,7 @@ object TextOps {
     val all = Tables.documents(s, dir)
     val keepers = graft.api.Similarity.exactDupGroups(all, col("doc_id"), col("text"))
       .select(col("norm_hash"), col("keep_id"))
-    val contam = graft.dedup.Dedup.decontaminate(s, dir)
+    val contam = graft.dedup.Dedup.decontaminate(all)
       .select(col("doc_id"), col("contaminated"))
     val len = length(col("text")).cast("double")
     val nWs = reCount(col("text"), "\\S+").cast("double")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 
 /** Semantics of the probabilistic dedup paths against the exact
@@ -410,5 +411,84 @@ class DedupSpec extends SparkSpecBase {
     }
     val mae = rows.map(_.getAs[Double]("abs_err")).sum / rows.length
     assert(mae < 0.15, f"mean abs err $mae%.4f too high for a 64-slot OPH estimator")
+  }
+
+  /** `documents` (doc_id, text) written to a fresh temp dir. */
+  private def documentsDir(docs: Seq[(Long, String)]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("dedup-fixture").toString
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    dir
+  }
+
+  private def jaccardRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
+    df.select("d1", "d2", "jaccard").collect()
+      .map { case Row(a: Long, b: Long, j: Double) => (a, b, j) }.toSeq.sorted
+
+  test("prefix join equals the exact inverted index on boundary cases") {
+    // x and g hold only distinct characters, so every 5-gram of a slice
+    // is distinct and the overlaps below are exact by construction
+    val x = "abcdefghijklmnopqrstuvwxy"
+    val g = "αβγδεζηθικλμνξοπρστυφχψω"
+    val fox = "the quick brown fox jumps over the lazy dog near the river bank"
+    val dir = documentsDir(Seq(
+      // identical after normalization: one group of three
+      1L -> "Hello   World, this is a plain test sentence.",
+      2L -> "hello world, this is a plain TEST sentence.",
+      3L -> " hello world, this is a plain test sentence. ",
+      // a near copy of the group, sharing most prefix tokens with it
+      4L -> "hello world, this is a plain test sentence!",
+      // different texts, equal shingle sets (the five rotations of 01234)
+      5L -> "012340123",
+      6L -> "01234012340123401",
+      // 17 shingles each, 14 shared: 17·14 = 7·(17+17), J = 0.7 exactly
+      7L -> x.slice(0, 21),
+      8L -> x.slice(3, 24),
+      // 13 shared with 7 (J < 0.7), 16 with 8
+      11L -> x.slice(4, 25),
+      // length-filter boundary: 10·14 = 7·20, and 10 ⊂ 9, so J = 0.7
+      9L -> g,
+      10L -> g.slice(3, 21),
+      // several near copies sharing many prefix tokens
+      12L -> fox,
+      13L -> fox.replace("dog", "cat"),
+      14L -> fox.replace("river", "rivet"),
+      // sets of one shingle
+      15L -> "ok",
+      16L -> "OK"))
+    val prefix = jaccardRows(dedup.Dedup.dedupJaccardPrefix(spark, dir))
+    val exact = jaccardRows(dedup.Dedup.dedupNgramJaccard(spark, dir))
+    assert(prefix == exact)
+    // the fixture really hits each boundary
+    val got = prefix.map { case (a, b, j) => (a, b) -> j }.toMap
+    assert(got((7L, 8L)) == 0.7 && got((9L, 10L)) == 0.7 && !got.contains((7L, 11L)))
+    assert(got((5L, 6L)) == 1.0 && got((1L, 2L)) == 1.0 && got((15L, 16L)) == 1.0)
+    assert(Seq((1L, 4L), (2L, 4L), (3L, 4L), (8L, 11L), (12L, 14L)).forall(got.contains))
+  }
+
+  test("prefix join on a one-document corpus returns no rows") {
+    val dir = documentsDir(Seq(1L -> "a single document with no partner"))
+    assert(dedup.Dedup.dedupJaccardPrefix(spark, dir).count() == 0)
+    assert(dedup.Dedup.dedupNgramJaccard(spark, dir).count() == 0)
+  }
+
+  test("dedup_jaccard_prefix runs in at most 10 jobs") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("dedup.spec") == "prefix"))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("dedup.spec", "prefix")
+      dedup.Dedup.dedupJaccardPrefix(spark, sf).write.format("noop").mode("overwrite").save()
+      org.apache.spark.sql.GraftGlue.drainListenerBus(spark)
+    } finally {
+      sc.setLocalProperty("dedup.spec", null)
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get >= 1 && jobs.get <= 10, s"dedup_jaccard_prefix launched ${jobs.get} jobs")
   }
 }

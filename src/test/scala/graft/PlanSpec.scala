@@ -488,8 +488,8 @@ class PlanSpec extends SparkSpecBase {
       // vocabulary-bounded rank tables (corpus-sublinear; cap at top-N
       // vocab at larger scale — documented in SURVEY §5)
       "zipf_fit" -> "vocab rank (sublinear)", "pmi_bigrams" -> "bigram vocab rank (df-cut)",
-      // dedup_jaccard_prefix left this list in r16: its dictionary rank
-      // is now the distributed sortBy+zipWithIndex two-pass rank
+      // dedup_jaccard_prefix is not listed: it ranks its dictionary on
+      // the driver from the collected (shingle, df) counts, no window
       "top_paths" -> "distinct session-path counts (post-agg top-k)",
       "cms_frequency" -> "post-limit top-100 rank (TakeOrdered feeds it)",
       "factor_by_size" -> "|levels| frequency rank",

@@ -340,4 +340,33 @@ class VectorExprsPropSpec extends SparkSpecBase {
       assert(math.abs(got(i) - expect) < 1e-9, s"case $i")
     }
   }
+
+  test("firstSharedOverlap: exact overlap at the first shared id, -1 otherwise") {
+    import spark.implicits._
+    // b is a with a few ids dropped and a few added, so many pairs sit
+    // near J = 0.7; every id of either set is tried as the row's id
+    val pair = for {
+      a <- Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, Gen.choose(0, 80))).map(_.distinct)
+      drop <- Gen.choose(0, 6)
+      add <- Gen.listOfN(6, Gen.choose(0, 80)).flatMap(xs => Gen.choose(0, 6).map(xs.take))
+    } yield (a.sorted, (a.drop(drop) ++ add).distinct.sorted)
+    val rows = samples(pair, 300).flatMap { case (a, b) =>
+      (a ++ b :+ 81).distinct.map(g => (a, b, g))
+    }
+    def expected(a: Seq[Int], b: Seq[Int], g: Int): Int = {
+      val i = a.intersect(b)
+      if (i.nonEmpty && i.min == g && 17 * i.size >= 7 * (a.size + b.size)) i.size else -1
+    }
+    val want = rows.map { case (a, b, g) => expected(a, b, g) }
+    assert(want.count(_ >= 0) >= 50, "too few qualifying pairs to test")
+    // codegen (an RDD-backed plan) and interpreted (a local relation)
+    for (df <- Seq(spark.sparkContext.parallelize(rows, 4).toDF("a", "b", "g"),
+        rows.toDF("a", "b", "g"))) {
+      val got = df.select(firstSharedOverlap(col("a"), col("b"), col("g")))
+        .collect().map(_.getInt(0)).toSeq
+      rows.indices.foreach { k =>
+        assert(got(k) == want(k), s"case ${rows(k)}")
+      }
+    }
+  }
 }
