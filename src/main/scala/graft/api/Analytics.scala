@@ -35,8 +35,7 @@ object Analytics {
   def spread(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val p = s.sparkContext.defaultParallelism
-    val maxSplit = s.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-      .stripSuffix("b").toLong
+    val maxSplit = s.sessionState.conf.filesMaxPartitionBytes
     val files = df.inputFiles
     val splits =
       if (files.isEmpty) 0L

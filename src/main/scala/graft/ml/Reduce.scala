@@ -107,25 +107,31 @@ object Reduce {
   /** One training point: `x` is what the centroid sums add (round(v·1e6)
     * for real vectors, the residual itself for residual PQ), `xq` what
     * the argmin measures, `k` its cluster in the first round. */
-  private final case class LloydPoint(group: Any, id: Any, x: Array[Long],
+  private[graft] final case class LloydPoint(group: Any, id: Any, x: Array[Long],
       xq: Array[Long], k: Long)
 
   /** One group's centroid table, ascending by cluster id k: member
     * count, mean and grid centroid per cluster. */
-  private final case class LloydCents(k: Array[Long], n: Array[Long],
+  private[graft] final case class LloydCents(k: Array[Long], n: Array[Long],
       cv: Array[Array[Double]], cq: Array[Array[Long]])
 
   /** Nearest centroid as (k, d²): integer d², the smaller k wins a tie —
     * the (d2, k) total order of the oracle's row_number. */
-  private def nearest(xq: Array[Long], c: LloydCents): (Long, Long) = {
+  private[graft] def nearest(xq: Array[Long], c: LloydCents): (Long, Long) = {
     var best = 0; var bd = 0L; var j = 0
     while (j < c.k.length) {
-      val cq = c.cq(j); var d2 = 0L; var i = 0
-      while (i < xq.length) { val e = xq(i) - cq(i); d2 += e * e; i += 1 }
+      val d2 = sqDist(xq, c.cq(j))
       if (j == 0 || d2 < bd) { best = j; bd = d2 }
       j += 1
     }
     (c.k(best), bd)
+  }
+
+  /** Integer squared distance Σ(a − b)² over `a`'s dimensions. */
+  private[graft] def sqDist(a: Array[Long], b: Array[Long]): Long = {
+    var d2 = 0L; var i = 0
+    while (i < a.length) { val e = a(i) - b(i); d2 += e * e; i += 1 }
+    d2
   }
 
   /** A cluster's mean and grid centroid from its long-vector sum, in
@@ -140,7 +146,7 @@ object Reduce {
   /** [[LloydRounds]] rounds over `points`, one job each; returns every
     * group's final-round centroid table. A cluster that no point chose
     * drops out of the table. */
-  private def lloydRounds(points: RDD[LloydPoint], residual: Boolean)
+  private[graft] def lloydRounds(points: RDD[LloydPoint], residual: Boolean)
       : Map[Any, LloydCents] = {
     var table: Map[Any, LloydCents] = null
     for (_ <- 1 to LloydRounds) {
@@ -168,34 +174,27 @@ object Reduce {
     table
   }
 
-  /** `pts` (group, id, vector, grid vector, initial k) as points; group
-    * and id must be integral. */
-  private def lloydPoints(pts: DataFrame, residual: Boolean): RDD[LloydPoint] = {
+  /** `pts` (group, id, vector, grid vector, initial k) as points, the
+    * vector summed on the 1e-6 grid; group and id must be integral. */
+  private def lloydPoints(pts: DataFrame): RDD[LloydPoint] = {
     val types = pts.schema.fields.map(_.dataType)
     pts.queryExecution.toRdd.map { r =>
-      val x = if (residual) r.getArray(2).toLongArray()
-        else r.getArray(2).toDoubleArray().map(v => QuantOuterProduct.q(v * 1e6))
-      LloydPoint(r.get(0, types(0)), r.get(1, types(1)), x, r.getArray(3).toLongArray(),
-        r.get(4, types(4)).asInstanceOf[Number].longValue)
+      LloydPoint(r.get(0, types(0)), r.get(1, types(1)),
+        r.getArray(2).toDoubleArray().map(v => QuantOuterProduct.q(v * 1e6)),
+        r.getArray(3).toLongArray(), r.get(4, types(4)).asInstanceOf[Number].longValue)
     }
   }
 
   /** Grid-Lloyd training of `pts` (group, id, vector, grid vector,
-    * initial k): `array<double>` vectors sum on the 1e-6 grid,
-    * `array<bigint>` ones are residuals. Returns the final assignment
-    * (group, id, k, d2), checkpointed, and the final-round centroids
-    * (group, k, cv, cq) as a local table. The points persist for the
-    * rounds only. */
+    * initial k). Returns the final assignment (group, id, k, d2),
+    * checkpointed, and the final-round centroids (group, k, cv, cq) as
+    * a local table. The points persist for the rounds only. */
   private[graft] def gridLloydFit(pts: DataFrame): (DataFrame, DataFrame) = {
     val s = pts.sparkSession
-    val Array(gf, idf, xf, _, _) = pts.schema.fields
-    val residual = xf.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    val points = lloydPoints(pts, residual).persist()
+    val Array(gf, idf, _, _, _) = pts.schema.fields
+    val points = lloydPoints(pts).persist()
     try {
-      val table = lloydRounds(points, residual)
+      val table = lloydRounds(points, residual = false)
       val assign = s.createDataFrame(points.map { p =>
           val (k, d2) = nearest(p.xq, table(p.group))
           Row(p.group, p.id, k, d2)
@@ -227,7 +226,7 @@ object Reduce {
 
   /** Memoized FULL grid-Lloyd training — (assignment, final centroids)
     * — keyed by (dir, tag, kvals). The clustering queries and the
-    * IVF/PQ index families consume this: in production the trained
+    * IVF index family consume this: in production the trained
     * coarse quantizer is persisted index state, rebuilt only when the
     * corpus changes, and every index query rides it. Before this, the
     * warm bench column exposed that ann_ivf_* re-ran the whole training
@@ -246,8 +245,7 @@ object Reduce {
     *   "raw" — the full-precision embeddings corpus, projected
     *           (vec_id, v) (lloydClusters / lloydElbow /
     *           lloydTransitions / lloydAri, Ann.annIvfTopk /
-    *           ivfCellBalance / ivfNprobeSweep, Quantize PQ/IVFPQ
-    *           coarse steps)
+    *           ivfCellBalance / ivfNprobeSweep)
     *   "sq"  — the int8-dequantized corpus (Quantize.annIvfSqTopk
     *           via Ann.ivfTopkFrom; bit-exact dequantized values)
     * Introducing a new corpus variant REQUIRES a new tag — never reuse
@@ -361,8 +359,8 @@ object Reduce {
     // the split history, so the corpus persists once for all splits.
     val points = lloydPoints(Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      .select(lit(1L), col("vec_id"), col("v"), gridded("v"), pmod(col("vec_id"), lit(2L))),
-      residual = false).persist()
+      .select(lit(1L), col("vec_id"), col("v"), gridded("v"), pmod(col("vec_id"), lit(2L))))
+      .persist()
     try {
       var splits = Vector.empty[(Long, LloydCents)]
       for (_ <- 1 to BisectSplits) {

@@ -1,8 +1,14 @@
 package graft.sim
 
+import scala.jdk.CollectionConverters._
+
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.functions.QuantOuterProduct.q
+import graft.ml.Reduce.{LloydCents, LloydPoint, lloydRounds, nearest, sqDist}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Int8 scalar quantization (SQ8) of the embedding corpus — the
   * storage/memory lever every corpus-scale ANN deployment pulls first
@@ -113,219 +119,164 @@ object Quantize {
         .withColumn("nrm", sqrt(dot(col("v"), col("v")))))
 
   // ---------------------------------------------------------------
-  // 230. product quantization + ADC (Jégou et al. 2011; faiss PQ) —
-  // the missing member of the quantization family (SQ8 #192-194 keeps
-  // d bytes/vector; PQ keeps m SUB-vector codes: 8 codes × 4 bits here
-  // = 4 bytes/vector, 64× smaller than float32; m=4/16-dim measured
-  // recall@10 0.11 on this corpus, m=8 clears the ≥0.25 GraphOpsSpec
-  // floor — the m-vs-memory lever). m=8 subspaces of 8 dims, 16
-  // centroids per subspace trained by the SAME fixed-3-round
-  // integer-grid Lloyd as IVF (vec_id mod 16 init, quantized centroid
-  // sums, BIGINT d² argmin with (d2, k) total order — the
-  // Reduce.gridLloyd contract keyed by subspace instead of kval, so
-  // the whole train+encode+search path replays in DuckDB). ADC: each
-  // query precomputes a 4×16 integer distance table (one broadcast-
-  // sized frame); corpus distance = Σ_sub dtab[sub, code] — the scan
-  // touches only the 4 codes per vector, never the floats. All
-  // arithmetic BIGINT end to end → hash-checked.
+  // 230 / 258 / 276. Product quantization with asymmetric-distance
+  // search (Jégou et al. 2011; faiss PQ, IVFPQ and its residual
+  // default). m = 8 subspaces of 8 dims, 16 centroids each: 8 codes ×
+  // 4 bits = 4 bytes/vector, 64× smaller than float32 (m = 4 measured
+  // recall@10 0.11 on this corpus, m = 8 clears GraphOpsSpec's 0.25
+  // floor). The three queries share one index shape and one scan:
+  //  - ann_pq_topk scores every vector;
+  //  - ann_ivfpq_topk (#258) probes the nprobe = 4 nearest of the 16
+  //    coarse cells and scores the raw-vector codes in them;
+  //  - ann_ivfpq_residual_topk (#276) encodes the residual
+  //    r = xq − ccq(cell) instead, which spends the 16 codewords on the
+  //    within-cell variance the coarse cells leave: better recall at
+  //    the same bytes/vector.
+  // Training reads the corpus once as long arrays on both grids,
+  // x = q(v·1e6) for centroid sums and xq = q(v·1000) for distances.
+  // The coarse quantizer and the 8 codebooks train as 9 groups of the
+  // same Reduce.lloydRounds jobs; Lloyd groups are independent, so
+  // every table equals its separate training (vec_id mod 16 init,
+  // quantized centroid sums, BIGINT d² argmin in (d2, k) order, emptied
+  // clusters drop out). Residual codebooks run a second set of rounds
+  // on xq − ccq(cell) under the residual rule cq = round(Σr / n).
+  // Search: per query (vec_id mod 50 = 0) the driver builds the probe
+  // list — cells in (d2, cell) order — and an integer ADC table
+  // d²(sub, k), one per probed cell for residual codes. One
+  // mapPartitions job encodes each vector (cell and 8 codes), scores it
+  // against every query that probes its cell, except the query itself,
+  // as adc = Σ_sub table(sub, code), and keeps a TopKBuffer(10) per
+  // query under (adc asc, vec_id asc); the driver merges the
+  // partitions' buffers. Every quantity is a BIGINT and adc ≪ 2^53, so
+  // the buffer's −adc double is exact; with both orders total, the
+  // result replays in DuckDB bit for bit and is hash-checked.
   private val PqSubs = 8
   private val PqSubDim = 8
   private val PqK = 16
+  /** The coarse quantizer's group key beside the codebooks 0 until PqSubs. */
+  private val Coarse = PqSubs
 
-  /** PQ training state, memoized per (session, dir) — the lloydState
-    * contract: (sub-vector grid table, final codes, final codebooks);
-    * consumed by #230 and the IVF+PQ composition #258. Codebooks train
-    * on the Reduce.gridLloydFit round primitive, one group per subspace. */
+  /** One corpus vector on the sum grid (`x`) and the distance grid (`xq`). */
+  private final case class GridVec(id: Long, x: Array[Long], xq: Array[Long])
+
+  /** A trained PQ index, the persisted state the queries fan out from:
+    * the coarse cells, one codebook per subspace, the query vectors, and
+    * the encoded corpus (vec_id, cell, codes). The corpus persists on
+    * its first scan, which then releases the `raw` vectors. */
+  private final case class PqIndex(cells: LloydCents, books: Array[LloydCents],
+      queries: Array[GridVec], raw: RDD[GridVec], corpus: RDD[(Long, Long, Array[Byte])])
+
+  private val NoCents = LloydCents(Array.empty, Array.empty, Array.empty, Array.empty)
+
   private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Unit), (DataFrame, DataFrame, DataFrame)]()
+    (SparkSession, String, Long, Boolean), PqIndex]()
   graft.api.Memo.register(() => pqCache.clear())
 
-  private def pqState(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    graft.api.Memo.stamped(pqCache, s, dir, ()) {
-      val vecs = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      def subVectors(df: DataFrame): DataFrame = df
-        .withColumn("sub", explode(array((0 until PqSubs).map(lit(_)): _*)))
-        .select(col("vec_id"), col("sub"),
-          expr(s"slice(v, sub * $PqSubDim + 1, $PqSubDim)").as("sv"))
-        .withColumn("xq", expr("transform(sv, x -> CAST(round(x * 1000, 0) AS BIGINT))"))
-      val (codes, cents) = graft.ml.Reduce.gridLloydFit(
-        subVectors(graft.api.Analytics.spread(vecs))
-          .select(col("sub"), col("vec_id"), col("sv"), col("xq"),
-            pmod(col("vec_id"), lit(PqK.toLong))))
-      (subVectors(vecs), codes.select(col("vec_id"), col("sub"), col("k")), cents)
+  private def subVec(v: Array[Long], sub: Int): Array[Long] =
+    v.slice(sub * PqSubDim, (sub + 1) * PqSubDim)
+
+  private def cellCq(cells: LloydCents, cell: Long): Array[Long] = cells.cq(cells.k.indexOf(cell))
+
+  private def minus(a: Array[Long], b: Array[Long]): Array[Long] =
+    Array.tabulate(a.length)(i => a(i) - b(i))
+
+  /** The index over raw-vector codes, or over residual codes. */
+  private def pqIndex(s: SparkSession, dir: String, residual: Boolean): PqIndex =
+    graft.api.Memo.stamped(pqCache, s, dir, residual) {
+      val raw = graft.api.Analytics.spread(Tables.embeddings(s, dir)
+          .filter(col("vec_id").isNotNull && col("embedding").isNotNull)
+          .select(col("vec_id"), col("embedding").cast("array<double>")))
+        .queryExecution.toRdd.map { r =>
+          val v = r.getArray(1).toDoubleArray()
+          GridVec(r.getLong(0), v.map(x => q(x * 1e6)), v.map(x => q(x * 1000)))
+        }.persist()
+      val queries = raw.filter(v => Math.floorMod(v.id, 50L) == 0).collect()
+      def codebookPoints(id: Long, x: Array[Long], xq: Array[Long]) =
+        (0 until PqSubs).iterator.map(sub => LloydPoint(sub, id, subVec(x, sub), subVec(xq, sub),
+          Math.floorMod(id, PqK.toLong)))
+      def coarsePoint(v: GridVec) =
+        LloydPoint(Coarse, v.id, v.x, v.xq, Math.floorMod(v.id, Ann.IvfCells.toLong))
+      val (cells, books) =
+        if (!residual) {
+          val t = lloydRounds(raw.flatMap(v =>
+            Iterator(coarsePoint(v)) ++ codebookPoints(v.id, v.x, v.xq)), residual = false)
+          (t.getOrElse(Coarse, NoCents), t)
+        } else {
+          val cells = lloydRounds(raw.map(coarsePoint), residual = false).getOrElse(Coarse, NoCents)
+          (cells, lloydRounds(raw.flatMap { v =>
+            val r = minus(v.xq, cellCq(cells, nearest(v.xq, cells)._1))
+            codebookPoints(v.id, r, r)
+          }, residual = true))
+        }
+      val book = Array.tabulate(PqSubs)(books.getOrElse(_, NoCents))
+      val corpus = raw.map { v =>
+        val cell = nearest(v.xq, cells)._1
+        val xq = if (residual) minus(v.xq, cellCq(cells, cell)) else v.xq
+        (v.id, cell, Array.tabulate(PqSubs)(sub => nearest(subVec(xq, sub), book(sub))._1.toByte))
+      }.persist()
+      PqIndex(cells, book, queries, raw, corpus)
     }
 
-  /** Per-query ADC distance tables (qid, sub, k, d2) over the final
-    * codebooks — broadcast-sized (|queries| x m x PqK integers). */
-  private def pqDtab(base: DataFrame, cents: DataFrame): DataFrame =
-    base.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("qid"), col("sub"), col("xq").as("qxq"))
-      .join(broadcast(cents.select(col("sub"), col("k"), col("cq"))), Seq("sub"))
-      .select(col("qid"), col("sub"), col("k"),
-        expr("aggregate(zip_with(qxq, cq, (a, b) -> (a - b) * (a - b)), 0L, (s, e) -> s + e)")
-          .as("d2"))
+  /** The schema the three queries have always declared (qid and
+    * adc_d2 nullable), kept for their consumers. */
+  private val PqSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = true),
+    StructField("neighbor_id", LongType, nullable = false),
+    StructField("adc_d2", LongType, nullable = true),
+    StructField("rk", LongType, nullable = false)))
 
-  def annPqTopk(s: SparkSession, dir: String): DataFrame = {
-    val (base, g, cents) = pqState(s, dir)
-    val dtab = pqDtab(base, cents)
-    // ADC max = m subs x subdim dims x (grid delta)^2 << 2^53: the -d
-    // double score in the bounded-heap top-k is exact, ties by smaller
-    // vec_id — the oracle's (adc asc, nid asc) total order.
-    val scored = g.join(broadcast(dtab), Seq("sub", "k"))
-      .filter(col("vec_id") =!= col("qid"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc"))
-    scored.groupBy(col("qid"))
-      .agg(graft.functions.VectorFunctions
-        .topKByScore(-col("adc").cast("double"), col("vec_id"), 10).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("qid"), col("e.id").as("neighbor_id"),
-        (-col("e.score")).cast("long").as("adc_d2"),
-        (col("pos") + 1).cast("long").as("rk"))
-  }
-
-  // ---------------------------------------------------------------
-  // 258. IVF + PQ — the complete faiss IVFPQ recipe (#194 was IVF+SQ8):
-  // the grid-Lloyd coarse quantizer prunes the scan to nprobe=4 of 16
-  // cells, and the scan itself reads only the 4-byte PQ codes through
-  // the query's ADC table. Both trainings are the shared deterministic
-  // grid pipelines, so the whole composed index replays in DuckDB.
-  // (Codes are over raw vectors, not residuals — the residual variant
-  // needs a second codebook conditioned on the cell; documented trade.)
-  def annIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
-    val (base, codes, cents) = pqState(s, dir)
-    val dtab = pqDtab(base, cents)
-    val vecs = graft.api.Analytics.spread(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
-    val (assign, icents) = graft.ml.Reduce.gridLloydMemo(s, dir, "raw",
-      Seq(Ann.IvfCells))(vecs.select(col("vec_id"), col("v")))
-    val qs = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("qid"),
-        expr("transform(v, x -> CAST(round(x * 1000, 0) AS BIGINT))").as("qxq"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("d2").asc, col("cell").asc)
-    val probed = qs.crossJoin(broadcast(icents.select(col("k").as("cell"), col("cq"))))
-      .withColumn("d2",
-        expr("aggregate(zip_with(qxq, cq, (a, b) -> (a - b) * (a - b)), 0L, (s, e) -> s + e)"))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= 4)
-      .select(col("qid"), col("cell"))
-    val cand = assign.select(col("vec_id"), col("k").as("cell"))
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"))
-    val scored = cand
-      .join(codes, "vec_id")
-      .join(broadcast(dtab), Seq("qid", "sub", "k"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc"))
-    scored.groupBy(col("qid"))
-      .agg(graft.functions.VectorFunctions
-        .topKByScore(-col("adc").cast("double"), col("vec_id"), 10).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("qid"), col("e.id").as("neighbor_id"),
-        (-col("e.score")).cast("long").as("adc_d2"),
-        (col("pos") + 1).cast("long").as("rk"))
-  }
-
-
-  // ---------------------------------------------------------------
-  // 276. residual-encoded IVFPQ — the actual faiss IVFPQ default
-  // (#258 encodes raw vectors; r6 verdict item 7): PQ codebooks are
-  // trained on RESIDUALS r = v − centroid(cell), which concentrates
-  // the quantizer's 16 codewords on the within-cell variance instead
-  // of re-spending them on the coarse structure the IVF already
-  // captured — measurably better recall at identical bytes/vector.
-  // Determinism: residuals are BIGINT differences on the shared 1e-3
-  // grid (xq − cq, both already quantized), residual centroids are
-  // one round(sum/n) per dim, d² argmin keeps the (d2, k) total
-  // order — the whole train+encode+probe+ADC path replays in DuckDB.
-  // The query-side ADC table is per (query, probed cell): residual of
-  // the query against THAT cell's centroid — |q|·nprobe·m·PqK rows,
-  // still broadcast-sized.
-  /** Residual-PQ training state, memoized per (session, dir) — the
-    * persisted-index contract (same as pqState): (corpus with grid
-    * codes, cell assignment, coarse centroids, residual codes, residual
-    * codebooks). The r9 warm column showed this query's cost was ~all
-    * training (warm 6.85 ~= suite 6.87): the state memo existed for the
-    * flat-PQ path but the residual training re-ran per run. */
-  private val residualCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long, Unit),
-    (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame)]()
-  graft.api.Memo.register(() => residualCache.clear())
-
-  private def residualState(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    graft.api.Memo.stamped(residualCache, s, dir, ()) {
-      val vecs = graft.api.Analytics.spread(
-          Tables.embeddings(s, dir)
-            .select(col("vec_id"), col("embedding").cast("array<double>").as("v")))
-        .withColumn("xq", expr("transform(v, x -> CAST(round(x * 1000, 0) AS BIGINT))"))
-        .localCheckpoint() // coarse train + residual train + query passes
-      val (assign, icents) = graft.ml.Reduce.gridLloydMemo(s, dir, "raw",
-        Seq(Ann.IvfCells))(vecs.select(col("vec_id"), col("v")))
-      val cells = assign.select(col("vec_id"), col("k").as("cell"))
-      val ccq = icents.select(col("k").as("cell"), col("cq").as("ccq"))
-      // residual sub-vectors on the integer grid: rq = xq − ccq(cell),
-      // trained by the residual rule of the round primitive (exact long
-      // sums, one round(sq / n) per dim, (d2, k) argmin order)
-      val residuals = vecs.select(col("vec_id"), col("xq"))
-        .join(cells, "vec_id")
-        .join(broadcast(ccq), Seq("cell"))
-        .withColumn("rxq", expr("zip_with(xq, ccq, (a, b) -> a - b)"))
-        .withColumn("sub", explode(array((0 until PqSubs).map(lit(_)): _*)))
-        .select(col("sub"), col("vec_id"),
-          expr(s"slice(rxq, sub * $PqSubDim + 1, $PqSubDim)").as("rq"))
-      val (codes, rcents) = graft.ml.Reduce.gridLloydFit(
-        residuals.select(col("sub"), col("vec_id"), col("rq"), col("rq"),
-          pmod(col("vec_id"), lit(PqK.toLong))))
-      (vecs, cells, icents, codes.select(col("vec_id"), col("sub"), col("k")),
-        rcents.withColumnRenamed("cq", "rcq"))
+  /** Top-10 ADC neighbours of every query among the vectors in its
+    * `nprobe` nearest cells, in one scan of the encoded corpus. */
+  private def pqSearch(s: SparkSession, dir: String, residual: Boolean, nprobe: Int): DataFrame = {
+    val ix = pqIndex(s, dir, residual)
+    /** d²(sub, k) at sub·PqK + k for the query vector `xq`. */
+    def adcTable(xq: Array[Long]): Array[Long] = {
+      val t = new Array[Long](PqSubs * PqK)
+      for (sub <- 0 until PqSubs; b = ix.books(sub); j <- b.k.indices)
+        t(sub * PqK + b.k(j).toInt) = sqDist(subVec(xq, sub), b.cq(j))
+      t
     }
-
-  def annIvfPqResidualTopk(s: SparkSession, dir: String): DataFrame = {
-    val (vecs, cells, icents, g, rcents) = residualState(s, dir)
-    val ccq = icents.select(col("k").as("cell"), col("cq").as("ccq"))
-    // query side: probe 4 cells on the raw grid, then per probed cell
-    // build the residual ADC table against that cell's centroid
-    val qs = vecs.filter(pmod(col("vec_id"), lit(50)) === 0)
-      .select(col("vec_id").as("qid"), col("xq").as("qxq"))
-    val wProbe = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("d2").asc, col("cell").asc)
-    val probed = qs.crossJoin(broadcast(icents.select(col("k").as("cell"), col("cq"))))
-      .withColumn("d2",
-        expr("aggregate(zip_with(qxq, cq, (a, b) -> (a - b) * (a - b)), 0L, (s, e) -> s + e)"))
-      .withColumn("prk", row_number().over(wProbe))
-      .filter(col("prk") <= 4)
-      .select(col("qid"), col("cell"))
-    val dtab = qs.join(broadcast(probed), "qid")
-      .join(broadcast(ccq), Seq("cell"))
-      .withColumn("rq_full", expr("zip_with(qxq, ccq, (a, b) -> a - b)"))
-      .withColumn("sub", explode(array((0 until PqSubs).map(lit(_)): _*)))
-      .select(col("qid"), col("cell"), col("sub"),
-        expr(s"slice(rq_full, sub * $PqSubDim + 1, $PqSubDim)").as("qrq"))
-      .join(broadcast(rcents), Seq("sub"))
-      .select(col("qid"), col("cell"), col("sub"), col("k"),
-        expr("aggregate(zip_with(qrq, rcq, (a, b) -> (a - b) * (a - b)), 0L, (s, e) -> s + e)")
-          .as("d2"))
-    val cand = cells.join(broadcast(probed), Seq("cell"))
-      .filter(col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("cell"), col("vec_id"))
-    val scored = cand
-      .join(g, "vec_id")
-      .join(broadcast(dtab), Seq("qid", "cell", "sub", "k"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc"))
-    scored.groupBy(col("qid"))
-      .agg(graft.functions.VectorFunctions
-        .topKByScore(-col("adc").cast("double"), col("vec_id"), 10).as("tk"))
-      .select(col("qid"), posexplode(col("tk")).as(Seq("pos", "e")))
-      .select(col("qid"), col("e.id").as("neighbor_id"),
-        (-col("e.score")).cast("long").as("adc_d2"),
-        (col("pos") + 1).cast("long").as("rk"))
+    // cell -> (query index, ADC table) of every query probing it
+    val byCell = ix.queries.zipWithIndex.flatMap { case (qv, qi) =>
+      val probed = ix.cells.k.indices.map(j => (sqDist(qv.xq, ix.cells.cq(j)), ix.cells.k(j)))
+        .sorted.take(nprobe).map(_._2)
+      lazy val flat = adcTable(qv.xq)
+      probed.map(c => c -> (qi, if (residual) adcTable(minus(qv.xq, cellCq(ix.cells, c))) else flat))
+    }.groupMap(_._1)(_._2)
+    val qids = ix.queries.map(_.id)
+    val bc = s.sparkContext.broadcast((qids, byCell))
+    val partials = try ix.corpus.mapPartitions { it =>
+        val (qids, byCell) = bc.value
+        val heaps = Array.fill(qids.length)(new graft.functions.TopKBuffer(10))
+        it.foreach { case (id, cell, codes) =>
+          byCell.getOrElse(cell, Array.empty[(Int, Array[Long])]).foreach { case (qi, t) =>
+            if (qids(qi) != id) {
+              var adc = 0L; var sub = 0
+              while (sub < PqSubs) { adc += t(sub * PqK + codes(sub)); sub += 1 }
+              heaps(qi).insert(-adc.toDouble, id)
+            }
+          }
+        }
+        heaps.iterator.zipWithIndex.filter(_._1.size > 0)
+          .map { case (h, qi) => (qi, h.sorted) }
+      }.collect()
+      finally { bc.destroy(); ix.raw.unpersist(blocking = false) }
+    val merged = Array.fill(qids.length)(new graft.functions.TopKBuffer(10))
+    partials.foreach { case (qi, kept) => kept.foreach { case (id, sc) => merged(qi).insert(sc, id) } }
+    val rows = merged.indices.flatMap { qi =>
+      merged(qi).sorted.zipWithIndex.map { case ((id, sc), r) => Row(qids(qi), id, (-sc).toLong, r + 1L) }
+    }
+    s.createDataFrame(rows.asJava, PqSchema)
   }
+
+  def annPqTopk(s: SparkSession, dir: String): DataFrame =
+    pqSearch(s, dir, residual = false, nprobe = Ann.IvfCells)
+
+  def annIvfPqTopk(s: SparkSession, dir: String): DataFrame =
+    pqSearch(s, dir, residual = false, nprobe = 4)
+
+  def annIvfPqResidualTopk(s: SparkSession, dir: String): DataFrame =
+    pqSearch(s, dir, residual = true, nprobe = 4)
 
   /** PQ train/encode/ADC oracle: the lloydPrefixSql shape keyed by
     * (sub) instead of (kval). */

@@ -5,6 +5,19 @@ import org.apache.spark.sql.functions._
 /** Generic-API semantics on hand-checkable inputs. */
 class AnalyticsSpec extends SparkSpecBase {
 
+  test("spread reads a maxPartitionBytes given with a unit suffix") {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "64m")
+    try {
+      val emb = Tables.embeddings(spark, sf)
+      // one small file is one split, under the spec session's 4 cores
+      val spread = api.Analytics.spread(emb)
+      assert(spread.rdd.getNumPartitions == spark.sparkContext.defaultParallelism)
+      assert(spread.count() == emb.count())
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("saltedAggregate equals plain groupBy on skewed data") {
     import spark.implicits._
     // one hot key (90% of rows) + a tail

@@ -4,7 +4,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
-/** The shared grid-Lloyd round primitive (`Reduce.gridLloydFit`) on a
+/** The shared grid-Lloyd round primitive (`Reduce.lloydRounds`) on a
   * hand-built fixture whose every centroid and assignment is worked out
   * below, plus the job budget of the training behind kmeans_clusters. */
 class LloydRoundSpec extends SparkSpecBase {
@@ -64,19 +64,16 @@ class LloydRoundSpec extends SparkSpecBase {
   test("grid-Lloyd primitive: residual vectors average as round(sum / n)") {
     // one group, k0 = id mod 2; sums 3 and -5 over two points each:
     // 1.5 → 2 and -2.5 → -3, then the argmin settles on the same split
-    val rows = Seq(
-      Row(7, 1L, Seq(1L), Seq(1L), 0L), Row(7, 2L, Seq(2L), Seq(2L), 0L),
-      Row(7, 3L, Seq(-2L), Seq(-2L), 1L), Row(7, 4L, Seq(-3L), Seq(-3L), 1L))
-    val rschema = StructType(Seq(
-      StructField("sub", IntegerType), StructField("id", LongType),
-      StructField("rq", ArrayType(LongType)), StructField("rq2", ArrayType(LongType)),
-      StructField("k0", LongType)))
-    val (assign, cents) = ml.Reduce.gridLloydFit(
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), rschema))
-    assert(cents.columns.toSeq == Seq("sub", "k", "cv", "cq"))
-    assert(cents.collect().map(r => r.getLong(1) -> (r.getSeq[Double](2), r.getSeq[Long](3))).toMap ==
-      Map(0L -> (Seq(1.5), Seq(2L)), 1L -> (Seq(-2.5), Seq(-3L))))
-    assert(assign.collect().map(r => r.getLong(1) -> (r.getLong(2), r.getLong(3))).toMap ==
+    import ml.Reduce.{LloydPoint, lloydRounds, nearest}
+    val pts = Seq((1L, 1L, 0L), (2L, 2L, 0L), (3L, -2L, 1L), (4L, -3L, 1L))
+      .map { case (id, r, k0) => LloydPoint(7, id, Array(r), Array(r), k0) }
+    val table = lloydRounds(spark.sparkContext.parallelize(pts, 2), residual = true)
+    assert(table.keySet == Set(7))
+    val c = table(7)
+    assert(c.k.toSeq == Seq(0L, 1L) && c.n.toSeq == Seq(2L, 2L))
+    assert(c.cv.map(_.toSeq).toSeq == Seq(Seq(1.5), Seq(-2.5)))
+    assert(c.cq.map(_.toSeq).toSeq == Seq(Seq(2L), Seq(-3L)))
+    assert(pts.map(p => p.id -> nearest(p.xq, c)).toMap ==
       Map(1L -> (0L, 1L), 2L -> (0L, 0L), 3L -> (1L, 1L), 4L -> (1L, 0L)))
   }
 

@@ -403,9 +403,6 @@ class PlanSpec extends SparkSpecBase {
       // ivf_cell_balance attaches the 1-row totals agg to the 16-row
       // cell counts — scalar attach, not a pair join
       "ivf_cell_balance",
-      // ann_ivfpq_topk / _residual cross queries with the 16-row
-      // centroid broadcast for probing (the ann_ivf_topk shape)
-      "ann_ivfpq_topk", "ann_ivfpq_residual_topk",
       // ppr_knn's exact feed rides the brute-force scorer (pagerank_knn
       // precedent); the _lsh twin is the scale feed
       "ppr_knn",
