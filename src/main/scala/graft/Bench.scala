@@ -1,72 +1,18 @@
 package graft
 import scala.jdk.CollectionConverters._
 
-/** Per-round benchmark main: times the headline queries at
-  * SPARK_GRAFT_SF_DIR, one JSON line on stdout.
+/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR
+  * and prints one JSON line on stdout.
   *
-  * The set below is every registered operator EXCEPT:
-  *  - dedup_ngram_jaccard: the deliberately-exact inverted-index
-  *    baseline — Σ df² ≈ 1.5e9 intermediate rows at sf0.1 on this
-  *    pathologically low-vocab corpus. Its production/scale twin
-  *    dedup_minhash_lsh IS benchmarked (same output, LSH-bounded work).
-  *  - dedup_components: consumes the exact pair list above, skipped for
-  *    the same reason; its scale twin dedup_components_lsh (same
-  *    component logic over LSH pairs) IS benchmarked.
-  * (The r6 grid-Lloyd/grid-PCA graduations removed the old MLlib
-  * skips — every clustering/reduction query is now a pure DataFrame
-  * pipeline and is benchmarked.)
+  * A query whose `Op` declares an `untimed` reason is left out: the
+  * exact oracle paths whose work grows super-linearly by design (their
+  * LSH or binned scale twins are timed), the queries and the calibration
+  * audit that consume their output, and the streaming replay lane, which
+  * collects the fact table to the driver. `--list-skip` prints them.
   * Results are fully materialized through a noop datasource sink (not
   * count(), which would let Spark skip projection work).
   */
 object Bench {
-  private val skip = Set(
-    "dedup_ngram_jaccard", "dedup_components", "dedup_containment",
-    "dup_pairs_by_source",
-    // offline calibration audit whose TRUTH side is the exact
-    // inverted-index pair set above — same quarantine; the production
-    // banding path it tunes (dedup_minhash_lsh) IS benchmarked
-    "minhash_bands_sweep",
-    // exact BNL oracle paths of #206/#218: each broadcasts an entire
-    // batch (≈half the embedding corpus) as the small side — fine at
-    // sf0.1, quadratic at a larger gate SF. Their _lsh scale twins ARE
-    // benchmarked (same output contract, bounded bucket fan-out) —
-    // the dedup_ngram_jaccard convention.
-    "mnn_pairs", "bitext_margin_mining",
-    // exact-ECDF oracle twin of #94: per-pair window partitions over
-    // DISTINCT VALUES approach |rows| on continuous data (r7 verdict
-    // item 2). Its pre-binned scale twin pairwise_ks_binned (≤256-row
-    // partitions by construction) IS benchmarked.
-    "pairwise_ks",
-    // exact all-pairs cosine oracle paths (r10 verdict item 3): the
-    // sf0.1→sf1 table measured them at 19.1×/19.4×/15.7× on 10× data —
-    // super-linear BY DESIGN (each point scores every other point).
-    // Their `_lsh` production twins (2.3×/5.4×/2.8× on the same table)
-    // ARE benchmarked — the dedup_ngram_jaccard convention.
-    "dbscan_embeddings", "local_lisi", "dedup_embedding",
-    // the 15 exact kNN-graph feed queries (r12 verdict item 2): every
-    // one sits on Ann.knnEdges(exact=true), which scores ALL pairs —
-    // O(n²) by design (the DuckDB-checkable oracle feed). The r12 sf3
-    // octave measured the asymptote on 3× data: snn_graph 22.4×,
-    // knn_da_screen 8.7×, knn_components 8.4×, knn_assortativity 8.1×,
-    // knn_label_noise 6.6× (n² on 3× = 9×). Their `_lsh` twins — same
-    // graph logic over hyperplane-bucketed candidate edges, sub-n² at
-    // sf3 (knn_label_noise_lsh 4.8×) — ARE benchmarked: the
-    // dbscan/local_lisi/dedup_embedding convention.
-    "kcore_knn", "knn_assortativity", "knn_bfs_dists",
-    "knn_clustering_coeff", "knn_components", "knn_da_screen",
-    "knn_label_noise", "label_prop_knn", "leiden_refine", "louvain_knn",
-    "louvain_snn", "modularity_score", "pagerank_knn", "ppr_knn",
-    "snn_graph",
-    // the streaming replay lane (r10 verdict item 8): correctness-gate
-    // entries that collect the fact table to a driver-side MemoryStream
-    // — by construction not a scale path; the batch twins
-    // (windowed_events, sessionize_events, active_users, psi_drift,
-    // range_join_clicks, filter_decision) carry the scale numbers
-    "stream_windowed_replay", "stream_sessionize_replay",
-    "stream_dau_replay", "stream_psi_replay", "stream_ingest_filter_replay",
-    "stream_click_attribution_replay", "stream_funnel_replay",
-    "stream_neardup_replay")
-
   /** Parse a previous round's bench artifact into name → seconds.
     * Accepts BOTH artifact shapes: the builder's raw full map AND the
     * driver's wrapper, whose JSON line sits ESCAPED inside a "tail"
@@ -108,13 +54,10 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // "--list-skip": print the skip set (one name per line) and exit —
-    // tools/close_round.sh derives the timed-query set from THIS, not
-    // from regex-scraping the Set literal above (r13 ADVICE: the
-    // scrape stopped at the first comment line ending in ')', seeing
-    // 8 of the 34 names and failing the coverage gate spuriously).
+    // "--list-skip": print the untimed names (one per line) and exit;
+    // tools/close_round.sh derives the timed-query set from this
     if (args.headOption.contains("--list-skip")) {
-      skip.toSeq.sorted.foreach(println)
+      SparkEntry.ops.filter(_.untimed.isDefined).map(_.name).sorted.foreach(println)
       return
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -131,10 +74,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     // each query also reports whether its cold runs built memoized state
-    val suite = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => skip.contains(q._1))
-      .filter(q => only.forall(_.contains(q._1)))
-      .map { case (name, fn) =>
+    val suite = SparkEntry.timed.filter(o => only.forall(_.contains(o.name)))
+      .map { case Op(name, fn, _, _, _, _) =>
         val builds0 = graft.api.Memo.builds
         val times = (1 to runs).map { _ =>
           val t0 = System.nanoTime()

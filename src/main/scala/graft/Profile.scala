@@ -17,6 +17,9 @@ import scala.collection.mutable
   *
   *   runMain graft.Profile q1,q2,...|all
   *
+  * `all` profiles the queries Bench times; a name given explicitly runs
+  * whether Bench times it or not.
+  *
   * SPARK_GRAFT_PROFILE_SQL=true also prints the per-operator SQL
   * metrics of each query's last execution (the SQL tab's stand-in).
   */
@@ -61,7 +64,7 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val names: Seq[String] =
-      if (args.isEmpty || args(0) == "all") SparkEntry.queries.keys.toSeq.sorted
+      if (args.isEmpty || args(0) == "all") SparkEntry.timed.map(_.name)
       else args(0).split(",").map(_.trim).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession()

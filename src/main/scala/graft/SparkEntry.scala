@@ -2,47 +2,31 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Query registry: each implemented operator from SURVEY.md §2 exposes a
-  * `(SparkSession, sfDir) => DataFrame` plus (where SQL-expressible) a
-  * DuckDB oracle over the same parquet tables.
+/** The query registry: every module's ops in one sequence. Each query
+  * is a `(SparkSession, sfDir) => DataFrame` with either a DuckDB oracle
+  * over the same parquet tables or a declared rows-only reason (see
+  * `Op`). Bench, Profile, Verify, Explain and the specs all read it.
   */
-object SparkEntry {
+object SparkEntry extends Op.Registry {
 
-  private val registry: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
-    Seq(
-      (core.Relational.queries, core.Relational.oracles),
-      (sc.SingleCell.queries, sc.SingleCell.oracles),
-      (sc.BulkQc.queries, sc.BulkQc.oracles),
-      (sc.Annotate.queries, sc.Annotate.oracles),
-      (sc.Trajectory.queries, sc.Trajectory.oracles),
-      (sc.Integrate.queries, sc.Integrate.oracles),
-      (text.TextOps.queries, text.TextOps.oracles),
-      (text.Batching.queries, text.Batching.oracles),
-      (text.Vocab.queries, text.Vocab.oracles),
-      (text.Clean.queries, text.Clean.oracles),
-      (text.Classify.queries, text.Classify.oracles),
-      (dedup.Dedup.queries, dedup.Dedup.oracles),
-      (sim.Ann.queries, sim.Ann.oracles),
-      (sim.GraphOps.queries, sim.GraphOps.oracles),
-      (sim.Quantize.queries, sim.Quantize.oracles),
-      (ml.Reduce.queries, ml.Reduce.oracles),
-      (multimodal.Multimodal.queries, multimodal.Multimodal.oracles),
-      (core.Sessions.queries, core.Sessions.oracles),
-      (core.Scores.queries, core.Scores.oracles),
-      (streaming.StreamReplay.queries, streaming.StreamReplay.oracles)
-    )
+  val ops: Seq[Op] = {
+    val all = Seq[Op.Registry](core.Relational, sc.SingleCell, sc.BulkQc, sc.Annotate,
+      sc.Trajectory, sc.Integrate, text.TextOps, text.Batching, text.Vocab, text.Clean,
+      text.Classify, dedup.Dedup, sim.Ann, sim.GraphOps, sim.Quantize, ml.Reduce,
+      multimodal.Multimodal, core.Sessions, core.Scores, streaming.StreamReplay)
+      .flatMap(_.ops)
+    val dups = all.groupBy(_.name).collect { case (n, os) if os.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query names in the registry: ${dups.toSeq.sorted.mkString(", ")}")
+    all
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     core.Relational.q5RegionRevenue(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map(_._1).reduce(_ ++ _)
+  /** The ops Bench times, by name. */
+  def timed: Seq[Op] = ops.filter(_.untimed.isEmpty).sortBy(_.name)
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    registry.map(_._2).reduce(_ ++ _)
+  /** Oracle SQL by query name; rows-only queries have no entry. */
+  def oracleSql: Map[String, String] = ops.flatMap(o => o.oracleSql.map(o.name -> _)).toMap
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * Spark plans. Scale notes per operator inline; dims are broadcast,
   * facts shuffle once on their natural key.
   */
-object Relational {
+object Relational extends Op.Registry {
 
   /** Round doubles at the END of a pipeline so the DuckDB-oracle hash
     * compare is stable against summation-order fp jitter. */
@@ -1187,80 +1187,47 @@ object Relational {
                    ELSE 'C' END AS abc_class
        FROM cs"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "abc_analysis"           -> (abcAnalysis _),
-    "join_key_skew"          -> (joinKeySkew _),
-    "profile_table"          -> (profileTable _),
-    "pivot_wide"             -> (pivotWide _),
-    "semi_anti_join"         -> (semiAntiJoin _),
-    "cat_assoc"              -> (catAssoc _),
-    "make_unique_names"      -> (makeUniqueNames _),
-    "rollup_pricing"         -> (rollupPricing _),
-    "cube_pricing"           -> (cubePricing _),
-    "k_anonymity"            -> (kAnonymity _),
-    "dp_noisy_counts"        -> (dpNoisyCounts _),
-    "l_diversity"            -> (lDiversity _),
-    "t_closeness"            -> (tCloseness _),
-    "basket_lift"            -> (basketLift _),
-    "key_sequence_gaps"      -> (keySequenceGaps _),
-    "window_rank_suite"      -> (windowRankSuite _),
-    "price_consistency"      -> (priceConsistency _),
-    "fk_integrity"           -> (fkIntegrity _),
-    "weighted_median"        -> (weightedMedian _),
-    "decile_bins"            -> (decileBins _),
-    "weighted_sample"        -> (weightedSample _),
-    "user_spend_salted"      -> (userSpendSalted _),
-    "q1_pricing_summary"     -> (q1PricingSummary _),
-    "q5_region_revenue"      -> (q5RegionRevenue _),
-    "q3_top_orders"          -> (q3TopOrders _),
-    "topk_parts_per_brand"   -> (topkPartsPerBrand _),
-    "running_customer_spend" -> (runningCustomerSpend _),
-    "label_specificity"      -> (labelSpecificity _),
-    "factor_by_size"         -> (factorBySize _),
-    "crosstab_priority_status" -> (crosstabPriorityStatus _),
-    "melt_lineitem_metrics"  -> (meltLineitemMetrics _),
-    "stratified_sample"      -> (stratifiedSample _),
-    "upset_membership"       -> (upsetMembership _),
-    "asof_purchase_click"    -> (asofPurchaseClick _),
-    "asof_forward_click"     -> (asofForwardClick _),
-    "asof_nearest_click"     -> (asofNearestClick _),
-    "order_fulfillment_latency" -> (fulfillmentLatency _),
-    "discount_band_effect"   -> (discountBandEffect _),
-    "supplier_concentration" -> (supplierConcentration _))
-
-  val oracles: Map[String, String] = Map(
-    "abc_analysis" -> abcAnalysisSql,
-    "join_key_skew" -> joinKeySkewSql,
-    "profile_table" -> profileTableSql,
-    "pivot_wide" -> pivotWideSql,
-    "semi_anti_join" -> semiAntiJoinSql,
-    "cat_assoc" -> catAssocSql,
-    "make_unique_names" ->
+  val ops: Seq[Op] = Seq(
+    Op("abc_analysis", abcAnalysis _, Oracle(abcAnalysisSql),
+      globalWindow = Some("per-part revenue aggregate (catalog-bounded)")),
+    Op("join_key_skew", joinKeySkew _, Oracle(joinKeySkewSql),
+      quadratic = Some("join_key_skew attaches the 1-row totals agg to the 1-row top-10 " +
+        "agg per key column — scalar attaches")),
+    Op("profile_table", profileTable _, Oracle(profileTableSql)),
+    Op("pivot_wide", pivotWide _, Oracle(pivotWideSql)),
+    Op("semi_anti_join", semiAntiJoin _, Oracle(semiAntiJoinSql)),
+    Op("cat_assoc", catAssoc _, Oracle(catAssocSql)),
+    Op("make_unique_names", makeUniqueNames _, Oracle(
       """SELECT p_partkey, p_name,
          CASE WHEN occ = 0 THEN p_name
               ELSE p_name || '.' || CAST(occ AS VARCHAR) END AS unique_name
          FROM (
            SELECT p_partkey, p_name,
                   row_number() OVER (PARTITION BY p_name ORDER BY p_partkey ASC) - 1 AS occ
-           FROM part)""",
-    "cube_pricing" -> cubePricingSql,
-    "k_anonymity" -> kAnonymitySql,
-    "dp_noisy_counts" -> dpNoisyCountsSql,
-    "l_diversity" -> lDiversitySql,
-    "t_closeness" -> tClosenessSql,
-    "basket_lift" -> basketLiftSql,
-    "key_sequence_gaps" -> keySequenceGapsSql,
-    "window_rank_suite" -> windowRankSuiteSql,
-    "price_consistency" -> priceConsistencySql,
-    "fk_integrity" -> fkIntegritySql,
-    "weighted_median" -> weightedMedianSql,
-    "rollup_pricing" ->
+           FROM part)""")),
+    Op("cube_pricing", cubePricing _, Oracle(cubePricingSql)),
+    Op("k_anonymity", kAnonymity _, Oracle(kAnonymitySql),
+      quadratic = Some(Reasons.TotalsAttach)),
+    Op("dp_noisy_counts", dpNoisyCounts _, Oracle(dpNoisyCountsSql)),
+    Op("l_diversity", lDiversity _, Oracle(lDiversitySql)),
+    Op("t_closeness", tCloseness _, Oracle(tClosenessSql),
+      quadratic = Some("t_closeness crosses the |classes| table with the ≤|segments| " +
+        "global-mix scaffold so absent segments contribute their full global mass (the " +
+        "ma_stats bounded-scaffold precedent)")),
+    Op("basket_lift", basketLift _, Oracle(basketLiftSql)),
+    Op("key_sequence_gaps", keySequenceGaps _, Oracle(keySequenceGapsSql),
+      globalWindow = Some("bucketed gap summary (|buckets| rows)")),
+    Op("window_rank_suite", windowRankSuite _, Oracle(windowRankSuiteSql)),
+    Op("price_consistency", priceConsistency _, Oracle(priceConsistencySql)),
+    Op("fk_integrity", fkIntegrity _, Oracle(fkIntegritySql)),
+    Op("weighted_median", weightedMedian _, Oracle(weightedMedianSql)),
+    Op("rollup_pricing", rollupPricing _, Oracle(
       """SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
          coalesce(l_linestatus, 'ALL') AS linestatus,
          count(*) AS n, round(sum(l_quantity), 4) AS sum_qty,
          round(sum(l_extendedprice), 4) AS sum_price
-         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""",
-    "decile_bins" ->
+         FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)""")),
+    Op("decile_bins", decileBins _, Oracle(
       """WITH b AS (
            SELECT quantile_cont(o_totalprice,
              [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]) AS qs FROM orders)
@@ -1268,8 +1235,9 @@ object Relational {
                   q -> CASE WHEN o_totalprice > round(q, 6) THEN 1 ELSE 0 END)) AS BIGINT) AS decile,
                 count(*) AS n, round(min(o_totalprice), 4) AS lo,
                 round(max(o_totalprice), 4) AS hi, round(avg(o_totalprice), 6) AS mean
-         FROM orders, b GROUP BY 1""",
-    "weighted_sample" ->
+         FROM orders, b GROUP BY 1"""),
+      quadratic = Some(Reasons.OneRowTotals)),
+    Op("weighted_sample", weightedSample _, Oracle(
       """WITH u AS (
            SELECT c_mktsegment, c_custkey, c_acctbal + 1000.0 AS w,
                   ((strpos('0123456789abcdef', substr(md5(CAST(c_custkey AS VARCHAR)),1,1))-1)*1048576.0
@@ -1285,11 +1253,11 @@ object Relational {
                   row_number() OVER (PARTITION BY c_mktsegment
                     ORDER BY power(u, 1.0/w) DESC, c_custkey ASC) AS rn
            FROM u)
-         WHERE rn <= 10""",
-    "user_spend_salted" ->
+         WHERE rn <= 10""")),
+    Op("user_spend_salted", userSpendSalted _, Oracle(
       """SELECT user_id, count(*) AS n, round(sum(value), 4) AS sum_value
-         FROM events GROUP BY user_id""",
-    "q1_pricing_summary" ->
+         FROM events GROUP BY user_id""")),
+    Op("q1_pricing_summary", q1PricingSummary _, Oracle(
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity),2) AS sum_qty,
          round(sum(l_extendedprice),2) AS sum_base_price,
@@ -1300,8 +1268,8 @@ object Relational {
          round(avg(l_discount),6) AS avg_disc,
          count(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '2001-09-02'
-         GROUP BY l_returnflag, l_linestatus""",
-    "q5_region_revenue" ->
+         GROUP BY l_returnflag, l_linestatus""")),
+    Op("q5_region_revenue", q5RegionRevenue _, Oracle(
       """SELECT r_name, n_name,
          round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
          FROM lineitem
@@ -1309,8 +1277,8 @@ object Relational {
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name, n_name""",
-    "q3_top_orders" ->
+         GROUP BY r_name, n_name""")),
+    Op("q3_top_orders", q3TopOrders _, Oracle(
       """SELECT o_orderkey, revenue, o_orderdate, o_orderpriority FROM (
            SELECT o_orderkey, o_orderdate, o_orderpriority,
                   round(sum(l_extendedprice*(1-l_discount)),2) AS revenue
@@ -1319,8 +1287,8 @@ object Relational {
            JOIN lineitem ON o_orderkey = l_orderkey
            WHERE c_mktsegment = 'BUILDING'
            GROUP BY o_orderkey, o_orderdate, o_orderpriority)
-         ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""",
-    "topk_parts_per_brand" ->
+         ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""")),
+    Op("topk_parts_per_brand", topkPartsPerBrand _, Oracle(
       """SELECT p_brand, p_partkey, revenue, rk FROM (
            SELECT p_brand, p_partkey,
                   round(sum(l_extendedprice*(1-l_discount)),2) AS revenue,
@@ -1330,51 +1298,52 @@ object Relational {
                              p_partkey ASC) AS rk
            FROM lineitem JOIN part ON l_partkey = p_partkey
            GROUP BY p_brand, p_partkey)
-         WHERE rk <= 3""",
-    "running_customer_spend" ->
+         WHERE rk <= 3""")),
+    Op("running_customer_spend", runningCustomerSpend _, Oracle(
       """SELECT o_custkey, o_orderkey, o_orderdate,
          round(sum(o_totalprice) OVER (
            PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),2) AS cum_spend
-         FROM orders""",
-    "label_specificity" ->
+         FROM orders""")),
+    Op("label_specificity", labelSpecificity _, Oracle(
       """SELECT c_nationkey AS group_key,
          count(DISTINCT c_mktsegment) AS n_labels,
          count(DISTINCT c_mktsegment) = 1 AS is_specific
-         FROM customer GROUP BY c_nationkey""",
-    "factor_by_size" ->
+         FROM customer GROUP BY c_nationkey""")),
+    Op("factor_by_size", factorBySize _, Oracle(
       """SELECT level, n, row_number() OVER (ORDER BY n DESC, level ASC) AS size_rank
          FROM (SELECT o_orderpriority AS level, count(*) AS n
-               FROM orders GROUP BY o_orderpriority)""",
-    "crosstab_priority_status" ->
+               FROM orders GROUP BY o_orderpriority)"""),
+      globalWindow = Some("|levels| frequency rank")),
+    Op("crosstab_priority_status", crosstabPriorityStatus _, Oracle(
       """SELECT o_orderpriority, o_orderstatus, n,
          round(CAST(n AS DOUBLE) / CAST(sum(n) OVER (PARTITION BY o_orderpriority) AS DOUBLE), 6) AS prop
          FROM (SELECT o_orderpriority, o_orderstatus, count(*) AS n
-               FROM orders GROUP BY o_orderpriority, o_orderstatus)""",
-    "melt_lineitem_metrics" ->
+               FROM orders GROUP BY o_orderpriority, o_orderstatus)""")),
+    Op("melt_lineitem_metrics", meltLineitemMetrics _, Oracle(
       """SELECT l_orderkey, l_linenumber, 'quantity' AS metric, l_quantity AS value FROM lineitem
          UNION ALL
          SELECT l_orderkey, l_linenumber, 'extendedprice', l_extendedprice FROM lineitem
          UNION ALL
          SELECT l_orderkey, l_linenumber, 'discount', l_discount FROM lineitem
          UNION ALL
-         SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem""",
-    "stratified_sample" ->
+         SELECT l_orderkey, l_linenumber, 'tax', l_tax FROM lineitem""")),
+    Op("stratified_sample", stratifiedSample _, Oracle(
       """SELECT c_mktsegment, c_custkey FROM (
            SELECT c_mktsegment, c_custkey,
                   row_number() OVER (
                     PARTITION BY c_mktsegment
                     ORDER BY md5(CAST(c_custkey AS VARCHAR)) ASC, c_custkey ASC) AS rn
            FROM customer)
-         WHERE rn <= 10""",
-    "upset_membership" ->
+         WHERE rn <= 10""")),
+    Op("upset_membership", upsetMembership _, Oracle(
       """SELECT l_partkey AS p_partkey,
          max(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS in_returned,
          max(CASE WHEN o_orderpriority = '1-URGENT' THEN 1 ELSE 0 END) AS in_urgent,
          max(CASE WHEN l_discount > 0.05 THEN 1 ELSE 0 END) AS in_discounted
          FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-         GROUP BY l_partkey""",
-    "asof_purchase_click" ->
+         GROUP BY l_partkey""")),
+    Op("asof_purchase_click", asofPurchaseClick _, Oracle(
       """SELECT event_id, user_id, ts_us, asof_click_id, asof_click_value FROM (
            SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
                   c.event_id AS asof_click_id, c.value AS asof_click_value,
@@ -1384,8 +1353,8 @@ object Relational {
            FROM events p JOIN events c
              ON c.user_id = p.user_id AND c.ts <= p.ts AND c.event_type = 'click'
            WHERE p.event_type = 'purchase')
-         WHERE rn = 1""",
-    "discount_band_effect" ->
+         WHERE rn = 1""")),
+    Op("discount_band_effect", discountBandEffect _, Oracle(
       """SELECT CAST(round(l_discount * 100, 0) AS BIGINT) AS band,
                 count(*) AS n_lines,
                 round(sum(l_quantity), 4) AS sum_qty,
@@ -1393,8 +1362,8 @@ object Relational {
                 round(sum(l_extendedprice), 4) AS gross_revenue,
                 round(sum(l_extendedprice * (1.0 - l_discount)), 4) AS net_revenue,
                 round(sum(l_extendedprice * l_discount), 4) AS discount_cost
-         FROM lineitem GROUP BY 1""",
-    "supplier_concentration" ->
+         FROM lineitem GROUP BY 1""")),
+    Op("supplier_concentration", supplierConcentration _, Oracle(
       """WITH rev AS (
            SELECT n.n_name, l.l_suppkey,
                   round(sum(l.l_extendedprice * (1.0 - l.l_discount)), 4) AS rev
@@ -1410,8 +1379,8 @@ object Relational {
                 round(sum((r.rev / t.total) * (r.rev / t.total)), 6) AS hhi,
                 round(max(r.rev / t.total), 6) AS top_share
          FROM rev r JOIN tot t USING (n_name)
-         GROUP BY 1""",
-    "order_fulfillment_latency" ->
+         GROUP BY 1""")),
+    Op("order_fulfillment_latency", fulfillmentLatency _, Oracle(
       """WITH x AS (
            SELECT o.o_orderpriority,
                   CAST(epoch_us(l.l_shipdate) // 86400000000
@@ -1422,8 +1391,8 @@ object Relational {
                 round(quantile_cont(delay, 0.5), 4) AS p50_days,
                 round(quantile_cont(delay, 0.9), 4) AS p90_days,
                 CAST(max(delay) AS BIGINT) AS max_days
-         FROM x GROUP BY 1""",
-    "asof_forward_click" ->
+         FROM x GROUP BY 1""")),
+    Op("asof_forward_click", asofForwardClick _, Oracle(
       """SELECT event_id, user_id, ts_us, next_click_id, next_click_value FROM (
            SELECT p.event_id, p.user_id, epoch_us(p.ts) AS ts_us,
                   c.event_id AS next_click_id, c.value AS next_click_value,
@@ -1433,8 +1402,8 @@ object Relational {
            FROM events p JOIN events c
              ON c.user_id = p.user_id AND c.ts >= p.ts AND c.event_type = 'click'
            WHERE p.event_type = 'purchase')
-         WHERE rn = 1""",
-    "asof_nearest_click" ->
+         WHERE rn = 1""")),
+    Op("asof_nearest_click", asofNearestClick _, Oracle(
       """WITH back AS (
            SELECT event_id, b_id, b_val, b_ts FROM (
              SELECT p.event_id,
@@ -1468,5 +1437,5 @@ object Relational {
                      THEN p.ts_us - b_ts ELSE f_ts - p.ts_us END AS gap_us
          FROM pur p LEFT JOIN back b ON p.event_id = b.event_id
                     LEFT JOIN fwd f ON p.event_id = f.event_id
-         WHERE coalesce(b_id, f_id) IS NOT NULL""")
+         WHERE coalesce(b_id, f_id) IS NOT NULL""")))
 }

@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * scores — discrimination (ROC AUC) and drift (PSI) — next to the
   * distribution-shift screens (KL #86, pairwise KS #94).
   */
-object Scores {
+object Scores extends Op.Registry {
 
   // ---------------------------------------------------------------
   // 128. ROC AUC of a quality score against a binary label, per group:
@@ -1067,41 +1067,36 @@ object Scores {
        FROM w
        WHERE treated AND (prev_id IS NOT NULL OR next_id IS NOT NULL)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "isotonic_calibration" -> (isotonicCalibration _),
-    "propensity_match" -> (propensityMatch _),
-    "conformal_intervals" -> (conformalIntervals _),
-    "wilson_rates"     -> (wilsonRates _),
-    "mann_kendall"     -> (mannKendall _),
-    "cohens_kappa"     -> (cohensKappa _),
-    "hbos_outliers"    -> (hbosOutliers _),
-    "conversion_ztest" -> (conversionZtest _),
-    "benford_screen"   -> (benfordScreen _),
-    "bootstrap_ci"     -> (bootstrapCi _),
-    "rfm_segments"     -> (rfmSegments _),
-    "hourly_uniformity" -> (hourlyUniformity _),
-    "score_auc"        -> (scoreAuc _),
-    "psi_drift"        -> (psiDrift _),
-    "category_drift" -> (categoryDrift _),
-    "decayed_sum"      -> (decayedSum _),
-    "calibration_bins" -> (calibrationBins _))
-
-  val oracles: Map[String, String] = Map(
-    "isotonic_calibration" -> isotonicCalibrationSql,
-    "propensity_match"  -> propensityMatchSql,
-    "conformal_intervals" -> conformalIntervalsSql,
-    "bootstrap_ci"      -> bootstrapCiSql,
-    "benford_screen"    -> benfordScreenSql,
-    "hbos_outliers"     -> hbosOutliersSql,
-    "wilson_rates"      -> wilsonRatesSql,
-    "mann_kendall"      -> mannKendallSql,
-    "cohens_kappa"      -> cohensKappaSql,
-    "conversion_ztest"  -> conversionZtestSql,
-    "rfm_segments"      -> rfmSegmentsSql,
-    "hourly_uniformity" -> hourlyUniformitySql,
-    "score_auc"        -> scoreAucSql,
-    "psi_drift"        -> psiDriftSql,
-    "category_drift" -> categoryDriftSql,
-    "decayed_sum"      -> decayedSumSql,
-    "calibration_bins" -> calibrationBinsSql)
+  val ops: Seq[Op] = Seq(
+    Op("isotonic_calibration", isotonicCalibration _, Oracle(isotonicCalibrationSql),
+      quadratic = Some(Reasons.BoundedScaffolds),
+      globalWindow = Some("<=40-row bin cum table")),
+    Op("propensity_match", propensityMatch _, Oracle(propensityMatchSql)),
+    Op("conformal_intervals", conformalIntervals _, Oracle(conformalIntervalsSql),
+      quadratic = Some("conformal_intervals attaches the 1-row global residual-range " +
+        "aggregate twice (bin width + q̂ reconstruction — the hbos_outliers min-max " +
+        "precedent)")),
+    Op("bootstrap_ci", bootstrapCi _, Oracle(bootstrapCiSql)),
+    Op("benford_screen", benfordScreen _, Oracle(benfordScreenSql),
+      quadratic = Some(Reasons.TotalsAttach)),
+    Op("hbos_outliers", hbosOutliers _, Oracle(hbosOutliersSql),
+      quadratic = Some(Reasons.TotalsAttach)),
+    Op("wilson_rates", wilsonRates _, Oracle(wilsonRatesSql)),
+    Op("mann_kendall", mannKendall _, Oracle(mannKendallSql)),
+    Op("cohens_kappa", cohensKappa _, Oracle(cohensKappaSql)),
+    Op("conversion_ztest", conversionZtest _, Oracle(conversionZtestSql),
+      quadratic = Some(Reasons.TotalsAttach)),
+    Op("rfm_segments", rfmSegments _, Oracle(rfmSegmentsSql),
+      quadratic = Some("rfm_segments attaches the 1-row day-max and quintile-bounds " +
+        "aggs")),
+    Op("hourly_uniformity", hourlyUniformity _, Oracle(hourlyUniformitySql)),
+    Op("score_auc", scoreAuc _, Oracle(scoreAucSql)),
+    Op("psi_drift", psiDrift _, Oracle(psiDriftSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid)),
+    Op("category_drift", categoryDrift _, Oracle(categoryDriftSql),
+      quadratic = Some("category_drift attaches the 1-row ts-range and totals aggs — " +
+        "scalar attaches (the psi_drift precedent)")),
+    Op("decayed_sum", decayedSum _, Oracle(decayedSumSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid)),
+    Op("calibration_bins", calibrationBins _, Oracle(calibrationBinsSql)))
 }

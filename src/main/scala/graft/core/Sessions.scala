@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * graft.streaming. Timestamps are kept as exact epoch-nanos BIGINTs
   * (see Tables.events) so the oracle comparison is precision-safe.
   */
-object Sessions {
+object Sessions extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -2446,93 +2446,60 @@ object Sessions {
               round((tq - tp) - (cq - cp), 6) AS did
        FROM cells"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "srm_check"              -> (srmCheck _),
-    "diff_in_diff"           -> (diffInDiff _),
-    "hll_distinct"           -> (hllDistinct _),
-    "cuped_adjustment"       -> (cupedAdjustment _),
-    "funnel_latency"         -> (funnelLatency _),
-    "session_bounce"         -> (sessionBounce _),
-    "capped_running_sum"     -> (cappedRunningSum _),
-    "active_users"           -> (activeUsers _),
-    "audience_overlap"       -> (audienceOverlap _),
-    "period_over_period"     -> (periodOverPeriod _),
-    "acf_daily"              -> (acfDaily _),
-    "holt_trend"             -> (holtTrend _),
-    "dow_seasonality"        -> (dowSeasonality _),
-    "time_grid_interp"       -> (timeGridInterp _),
-    "theil_sen"              -> (theilSen _),
-    "seasonal_adjusted_anomaly" -> (seasonalAdjustedAnomaly _),
-    "session_gap_sweep"      -> (sessionGapSweep _),
-    "hodges_lehmann"         -> (hodgesLehmann _),
-    "retention_decay_fit"    -> (retentionDecayFit _),
-    "linear_attribution"     -> (linearAttribution _),
-    "activity_islands"       -> (activityIslands _),
-    "scd2_history"           -> (scd2History _),
-    "cusum_shift"            -> (cusumShift _),
-    "event_debounce"         -> (eventDebounce _),
-    "active_time_union"      -> (activeTimeUnion _),
-    "time_grid_fill"         -> (timeGridFill _),
-    "event_transitions"      -> (eventTransitions _),
-    "top_paths"              -> (topPaths _),
-    "survival_km"            -> (survivalKm _),
-    "nelson_aalen"           -> (nelsonAalen _),
-    "markov_attribution"     -> (markovAttribution _),
-    "audience_overlap_kmv"   -> (audienceOverlapKmv _),
-    "holt_winters"           -> (holtWinters _),
-    "rolling_anomaly"        -> (rollingAnomaly _),
-    "interevent_stats"       -> (intereventStats _),
-    "funnel_conversion"      -> (funnelConversion _),
-    "interval_overlap"       -> (intervalOverlap _),
-    "value_per_bin"          -> (valuePerBin _),
-    "ewma_user_value"        -> (ewmaUserValue _),
-    "latest_per_key"         -> (latestPerKey _),
-    "winsorized_stats"       -> (winsorizedStats _),
-    "cohort_retention"       -> (cohortRetention _),
-    "group_quantiles"        -> (groupQuantiles _),
-    "value_histogram"        -> (valueHistogram _),
-    "events_json_props"      -> (eventsJsonProps _),
-    "rolling_events"         -> (rollingEvents _),
-    "sessionize_events"      -> (sessionizeEvents _),
-    "windowed_events"        -> (windowedEvents _),
-    "range_join_clicks"      -> (rangeJoinClicks _),
-    "sliding_windows_events" -> (slidingWindowsEvents _))
-
-  val oracles: Map[String, String] = Map(
-    "srm_check"              -> srmCheckSql,
-    "diff_in_diff"           -> diffInDiffSql,
-    "hll_distinct"           -> hllDistinctSql,
-    "cuped_adjustment"       -> cupedAdjustmentSql,
-    "funnel_latency"         -> funnelLatencySql,
-    "session_bounce"         -> sessionBounceSql,
-    "capped_running_sum"     -> cappedRunningSumSql,
-    "active_users"           -> activeUsersSql,
-    "audience_overlap"       -> audienceOverlapSql,
-    "period_over_period"     -> periodOverPeriodSql,
-    "acf_daily"              -> acfDailySql,
-    "holt_trend"             -> holtTrendSql,
-    "dow_seasonality"        -> dowSeasonalitySql,
-    "time_grid_interp"       -> timeGridInterpSql,
-    "theil_sen"              -> theilSenSql,
-    "seasonal_adjusted_anomaly" -> seasonalAdjustedAnomalySql,
-    "session_gap_sweep"      -> sessionGapSweepSql,
-    "hodges_lehmann"         -> hodgesLehmannSql,
-    "retention_decay_fit"    -> retentionDecayFitSql,
-    "linear_attribution"     -> linearAttributionSql,
-    "activity_islands"       -> activityIslandsSql,
-    "scd2_history"           -> scd2HistorySql,
-    "cusum_shift"            -> cusumShiftSql,
-    "event_debounce"         -> eventDebounceSql,
-    "active_time_union"      -> activeTimeUnionSql,
-    "time_grid_fill"    -> timeGridFillSql,
-    "event_transitions" -> eventTransitionsSql,
-    "top_paths"         -> topPathsSql,
-    "survival_km"       -> survivalKmSql,
-    "nelson_aalen"      -> nelsonAalenSql,
-    "markov_attribution" -> markovAttributionSql,
-    "audience_overlap_kmv" -> audienceOverlapKmvSql,
-    "holt_winters"      -> holtWintersSql,
-    "rolling_anomaly" ->
+  val ops: Seq[Op] = Seq(
+    Op("srm_check", srmCheck _, Oracle(srmCheckSql)),
+    Op("diff_in_diff", diffInDiff _, Oracle(diffInDiffSql),
+      quadratic = Some(Reasons.RoundScalarAttach)),
+    Op("hll_distinct", hllDistinct _, Oracle(hllDistinctSql)),
+    Op("cuped_adjustment", cupedAdjustment _, Oracle(cupedAdjustmentSql),
+      quadratic = Some(Reasons.BoundedScaffolds)),
+    Op("funnel_latency", funnelLatency _, Oracle(funnelLatencySql)),
+    Op("session_bounce", sessionBounce _, Oracle(sessionBounceSql)),
+    Op("capped_running_sum", cappedRunningSum _, Oracle(cappedRunningSumSql)),
+    Op("active_users", activeUsers _, Oracle(activeUsersSql),
+      quadratic = Some("active_users joins the deduped (day, user) pairs against the " +
+        "BOUNDED day grid (retention-window rows) on a trailing-range predicate — the " +
+        "ma_stats bounded-scaffold shape, not a fact-fact pair join")),
+    Op("audience_overlap", audienceOverlap _, Oracle(audienceOverlapSql)),
+    Op("period_over_period", periodOverPeriod _, Oracle(periodOverPeriodSql)),
+    Op("acf_daily", acfDaily _, Oracle(acfDailySql)),
+    Op("holt_trend", holtTrend _, Oracle(holtTrendSql)),
+    Op("dow_seasonality", dowSeasonality _, Oracle(dowSeasonalitySql)),
+    Op("time_grid_interp", timeGridInterp _, Oracle(timeGridInterpSql)),
+    Op("theil_sen", theilSen _, Oracle(theilSenSql)),
+    Op("seasonal_adjusted_anomaly", seasonalAdjustedAnomaly _, Oracle(seasonalAdjustedAnomalySql)),
+    Op("session_gap_sweep", sessionGapSweep _, Oracle(sessionGapSweepSql)),
+    Op("hodges_lehmann", hodgesLehmann _, Oracle(hodgesLehmannSql)),
+    Op("retention_decay_fit", retentionDecayFit _, Oracle(retentionDecayFitSql)),
+    Op("linear_attribution", linearAttribution _, Oracle(linearAttributionSql)),
+    Op("activity_islands", activityIslands _, Oracle(activityIslandsSql)),
+    Op("scd2_history", scd2History _, Oracle(scd2HistorySql)),
+    Op("cusum_shift", cusumShift _, Oracle(cusumShiftSql)),
+    Op("event_debounce", eventDebounce _, Oracle(eventDebounceSql)),
+    Op("active_time_union", activeTimeUnion _, Oracle(activeTimeUnionSql)),
+    Op("time_grid_fill", timeGridFill _, Oracle(timeGridFillSql)),
+    Op("event_transitions", eventTransitions _, Oracle(eventTransitionsSql)),
+    Op("top_paths", topPaths _, Oracle(topPathsSql),
+      globalWindow = Some("distinct session-path counts (post-agg top-k)")),
+    Op("survival_km", survivalKm _, Oracle(survivalKmSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid),
+      globalWindow = Some("day grid (retention-window rows)")),
+    Op("nelson_aalen", nelsonAalen _, Oracle(nelsonAalenSql),
+      quadratic = Some("nelson_aalen attaches the 1-row total-at-risk scalar (the " +
+        "survival_km shape it duals)"),
+      globalWindow = Some("day grid (retention-window rows — the survival_km dual)")),
+    Op("markov_attribution", markovAttribution _, Oracle(markovAttributionSql),
+      quadratic = Some("markov_attribution's grid/matrix algebra lives entirely on " +
+        "bounded frames: (channels+1)·(channels+3)² cells, 1-row conversion-count / " +
+        "normalizer / full-chain attaches — scalar and bounded-scaffold attaches, never " +
+        "a fact pair join"),
+      globalWindow = Some("|channels| state-index rank (bounded chain states)")),
+    Op("audience_overlap_kmv", audienceOverlapKmv _, Oracle(audienceOverlapKmvSql),
+      quadratic = Some("audience_overlap_kmv probes k·|types| sketch rows against the " +
+        "|types|²-row pair table (OR-key tag join, the pairwise_ks precedent) and " +
+        "attaches bounded per-type estimate scalars")),
+    Op("holt_winters", holtWinters _, Oracle(holtWintersSql)),
+    Op("rolling_anomaly", rollingAnomaly _, Oracle(
       """SELECT event_id, user_id, ts_us, n_window,
                 round(mu, 4) AS mu, round(sd, 4) AS sd, z,
                 coalesce(abs(z) > 2.0, false) AS is_anomaly
@@ -2545,8 +2512,8 @@ object Sessions {
                         / nullif(stddev_pop(value) OVER w, 0.0), 4) AS z
            FROM events
            WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) ASC
-             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW))""",
-    "interevent_stats" ->
+             RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW))""")),
+    Op("interevent_stats", intereventStats _, Oracle(
       """WITH g AS (
            SELECT user_id,
                   CAST(epoch_us(ts) - lag(epoch_us(ts)) OVER (
@@ -2560,8 +2527,8 @@ object Sessions {
                 round((stddev_pop(gap / 1000000.0) - avg(gap) / 1000000.0)
                       / nullif(stddev_pop(gap / 1000000.0)
                                + avg(gap) / 1000000.0, 0.0), 6) AS burstiness
-         FROM g WHERE gap IS NOT NULL GROUP BY 1""",
-    "funnel_conversion" ->
+         FROM g WHERE gap IS NOT NULL GROUP BY 1""")),
+    Op("funnel_conversion", funnelConversion _, Oracle(
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
          flagged AS (
            SELECT user_id, event_id, event_type, ts_us,
@@ -2597,8 +2564,8 @@ object Sessions {
                 count(p) AS n_full_funnel,
                 round(CAST(count(c) AS DOUBLE) / nullif(CAST(count(v) AS DOUBLE), 0.0), 6) AS rate_click,
                 round(CAST(count(p) AS DOUBLE) / nullif(CAST(count(c) AS DOUBLE), 0.0), 6) AS rate_purchase
-         FROM per_sess""",
-    "interval_overlap" ->
+         FROM per_sess""")),
+    Op("interval_overlap", intervalOverlap _, Oracle(
       """WITH e AS (SELECT user_id, event_id, event_type, epoch_us(ts) AS ts_us FROM events),
          flagged AS (
            SELECT user_id, event_id, ts_us,
@@ -2626,30 +2593,31 @@ object Sessions {
                 least(s.s_end, p.w_end) - greatest(s.s_start, p.w_start) AS overlap_us
          FROM sess s JOIN p
            ON s.user_id = p.user_id
-          AND s.s_start <= p.w_end AND p.w_start <= s.s_end""",
-    "value_per_bin" ->
+          AND s.s_start <= p.w_end AND p.w_start <= s.s_end""")),
+    Op("value_per_bin", valuePerBin _, Oracle(
       """WITH e AS (SELECT event_type, epoch_us(ts) AS ts_us, value FROM events),
          rng AS (SELECT min(ts_us) AS mn, max(ts_us) AS mx FROM e)
          SELECT event_type, ((ts_us - mn) * 20) // (mx - mn + 1) AS bin,
                 count(*) AS n, round(avg(value), 6) AS mean_value,
                 round(avg(CASE WHEN value <> 0.0 THEN 1.0 ELSE 0.0 END), 6) AS pct_expressing
-         FROM e, rng GROUP BY 1, 2""",
-    "ewma_user_value" ->
+         FROM e, rng GROUP BY 1, 2"""),
+      quadratic = Some(Reasons.GroupPairsOrRange)),
+    Op("ewma_user_value", ewmaUserValue _, Oracle(
       """WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, value FROM events),
          l AS (SELECT user_id, list(value ORDER BY ts_us ASC, value ASC) AS vs
                FROM e GROUP BY 1)
          SELECT user_id, CAST(len(vs) AS BIGINT) AS n,
                 round(list_reduce(vs, (acc, x) -> acc * 0.7 + x * 0.3), 6) AS ewma
-         FROM l""",
-    "latest_per_key" ->
+         FROM l""")),
+    Op("latest_per_key", latestPerKey _, Oracle(
       """SELECT user_id, event_type, ts_us, event_id, round(value, 4) AS value
          FROM (
            SELECT user_id, event_type, epoch_us(ts) AS ts_us, event_id, value,
                   row_number() OVER (PARTITION BY user_id, event_type
                     ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
            FROM events)
-         WHERE rn = 1""",
-    "winsorized_stats" ->
+         WHERE rn = 1""")),
+    Op("winsorized_stats", winsorizedStats _, Oracle(
       """WITH b AS (
            SELECT event_type, quantile_cont(value, 0.05) AS p05,
                   quantile_cont(value, 0.95) AS p95
@@ -2662,16 +2630,16 @@ object Sessions {
                 round(avg(w), 6) AS wins_mean,
                 round(stddev_pop(w), 6) AS wins_std,
                 round(min(p05), 6) AS p05, round(min(p95), 6) AS p95
-         FROM c GROUP BY 1""",
-    "cohort_retention" ->
+         FROM c GROUP BY 1""")),
+    Op("cohort_retention", cohortRetention _, Oracle(
       """WITH ev AS (
            SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events),
          cohorts AS (SELECT user_id, min(day) AS cohort_day FROM ev GROUP BY 1)
          SELECT cohort_day, day - cohort_day AS age_days,
                 count(DISTINCT ev.user_id) AS n_users
          FROM ev JOIN cohorts ON ev.user_id = cohorts.user_id
-         GROUP BY 1, 2""",
-    "group_quantiles" ->
+         GROUP BY 1, 2""")),
+    Op("group_quantiles", groupQuantiles _, Oracle(
       """SELECT event_type, count(*) AS n,
          round(min(value), 6) AS vmin,
          round(max(value), 6) AS vmax,
@@ -2679,24 +2647,24 @@ object Sessions {
          round(quantile_cont(value, 0.5), 6) AS p50,
          round(quantile_cont(value, 0.95), 6) AS p95,
          round(quantile_cont(value, 0.99), 6) AS p99
-         FROM events GROUP BY 1""",
-    "value_histogram" ->
+         FROM events GROUP BY 1""")),
+    Op("value_histogram", valueHistogram _, Oracle(
       """SELECT event_type, CAST(floor(value / 50.0) AS BIGINT) AS bucket,
          count(*) AS n, round(min(value), 4) AS lo, round(max(value), 4) AS hi
-         FROM events GROUP BY 1, 2""",
-    "events_json_props" ->
+         FROM events GROUP BY 1, 2""")),
+    Op("events_json_props", eventsJsonProps _, Oracle(
       """SELECT event_type, count(*) AS n,
          CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
          round(avg(CAST(json_extract_string(props, '$.k') AS BIGINT)), 6) AS avg_k
-         FROM events GROUP BY 1""",
-    "rolling_events" ->
+         FROM events GROUP BY 1""")),
+    Op("rolling_events", rollingEvents _, Oracle(
       """SELECT event_id, user_id, epoch_us(ts) AS ts_us, value,
          count(*) OVER w AS rolling_n,
          round(sum(value) OVER w, 4) AS rolling_sum
          FROM events
          WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts) ASC
-           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""",
-    "sessionize_events" ->
+           RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)""")),
+    Op("sessionize_events", sessionizeEvents _, Oracle(
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us, value FROM events),
          flagged AS (
            SELECT user_id, event_id, ts_us, value,
@@ -2714,8 +2682,8 @@ object Sessions {
          SELECT user_id, session_idx, count(*) AS n_events,
                 min(ts_us) AS start_us, max(ts_us) AS end_us,
                 round(sum(value), 4) AS sum_value
-         FROM sess GROUP BY user_id, session_idx""",
-    "range_join_clicks" ->
+         FROM sess GROUP BY user_id, session_idx""")),
+    Op("range_join_clicks", rangeJoinClicks _, Oracle(
       """WITH e AS (SELECT event_id, user_id, event_type, value, epoch_us(ts) AS ts_us FROM events),
          p AS (SELECT event_id, user_id, ts_us AS p_ts FROM e WHERE event_type = 'purchase'),
          c AS (SELECT user_id, ts_us AS c_ts, value AS c_val FROM e WHERE event_type = 'click')
@@ -2725,8 +2693,8 @@ object Sessions {
          FROM p LEFT JOIN c
            ON p.user_id = c.user_id
           AND c.c_ts >= p.p_ts - 3600000000 AND c.c_ts <= p.p_ts
-         GROUP BY p.event_id, p.user_id""",
-    "sliding_windows_events" ->
+         GROUP BY p.event_id, p.user_id""")),
+    Op("sliding_windows_events", slidingWindowsEvents _, Oracle(
       """WITH e AS (SELECT event_type, value, epoch_us(ts) AS ts_us FROM events),
          assigned AS (
            SELECT ((ts_us // 900000000) - k) * 900000000 AS window_start_us,
@@ -2734,10 +2702,10 @@ object Sessions {
            FROM e, LATERAL unnest(generate_series(0, 3)) AS t(k))
          SELECT window_start_us, event_type, count(*) AS n,
                 round(sum(value), 4) AS sum_value
-         FROM assigned GROUP BY 1, 2""",
-    "windowed_events" ->
+         FROM assigned GROUP BY 1, 2""")),
+    Op("windowed_events", windowedEvents _, Oracle(
       """SELECT epoch_ns(ts) // 3600000000000 AS hour_bucket, event_type,
          count(*) AS n, count(DISTINCT user_id) AS n_users,
          round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2""")
+         FROM events GROUP BY 1, 2""")))
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * array folds inside whole-stage codegen — one narrow pass per doc,
   * no explode of the shingle set, no UDFs.
   */
-object Dedup {
+object Dedup extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -1125,40 +1125,6 @@ object Dedup {
         JOIN sizes z1 ON s1 = z1.source
         JOIN sizes z2 ON s2 = z2.source"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "source_overlap"      -> (sourceOverlap _),
-    "fuzzy_blocked_join"  -> (fuzzyBlockedJoin _),
-    "fuzzy_passjoin"      -> (fuzzyPassjoin _),
-    "jaro_winkler_pairs"  -> (jaroWinklerPairs _),
-    "golden_record"       -> (goldenRecord _),
-    "chao_estimate"       -> (chaoEstimate _),
-    "leakage_by_source"   -> (leakageBySource _),
-    "dedup_savings"       -> (dedupSavings _),
-    "dedup_components"    -> (dedupComponents _),
-    "dedup_components_lsh" -> (dedupComponentsLsh _),
-    "decontaminate"       -> (decontaminate _),
-    "dedup_exact"         -> (dedupExact _),
-    "dedup_containment"   -> (dedupContainment _),
-    "dup_pairs_by_source" -> (dupPairsBySource _),
-    "dedup_ngram_jaccard" -> (dedupNgramJaccard _),
-    "dedup_jaccard_prefix" -> (dedupJaccardPrefix _),
-    "dedup_minhash_lsh"   -> (dedupMinhashLsh _),
-    "dedup_simhash"       -> (dedupSimhash _),
-    "simhash_radius_sweep" -> (simhashRadiusSweep _),
-    "dedup_embedding"     -> (dedupEmbedding _),
-    "dedup_embedding_lsh" -> (dedupEmbeddingLsh _),
-    "decontaminate_semantic" -> (decontaminateSemantic _),
-    "dedup_cluster_sizes" -> (dedupClusterSizes _),
-    "dedup_incremental"   -> (dedupIncremental _),
-    "minhash_calibration" -> (minhashCalibration _),
-    "minhash_oph_calibration" -> (minhashOphCalibration _),
-    "minhash_bands_sweep" -> ((a: SparkSession, b: String) => minhashBandsSweep(a, b)),
-    "winnow_fingerprints" -> (winnowFingerprints _),
-    "winnow_dup_pairs"    -> (winnowDupPairs _),
-    "dedup_keeper_quality" -> (dedupKeeperQuality _),
-    "dedup_threshold_sweep" -> (dedupThresholdSweep _),
-    "semantic_dedup"      -> (semanticDedup _))
-
   // ---------------------------------------------------------------
   // 355. Dedup-threshold sensitivity sweep (r14 verdict item 7): the
   // table a production dedup run reads BEFORE fixing its Jaccard
@@ -1678,20 +1644,35 @@ object Dedup {
        FROM scored"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "dedup_threshold_sweep" -> dedupThresholdSweepSql,
-    "minhash_oph_calibration" -> minhashOphCalibrationSql,
-    "minhash_calibration" -> minhashCalibrationSql,
-    "minhash_bands_sweep" -> minhashBandsSweepSql,
-    "winnow_fingerprints" -> winnowFingerprintsSql,
-    "winnow_dup_pairs"    -> winnowDupPairsSql,
-    "dedup_containment" -> dedupContainmentSql,
-    "dup_pairs_by_source" -> dupPairsBySourceSql,
-    "source_overlap" -> sourceOverlapSql,
-    "golden_record" -> goldenRecordSql,
-    "chao_estimate" -> chaoEstimateSql,
-    "dedup_savings" -> dedupSavingsSql,
-    "leakage_by_source" ->
+  val ops: Seq[Op] = Seq(
+    Op("dedup_threshold_sweep", dedupThresholdSweep _, Oracle(dedupThresholdSweepSql),
+      quadratic = Some(Reasons.RoundScalarAttach)),
+    Op("minhash_oph_calibration", minhashOphCalibration _, Oracle(minhashOphCalibrationSql)),
+    Op("minhash_calibration", minhashCalibration _, Oracle(minhashCalibrationSql)),
+    Op("minhash_bands_sweep", (a: SparkSession, b: String) => minhashBandsSweep(a, b),
+      Oracle(minhashBandsSweepSql),
+      untimed = Some("offline calibration audit whose TRUTH side is the exact " +
+        "inverted-index pair set of dedup_ngram_jaccard — same quarantine; the " +
+        "production banding path it tunes (dedup_minhash_lsh) IS benchmarked"),
+      quadratic = Some("minhash_bands_sweep embeds the exact-Jaccard truth feed of " +
+        "dedup_ngram_jaccard (offline calibration audit; Bench-skipped)")),
+    Op("winnow_fingerprints", winnowFingerprints _, Oracle(winnowFingerprintsSql)),
+    Op("winnow_dup_pairs", winnowDupPairs _, Oracle(winnowDupPairsSql)),
+    Op("dedup_containment", dedupContainment _, Oracle(dedupContainmentSql),
+      untimed = Some("Same exact inverted-index plan as #33 (the oracle path; at scale " +
+        "feed candidates from LSH with the same verification predicate)."),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("dup_pairs_by_source", dupPairsBySource _, Oracle(dupPairsBySourceSql),
+      untimed = Some("Consumes the exact pair list (oracle path, Bench-excluded with " +
+        "it); at scale feed the LSH pairs — identical downstream."),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("source_overlap", sourceOverlap _, Oracle(sourceOverlapSql),
+      quadratic = Some("source_overlap probes the tiny distinct-mask histogram against " +
+        "the |sources|²-row pair table — both bounded by source count")),
+    Op("golden_record", goldenRecord _, Oracle(goldenRecordSql)),
+    Op("chao_estimate", chaoEstimate _, Oracle(chaoEstimateSql)),
+    Op("dedup_savings", dedupSavings _, Oracle(dedupSavingsSql)),
+    Op("leakage_by_source", leakageBySource _, Oracle(
       s"""WITH nrm AS (SELECT doc_id, source, $normSql AS t FROM documents),
           esh AS (SELECT DISTINCT substr(t, CAST(i AS INT), 20) AS g
                   FROM nrm, LATERAL unnest(generate_series(1, greatest(length(t)-19, 1))) AS u(i)
@@ -1712,31 +1693,31 @@ object Dedup {
                  round(sum(CASE WHEN contaminated THEN 1 ELSE 0 END)
                        / CAST(count(*) AS DOUBLE), 6) AS leak_rate,
                  round(avg(CASE WHEN contaminated THEN n_shared END), 4) AS mean_shared
-          FROM flags GROUP BY 1""",
-    "fuzzy_blocked_join" ->
+          FROM flags GROUP BY 1""")),
+    Op("fuzzy_blocked_join", fuzzyBlockedJoin _, Oracle(
       """SELECT a.p_partkey AS id1, b.p_partkey AS id2,
          CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
          FROM part a JOIN part b
            ON a.p_brand = b.p_brand AND a.p_type = b.p_type
           AND a.p_partkey < b.p_partkey
-         WHERE levenshtein(a.p_name, b.p_name) <= 2""",
-    "fuzzy_passjoin" ->
+         WHERE levenshtein(a.p_name, b.p_name) <= 2""")),
+    Op("fuzzy_passjoin", fuzzyPassjoin _, Oracle(
       """SELECT a.doc_id AS id1, b.doc_id AS id2,
          CAST(levenshtein(substr(a.text, 1, 32), substr(b.text, 1, 32)) AS BIGINT) AS dist
          FROM documents a JOIN documents b
            ON a.lang = b.lang AND a.doc_id < b.doc_id
-         WHERE levenshtein(substr(a.text, 1, 32), substr(b.text, 1, 32)) <= 2""",
-    "jaro_winkler_pairs" ->
+         WHERE levenshtein(substr(a.text, 1, 32), substr(b.text, 1, 32)) <= 2""")),
+    Op("jaro_winkler_pairs", jaroWinklerPairs _, Oracle(
       """WITH nv AS (SELECT DISTINCT p_brand AS brand, p_type AS ptype, p_name AS name FROM part)
          SELECT a.brand, a.ptype, a.name AS name1, b.name AS name2,
                 round(jaro_winkler_similarity(a.name, b.name), 6) AS jw_sim
          FROM nv a JOIN nv b
            ON a.brand = b.brand AND a.ptype = b.ptype AND a.name < b.name
-         WHERE jaro_winkler_similarity(a.name, b.name) >= 0.9""",
-    "dedup_components_lsh" -> componentsSql,
-    "dedup_cluster_sizes" -> clusterSizesSql,
-    "dedup_incremental" -> dedupIncrementalSql,
-    "dedup_keeper_quality" -> dedupKeeperQualitySql,
+         WHERE jaro_winkler_similarity(a.name, b.name) >= 0.9""")),
+    Op("dedup_components_lsh", dedupComponentsLsh _, Oracle(componentsSql)),
+    Op("dedup_cluster_sizes", dedupClusterSizes _, Oracle(clusterSizesSql)),
+    Op("dedup_incremental", dedupIncremental _, Oracle(dedupIncrementalSql)),
+    Op("dedup_keeper_quality", dedupKeeperQuality _, Oracle(dedupKeeperQualitySql)),
     // The LSH twins share the exact paths' oracles: LSH candidates are
     // verified with TRUE shingle Jaccard before emission, so output ⊆
     // exact always, and the planted near-dups sit at J ≥ 0.9 where the
@@ -1749,7 +1730,7 @@ object Dedup {
     // equal when clusters are pairwise ≥ t, which DedupSpec pins —
     // a star miss on a borderline CHAIN would fail these oracles
     // loudly rather than silently).
-    "dedup_minhash_lsh" ->
+    Op("dedup_minhash_lsh", dedupMinhashLsh _, Oracle(
       s"""WITH nrm AS (SELECT doc_id, $normSql AS t FROM documents),
           sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS g
                  FROM nrm, LATERAL unnest(generate_series(1, greatest(length(t)-4, 1))) AS u(i)),
@@ -1762,9 +1743,12 @@ object Dedup {
           FROM inter
           JOIN sizes s1 ON d1 = s1.doc_id
           JOIN sizes s2 ON d2 = s2.doc_id
-          WHERE CAST(i AS DOUBLE)/(s1.n + s2.n - i) >= 0.7""",
-    "dedup_components" -> componentsSql,
-    "decontaminate" ->
+          WHERE CAST(i AS DOUBLE)/(s1.n + s2.n - i) >= 0.7""")),
+    Op("dedup_components", dedupComponents _, Oracle(componentsSql),
+      untimed = Some("consumes the exact pair list of dedup_ngram_jaccard, skipped for " +
+        "the same reason; its scale twin dedup_components_lsh (same component logic " +
+        "over LSH pairs) IS benchmarked.")),
+    Op("decontaminate", decontaminate _, Oracle(
       s"""WITH nrm AS (SELECT doc_id, source, $normSql AS t FROM documents),
           esh AS (SELECT DISTINCT substr(t, CAST(i AS INT), 20) AS g
                   FROM nrm, LATERAL unnest(generate_series(1, greatest(length(t)-19, 1))) AS u(i)
@@ -1777,14 +1761,16 @@ object Dedup {
           SELECT n.doc_id, coalesce(s.n_shared, 0) AS n_shared,
                  coalesce(s.n_shared, 0) >= 5 AS contaminated
           FROM nrm n LEFT JOIN shared s ON n.doc_id = s.doc_id
-          WHERE n.source <> 'src0'""",
-    "dedup_exact" ->
+          WHERE n.source <> 'src0'""")),
+    Op("dedup_exact", dedupExact _, Oracle(
       s"""SELECT md5($normSql) AS norm_hash, min(doc_id) AS keep_id,
           count(*) AS n_docs, count(*) > 1 AS has_dup
-          FROM documents GROUP BY 1""",
+          FROM documents GROUP BY 1""")),
     // #307 is exact by the prefix-filter lemma — same contract, same
     // oracle as the quadratic #33 it replaces at scale
-    "dedup_jaccard_prefix" ->
+    // no global window: it ranks its dictionary on the driver from the
+    // collected (shingle, df) counts
+    Op("dedup_jaccard_prefix", dedupJaccardPrefix _, Oracle(
       s"""WITH nrm AS (SELECT doc_id, $normSql AS t FROM documents),
           sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS g
                  FROM nrm, LATERAL unnest(generate_series(1, greatest(length(t)-4, 1))) AS u(i)),
@@ -1797,8 +1783,8 @@ object Dedup {
           FROM inter
           JOIN sizes s1 ON d1 = s1.doc_id
           JOIN sizes s2 ON d2 = s2.doc_id
-          WHERE CAST(i AS DOUBLE)/(s1.n + s2.n - i) >= 0.7""",
-    "dedup_ngram_jaccard" ->
+          WHERE CAST(i AS DOUBLE)/(s1.n + s2.n - i) >= 0.7""")),
+    Op("dedup_ngram_jaccard", dedupNgramJaccard _, Oracle(
       s"""WITH nrm AS (SELECT doc_id, $normSql AS t FROM documents),
           sh AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS g
                  FROM nrm, LATERAL unnest(generate_series(1, greatest(length(t)-4, 1))) AS u(i)),
@@ -1811,19 +1797,26 @@ object Dedup {
           FROM inter
           JOIN sizes s1 ON d1 = s1.doc_id
           JOIN sizes s2 ON d2 = s2.doc_id
-          WHERE CAST(i AS DOUBLE)/(s1.n + s2.n - i) >= 0.7""",
-    "dedup_embedding" ->
+          WHERE CAST(i AS DOUBLE)/(s1.n + s2.n - i) >= 0.7"""),
+      untimed = Some("the deliberately-exact inverted-index baseline — Σ df² ≈ 1.5e9 " +
+        "intermediate rows at sf0.1 on this pathologically low-vocab corpus. Its " +
+        "production/scale twin dedup_minhash_lsh IS benchmarked (same output, " +
+        "LSH-bounded work)."),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("dedup_embedding", dedupEmbedding _, Oracle(
       """SELECT a.vec_id AS id1, b.vec_id AS id2,
          round(list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]), 6) AS cos_sim
          FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-         WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4""",
+         WHERE list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4"""),
+      untimed = Some(Reasons.ExactAllPairsCosine),
+      quadratic = Some(Reasons.BruteForceBaseline)),
     // Exact SQL replay of the LSH-bucketed cosine pair miner: the
     // shared SplitMix64 plane/signature prefix (graft.sim.Ann), the
     // engine's own-bucket + 1-bit-flip probe set, then the same
     // qid < vid orientation filter and exact-cosine threshold. Probe
     // buckets partition the corpus, so no DISTINCT is needed — the
     // same argument the Spark plan documents.
-    "dedup_embedding_lsh" ->
+    Op("dedup_embedding_lsh", dedupEmbeddingLsh _, Oracle(
       s"""WITH ${graft.sim.Ann.lshSigPrefixSql},
          probes AS MATERIALIZED (
            SELECT s.vec_id AS qid,
@@ -1836,11 +1829,11 @@ object Dedup {
          JOIN embeddings a ON p.qid = a.vec_id
          JOIN embeddings b ON s2.vec_id = b.vec_id
          WHERE p.qid < s2.vec_id
-           AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4""",
+           AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= 0.4""")),
     // #277: the dedup_embedding_lsh candidate chain, restricted to
     // train-eval pairs, then a (sim desc, eval_id desc) argmax per
     // train vector and an explicit not-contaminated row for the rest.
-    "decontaminate_semantic" ->
+    Op("decontaminate_semantic", decontaminateSemantic _, Oracle(
       s"""WITH ${graft.sim.Ann.lshSigPrefixSql},
          probes AS MATERIALIZED (
            SELECT s.vec_id AS qid,
@@ -1869,19 +1862,19 @@ object Dedup {
                 coalesce(b.cs, 0.0) AS best_sim,
                 CAST(coalesce(b.eval_id, -1) AS BIGINT) AS eval_match
          FROM embeddings e LEFT JOIN best b ON e.vec_id = b.vec_id
-         WHERE e.vec_id % 50 != 0""",
+         WHERE e.vec_id % 50 != 0""")),
     // Exact SQL re-derivation of the engine's simhash: FNV-1a 64 per
     // DISTINCT word (HUGEINT fold, mod-2⁶⁴; xor emulated on the low
     // byte only, since the byte operand is < 256), signed-BIGINT
     // reinterpretation, ±1 votes per bit, then the same 4×16-bit chunk
     // banding as the engine. Tokens are runs of [a-z0-9] so lower(text)
     // needs no whitespace normalization first.
-    "dedup_simhash" ->
+    Op("dedup_simhash", dedupSimhash _, Oracle(
       s"""WITH $simhashCandSql
-         SELECT d1, d2, hamming FROM cand WHERE hamming <= 3""",
+         SELECT d1, d2, hamming FROM cand WHERE hamming <= 3""")),
     // #316: same candidate chain, per-radius precision vs the #33
     // char-5-gram Jaccard ground truth
-    "simhash_radius_sweep" ->
+    Op("simhash_radius_sweep", simhashRadiusSweep _, Oracle(
       s"""WITH $simhashCandSql,
          nrm2 AS (SELECT doc_id, $normSql AS t FROM documents),
          sh5 AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS g
@@ -1906,14 +1899,14 @@ object Dedup {
                 CAST(sum(CASE WHEN jac >= 0.7 THEN 1 ELSE 0 END) AS BIGINT) AS n_true,
                 round(avg(CASE WHEN jac >= 0.7 THEN 1.0 ELSE 0.0 END), 6) AS precision
          FROM verified v JOIN radii r ON v.hamming <= r.radius
-         GROUP BY 1""",
+         GROUP BY 1""")),
     // Exact replay of the SemDeDup keeper: the shared SplitMix64 bucket
     // prefix (vx carries per-dim values), then the same exact-integer
     // centroid algebra — floor(x·1000) quantization, integer per-dim
     // sums, integer dots — so the centroid cosine is bit-identical
     // regardless of accumulation order; pair cosines replay through
     // list_cosine_similarity (the fixed-order fold both engines share).
-    "semantic_dedup" ->
+    Op("semantic_dedup", semanticDedup _, Oracle(
       s"""WITH ${graft.sim.Ann.lshSigPrefixSql},
          qv AS MATERIALIZED (
            SELECT vec_id, i, CAST(floor(x * 1000) AS BIGINT) AS q FROM vx),
@@ -1944,5 +1937,5 @@ object Dedup {
                                         eb.embedding::DOUBLE[]) >= 0.4)
          SELECT s.vec_id, s.bucket, round(s.cos_c, 6) AS cos_centroid,
                 d.vec_id IS NULL AS keep
-         FROM scored s LEFT JOIN drops d ON s.vec_id = d.vec_id""")
+         FROM scored s LEFT JOIN drops d ON s.vec_id = d.vec_id""")))
 }

@@ -2,7 +2,7 @@ package graft.ml
 
 import scala.jdk.CollectionConverters._
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import graft.functions.QuantOuterProduct
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -17,7 +17,7 @@ import org.apache.spark.sql.types._
   * with exact-integer tie-breaks, so the DuckDB oracle recomputes the
   * identical result and the driver hash-checks it.
   */
-object Reduce {
+object Reduce extends Op.Registry {
 
   /** 115. label-centroid (simplified) silhouette — embedding-space
     * health per label: a(i) = distance to the OWN label centroid,
@@ -950,31 +950,21 @@ object Reduce {
          WHERE pr.qid < s2.vec_id
            AND list_cosine_similarity(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) >= $DbscanEps)""")
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dbscan_embeddings" -> (dbscanEmbeddings _),
-    "dbscan_embeddings_lsh" -> (dbscanEmbeddingsLsh _),
-    "embedding_norm_stats" -> (embeddingNormStats _),
-    "embedding_dim_profile" -> (embeddingDimProfile _),
-    "mahalanobis_outliers" -> (mahalanobisOutliers _),
-    "kmeans_elbow"      -> (lloydElbow _),
-    "cluster_transitions" -> (lloydTransitions _),
-    "cluster_ari" -> (lloydAri _),
-    "pca_embeddings"    -> (pcaGridEmbeddings _),
-    "kmeans_clusters"   -> (lloydClusters _),
-    "bisecting_clusters" -> (bisectingGridClusters _),
-    "label_silhouette"  -> (labelSilhouette _))
-
-  val oracles: Map[String, String] = Map(
-    "dbscan_embeddings" -> dbscanSql,
-    "dbscan_embeddings_lsh" -> dbscanLshSql,
-    "embedding_norm_stats" -> embeddingNormStatsSql,
-    "embedding_dim_profile" -> embeddingDimProfileSql,
-    "mahalanobis_outliers" -> mahalanobisOutliersSql,
-    "kmeans_clusters" -> lloydClustersSql,
-    "kmeans_elbow" -> lloydElbowSql,
-    "cluster_transitions" -> lloydTransitionsSql,
-    "cluster_ari" -> lloydAriSql,
-    "bisecting_clusters" -> bisectingGridClustersSql,
-    "pca_embeddings" -> pcaGridSql,
-    "label_silhouette" -> labelSilhouetteSql)
+  val ops: Seq[Op] = Seq(
+    Op("dbscan_embeddings", dbscanEmbeddings _, Oracle(dbscanSql),
+      untimed = Some(Reasons.ExactAllPairsCosine)),
+    Op("dbscan_embeddings_lsh", dbscanEmbeddingsLsh _, Oracle(dbscanLshSql)),
+    Op("embedding_norm_stats", embeddingNormStats _, Oracle(embeddingNormStatsSql)),
+    Op("embedding_dim_profile", embeddingDimProfile _, Oracle(embeddingDimProfileSql)),
+    Op("mahalanobis_outliers", mahalanobisOutliers _, Oracle(mahalanobisOutliersSql)),
+    Op("kmeans_clusters", lloydClusters _, Oracle(lloydClustersSql)),
+    Op("kmeans_elbow", lloydElbow _, Oracle(lloydElbowSql)),
+    Op("cluster_transitions", lloydTransitions _, Oracle(lloydTransitionsSql)),
+    Op("cluster_ari", lloydAri _, Oracle(lloydAriSql)),
+    Op("bisecting_clusters", bisectingGridClusters _, Oracle(bisectingGridClustersSql)),
+    Op("pca_embeddings", pcaGridEmbeddings _, Oracle(pcaGridSql)),
+    Op("label_silhouette", labelSilhouette _, Oracle(labelSilhouetteSql),
+      quadratic = Some("label_silhouette crosses each point with the LABEL-count-sized " +
+        "centroid broadcast (10 rows) — every point must see every centroid by " +
+        "definition of the metric")))
 }

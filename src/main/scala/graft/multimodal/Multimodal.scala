@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.Tables
+import graft.{Op, Tables}, Op.Oracle
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * contract (schema, batch iteration, partitioning) is identical on
   * all paths.
   */
-object Multimodal {
+object Multimodal extends Op.Registry {
 
   /** A multimodal record: payload + typed metadata. */
   case class MediaRecord(doc_id: Long, payload: Array[Byte], fmt: String, n_frames: Int)
@@ -365,26 +365,21 @@ object Multimodal {
                     / count(*), 6) AS dup_frac
        FROM fr JOIN freq USING (fp) GROUP BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "multimodal_meta"   -> (multimodalMeta _),
-    "multimodal_frames" -> (multimodalFrames _),
-    "frame_dedup"       -> (frameDedup _))
-
-  val oracles: Map[String, String] = Map(
-    "frame_dedup" -> frameDedupSql,
-    "multimodal_frames" ->
+  val ops: Seq[Op] = Seq(
+    Op("frame_dedup", frameDedup _, Oracle(frameDedupSql)),
+    Op("multimodal_frames", multimodalFrames _, Oracle(
       """SELECT doc_id,
          CAST(i // 100 AS BIGINT) AS frame_idx,
          CAST(i AS BIGINT) AS offset,
          CAST(ascii(substr(text, CAST(i AS INT) + 1, 1)) AS DOUBLE) AS level
          FROM documents,
          LATERAL unnest(generate_series(0, octet_length(encode(text)) - 1, 100)) AS u(i)
-         WHERE octet_length(encode(text)) > 0""",
-    "multimodal_meta" ->
+         WHERE octet_length(encode(text)) > 0""")),
+    Op("multimodal_meta", multimodalMeta _, Oracle(
       """SELECT doc_id,
          CAST(octet_length(encode(text)) AS BIGINT) AS byte_len,
          substr(sha256(text), 1, 16) AS checksum16,
          CAST(floor(octet_length(encode(text)) / 100) + 1 AS BIGINT) AS n_frames,
          CAST(len(generate_series(0, octet_length(encode(text)) - 1, 100)) AS BIGINT) AS n_sampled
-         FROM documents""")
+         FROM documents""")))
 }

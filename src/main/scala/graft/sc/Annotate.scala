@@ -1,6 +1,6 @@
 package graft.sc
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * running sum). wrapper.R:70-76 plots emptyDrops ambient p-values;
   * ambient_pval computes the analytic G-test twin.
   */
-object Annotate {
+object Annotate extends Op.Registry {
 
   private def r(c: org.apache.spark.sql.Column, d: Int) = round(c, d)
 
@@ -214,15 +214,12 @@ object Annotate {
               round((value - med) / nullif(1.4826 * mad, 0.0), 6) AS robust_z
        FROM m JOIN med USING (feature) JOIN mad ON m.feature = mad.feature"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "annotate_corr" -> (annotateCorr _),
-    "gsea_es"       -> (gseaEs _),
-    "ambient_pval"  -> (ambientPval _),
-    "robust_scale"  -> (robustScale _))
-
-  val oracles: Map[String, String] = Map(
-    "annotate_corr" -> annotateCorrSql,
-    "gsea_es"       -> gseaEsSql,
-    "ambient_pval"  -> ambientPvalSql,
-    "robust_scale"  -> robustScaleSql)
+  val ops: Seq[Op] = Seq(
+    Op("annotate_corr", annotateCorr _, Oracle(annotateCorrSql),
+      quadratic = Some(Reasons.EveryLabelCentroid)),
+    Op("gsea_es", gseaEs _, Oracle(gseaEsSql),
+      quadratic = Some(Reasons.EveryLabelCentroid)),
+    Op("ambient_pval", ambientPval _, Oracle(ambientPvalSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid)),
+    Op("robust_scale", robustScale _, Oracle(robustScaleSql)))
 }

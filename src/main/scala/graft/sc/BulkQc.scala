@@ -1,6 +1,6 @@
 package graft.sc
 
-import graft.Tables
+import graft.{Op, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * they are O(|samples|²) on an already-tiny aggregate, the same
   * contract DESeq2 itself assumes.
   */
-object BulkQc {
+object BulkQc extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -486,23 +486,20 @@ object BulkQc {
        FROM r4 g
        JOIN re3 USING (gene) JOIN ce3 USING (sample) CROSS JOIN ov3"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "median_polish"      -> (medianPolish _),
-    "size_factors"       -> (sizeFactors _),
-    "library_complexity" -> (libraryComplexity _),
-    "sample_dists"       -> (sampleDists _),
-    "ma_stats"           -> (maStats _),
-    "barcode_ranks"      -> (barcodeRanks _),
-    "n50_stats"          -> (n50Stats _),
-    "gini_spend"         -> (giniSpend _))
-
-  val oracles: Map[String, String] = Map(
-    "median_polish"      -> medianPolishSql,
-    "size_factors"       -> sizeFactorsSql,
-    "library_complexity" -> libraryComplexitySql,
-    "sample_dists"       -> sampleDistsSql,
-    "ma_stats"           -> maStatsSql,
-    "barcode_ranks"      -> barcodeRanksSql,
-    "n50_stats"          -> n50StatsSql,
-    "gini_spend"         -> giniSpendSql)
+  val ops: Seq[Op] = Seq(
+    Op("median_polish", medianPolish _, Oracle(medianPolishSql),
+      quadratic = Some("median_polish crosses the |genes| rows with the broadcast " +
+        "|samples| set to complete the bounded grid (the ma_stats precedent) and " +
+        "attaches 1-row median scalars")),
+    Op("size_factors", sizeFactors _, Oracle(sizeFactorsSql)),
+    Op("library_complexity", libraryComplexity _, Oracle(libraryComplexitySql)),
+    Op("sample_dists", sampleDists _, Oracle(sampleDistsSql)),
+    Op("ma_stats", maStats _, Oracle(maStatsSql),
+      quadratic = Some("ma_stats crosses the two aggregated DIM sets (samples × genes) " +
+        "to build the dense log-CPM scaffold MA analysis requires (missing entry ≡ " +
+        "count 0) — a bounded scaffold materialization, not a fact-fact pair join")),
+    Op("barcode_ranks", barcodeRanks _, Oracle(barcodeRanksSql),
+      globalWindow = Some("distinct (total,count) curve points")),
+    Op("n50_stats", n50Stats _, Oracle(n50StatsSql)),
+    Op("gini_spend", giniSpend _, Oracle(giniSpendSql)))
 }

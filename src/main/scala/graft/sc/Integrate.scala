@@ -1,6 +1,6 @@
 package graft.sc
 
-import graft.Tables
+import graft.{Op, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   *
   * Batches are pmod(vec_id, 2): batch 0 = reference, batch 1 = target.
   */
-object Integrate {
+object Integrate extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
   import graft.functions.VectorFunctions.{dot, topKByScore, hyperplaneBucket}
@@ -641,27 +641,37 @@ object Integrate {
                 AS batch_inv_simpson
        FROM mixc"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "mnn_pairs"       -> (mnnPairs _),
-    "mnn_pairs_lsh"   -> (mnnPairsLsh _),
-    "mnn_shift"       -> (mnnShift _),
-    "mnn_correct"     -> (mnnCorrect _),
-    "harmony_correct" -> (harmonyCorrect _),
-    "harmony_mixing"  -> (harmonyMixing _),
-    "cca_project"     -> (CcaGrid.ccaGridProject _),
-    "cca_grams"       -> (ccaGrams _),
-    "bitext_margin_mining" -> (bitextMarginMining _),
-    "bitext_margin_mining_lsh" -> (bitextMarginMiningLsh _))
+  private val ExactBatchOracle =
+    "exact BNL oracle paths of #206/#218: each broadcasts an entire batch (≈half the " +
+      "embedding corpus) as the small side — fine at sf0.1, quadratic at a larger gate " +
+      "SF. Their _lsh scale twins ARE benchmarked (same output contract, bounded bucket " +
+      "fan-out) — the dedup_ngram_jaccard convention."
+  private val MnnExactScorer =
+    "MNN exact scorer is the documented brute-force oracle path (dedup_embedding " +
+      "precedent); mnn_pairs_lsh is the scale feed and stays BNL-free"
+  private val HarmonyCentroids =
+    "harmony assignment crosses each cell with the ≤32-row broadcast centroid table — " +
+      "the label_silhouette \"every point must see every centroid\" shape, bounded by " +
+      "cluster count"
 
-  val oracles: Map[String, String] = Map(
-    "mnn_pairs"       -> mnnPairsSql,
-    "mnn_pairs_lsh"   -> mnnPairsLshSql,
-    "mnn_shift"       -> mnnShiftSql,
-    "mnn_correct"     -> mnnCorrectSql,
-    "harmony_correct" -> harmonyCorrectSql,
-    "harmony_mixing"  -> harmonyMixingOuterSql,
-    "cca_project"     -> CcaGrid.ccaGridSql,
-    "cca_grams"       -> ccaGramsSql,
-    "bitext_margin_mining" -> bitextMarginMiningSql,
-    "bitext_margin_mining_lsh" -> bitextMarginMiningLshSql)
+  val ops: Seq[Op] = Seq(
+    Op("mnn_pairs", mnnPairs _, Oracle(mnnPairsSql),
+      untimed = Some(ExactBatchOracle),
+      quadratic = Some(MnnExactScorer)),
+    Op("mnn_pairs_lsh", mnnPairsLsh _, Oracle(mnnPairsLshSql)),
+    Op("mnn_shift", mnnShift _, Oracle(mnnShiftSql),
+      quadratic = Some(MnnExactScorer)),
+    Op("mnn_correct", mnnCorrect _, Oracle(mnnCorrectSql),
+      quadratic = Some(MnnExactScorer)),
+    Op("harmony_correct", harmonyCorrect _, Oracle(harmonyCorrectSql),
+      quadratic = Some(HarmonyCentroids)),
+    Op("harmony_mixing", harmonyMixing _, Oracle(harmonyMixingOuterSql),
+      quadratic = Some(HarmonyCentroids)),
+    Op("cca_project", CcaGrid.ccaGridProject _, Oracle(CcaGrid.ccaGridSql)),
+    Op("cca_grams", ccaGrams _, Oracle(ccaGramsSql)),
+    Op("bitext_margin_mining", bitextMarginMining _, Oracle(bitextMarginMiningSql),
+      untimed = Some(ExactBatchOracle),
+      quadratic = Some("bitext mining scores through the exact cross-batch oracle " +
+        "scorer (mnn_pairs precedent)")),
+    Op("bitext_margin_mining_lsh", bitextMarginMiningLsh _, Oracle(bitextMarginMiningLshSql)))
 }

@@ -1,6 +1,6 @@
 package graft.sc
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import graft.core.Stats
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * wrapper.R:259-264 (mean-variance / HVG), integrate.R:51-181 (batch
   * standardize), slingshot.R/tradeseq.R (pseudotime association).
   */
-object SingleCell {
+object SingleCell extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -889,44 +889,8 @@ object SingleCell {
           (col("n1") + col("n2"))) * col("d") * col("d"))), 6).as("p_asym"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pairwise_ks"           -> (pairwiseKs _),
-    "pairwise_ks_binned"    -> (pairwiseKsBinned _),
-    "kl_mktsegment"         -> (klMktsegment _),
-    "term_groups"           -> (termGroupsQuery _),
-    "de_wilcoxon"           -> (deWilcoxonQuery _),
-    "auc_module_score"      -> (aucModuleScoreQuery _),
-    "feature_corr"          -> (featureCorrQuery _),
-    "de_markers"            -> (deMarkersQuery _),
-    "regress_out"           -> (regressOutMatrix _),
-    "regress_out2"          -> (regressOut2Matrix _),
-    "downsample_counts"     -> (downsampleCounts _),
-    "hvg_trend"             -> (hvgTrend _),
-    "kruskal_wallis"        -> (kruskalWallisQuery _),
-    "quantile_normalize"    -> (quantileNormalizeMatrix _),
-    "qc_cell_metrics"       -> (qcCellMetrics _),
-    "qc_mad_outliers"       -> (qcMadOutliers _),
-    "feature_filter"        -> (featureFilter _),
-    "log_normalize"         -> (logNormalize _),
-    "annotation_deltas"     -> (annotationDeltas _),
-    "annotation_combine"    -> (annotationCombine _),
-    "threshold_tally"       -> (thresholdTally _),
-    "label_group_diversity" -> (labelGroupDiversity _),
-    "inverse_simpson"       -> (inverseSimpson _),
-    "enrichment_ora"        -> (enrichmentOra _),
-    "module_score"          -> (moduleScore _),
-    "tf_activity_ulm"       -> (tfActivityUlm _),
-    "variance_explained"    -> (varianceExplained _),
-    "hvg_mean_var"          -> (hvgMeanVar _),
-    "batch_standardize"     -> (batchStandardize _),
-    "pseudotime_assoc"      -> (pseudotimeAssoc _),
-    "trajectory_ols"        -> (trajectoryOls _),
-    "spearman_assoc"        -> (spearmanAssoc _),
-    "entropy_by_group"      -> (entropyByGroup _),
-    "start_vs_end"          -> (startVsEnd _))
-
-  val oracles: Map[String, String] = Map(
-    "start_vs_end" -> {
+  val ops: Seq[Op] = Seq(
+    Op("start_vs_end", startVsEnd _, Oracle {
       val q = graft.core.Stats.normalUpperTailSql("abs(t_stat)")
       s"""WITH x0 AS (
            SELECT l_partkey AS feature, l_quantity AS x,
@@ -964,7 +928,9 @@ object SingleCell {
                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),6) AS p_adj
          FROM ranked"""
     },
-    "trajectory_ols" -> {
+      quadratic = Some(Reasons.GroupPairsOrRange),
+      globalWindow = Some("|features| contrast stats")),
+    Op("trajectory_ols", trajectoryOls _, Oracle {
       val q = graft.core.Stats.normalUpperTailSql("abs(t_stat)")
       s"""WITH x AS (
            SELECT l_partkey AS feature,
@@ -999,7 +965,8 @@ object SingleCell {
                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),6) AS p_adj
          FROM ranked"""
     },
-    "spearman_assoc" ->
+      globalWindow = Some("|features| BH ranks")),
+    Op("spearman_assoc", spearmanAssoc _, Oracle(
       """WITH x AS (
            SELECT l_partkey AS feature, CAST(epoch(o_orderdate) AS DOUBLE) AS xv,
                   l_quantity AS yv
@@ -1015,8 +982,8 @@ object SingleCell {
                   avg(ry0) OVER (PARTITION BY feature, yv) AS ry
            FROM r0)
          SELECT feature, count(*) AS n, round(corr(rx, ry), 6) + 0 AS rho
-         FROM a GROUP BY 1""",
-    "entropy_by_group" ->
+         FROM a GROUP BY 1""")),
+    Op("entropy_by_group", entropyByGroup _, Oracle(
       """WITH c AS (
            SELECT c_nationkey AS nation_key, c_mktsegment AS l, count(*) AS cnt
            FROM customer GROUP BY 1, 2)
@@ -1025,8 +992,8 @@ object SingleCell {
                 CASE WHEN count(*) > 1
                      THEN round((ln(sum(cnt)) - sum(cnt*ln(cnt))/sum(cnt))
                                 / ln(count(*)), 6) END AS evenness
-         FROM c GROUP BY 1""",
-    "pairwise_ks" ->
+         FROM c GROUP BY 1""")),
+    Op("pairwise_ks", pairwiseKs _, Oracle(
       """WITH counts AS (
            SELECT event_type AS t, value, count(*) AS c FROM events GROUP BY 1, 2),
          types AS (SELECT DISTINCT t FROM counts),
@@ -1053,8 +1020,12 @@ object SingleCell {
          SELECT t1, t2, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
                 round(d, 6) AS ks_d,
                 round(least(1.0, 2.0 * exp(-2.0 * (n1 * n2 / (n1 + n2)) * d * d)), 6) AS p_asym
-         FROM d""",
-    "pairwise_ks_binned" ->
+         FROM d"""),
+      untimed = Some("exact-ECDF oracle twin of #94: per-pair window partitions over " +
+        "DISTINCT VALUES approach |rows| on continuous data. Its pre-binned scale twin " +
+        "pairwise_ks_binned (≤256-row partitions by construction) IS benchmarked."),
+      quadratic = Some(Reasons.GroupPairsOrRange)),
+    Op("pairwise_ks_binned", pairwiseKsBinned _, Oracle(
       """WITH rng AS (SELECT min(value) AS vmn, max(value) AS vmx FROM events),
          counts AS MATERIALIZED (
            SELECT event_type AS t,
@@ -1087,8 +1058,9 @@ object SingleCell {
          SELECT t1, t2, CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
                 round(d, 6) AS ks_d,
                 round(least(1.0, 2.0 * exp(-2.0 * (n1 * n2 / (n1 + n2)) * d * d)), 6) AS p_asym
-         FROM d""",
-    "kl_mktsegment" ->
+         FROM d"""),
+      quadratic = Some(Reasons.GroupPairsOrRange)),
+    Op("kl_mktsegment", klMktsegment _, Oracle(
       """WITH seg AS (
            SELECT c_nationkey, c_mktsegment, count(*) AS n FROM customer GROUP BY 1, 2),
          nat AS (SELECT c_nationkey, sum(n) AS n_tot FROM seg GROUP BY 1),
@@ -1097,8 +1069,9 @@ object SingleCell {
          SELECT seg.c_nationkey AS nation, CAST(nat.n_tot AS BIGINT) AS n_customers,
                 round(sum((seg.n / nat.n_tot) * ln((seg.n / nat.n_tot) / (gl.g / gtot.g_tot))), 6) AS kl_div
          FROM seg JOIN nat USING (c_nationkey) JOIN gl USING (c_mktsegment), gtot
-         GROUP BY 1, 2""",
-    "term_groups" ->
+         GROUP BY 1, 2"""),
+      quadratic = Some(Reasons.OneRowTotals)),
+    Op("term_groups", termGroupsQuery _, Oracle(
       """WITH RECURSIVE membership AS (
            SELECT DISTINCT unnest(string_split(p_name, ' ')) AS term, p_partkey
            FROM part),
@@ -1123,8 +1096,8 @@ object SingleCell {
          SELECT v.vertex AS term,
                 least(v.vertex, min(r.b)) AS group_id
          FROM verts v LEFT JOIN reach r ON v.vertex = r.a
-         GROUP BY v.vertex""",
-    "de_wilcoxon" -> {
+         GROUP BY v.vertex""")),
+    Op("de_wilcoxon", deWilcoxonQuery _, Oracle {
       val q = graft.core.Stats.normalUpperTailSql("abs(z)")
       s"""WITH x AS (
            SELECT l_partkey AS feature, o_orderpriority = '1-URGENT' AS a,
@@ -1168,7 +1141,8 @@ object SingleCell {
                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),6) AS p_adj
          FROM rankedp"""
     },
-    "auc_module_score" ->
+      globalWindow = Some("|features| BH ranks")),
+    Op("auc_module_score", aucModuleScoreQuery _, Oracle(
       s"""WITH m AS ($matrixSql),
           j AS (
             SELECT entity, feature, value, p_size <= 10 AS inset
@@ -1182,8 +1156,8 @@ object SingleCell {
                    sum(CASE WHEN inset AND rnk <= 50 THEN 51.0 - rnk END)
                    / (least(sum(CASE WHEN inset THEN 1.0 END), 50.0) * 50.0),
                    0.0), 6) AS auc_score
-          FROM ranked GROUP BY entity""",
-    "feature_corr" ->
+          FROM ranked GROUP BY entity""")),
+    Op("feature_corr", featureCorrQuery _, Oracle(
       """WITH perc AS (
            SELECT o_custkey, o_orderpriority AS f, sum(o_totalprice) AS v
            FROM orders GROUP BY 1, 2)
@@ -1191,8 +1165,8 @@ object SingleCell {
                 round(corr(a.v, b.v), 6) + 0 AS pearson
          FROM perc a JOIN perc b
            ON a.o_custkey = b.o_custkey AND a.f < b.f
-         GROUP BY 1, 2""",
-    "de_markers" -> {
+         GROUP BY 1, 2""")),
+    Op("de_markers", deMarkersQuery _, Oracle {
       val q = graft.core.Stats.normalUpperTailSql("abs(t_stat)")
       s"""WITH x AS (
            SELECT l_partkey AS feature, o_orderpriority = '1-URGENT' AS a,
@@ -1225,11 +1199,15 @@ object SingleCell {
                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),6) AS p_adj
          FROM ranked"""
     },
-    "regress_out2" -> regressOut2Sql,
-    "downsample_counts" -> downsampleCountsSql,
-    "hvg_trend" -> hvgTrendSql,
-    "kruskal_wallis" -> kruskalWallisSql,
-    "regress_out" ->
+      globalWindow = Some("|features| BH ranks")),
+    Op("regress_out2", regressOut2Matrix _, Oracle(regressOut2Sql)),
+    Op("downsample_counts", downsampleCounts _, Oracle(downsampleCountsSql)),
+    Op("hvg_trend", hvgTrend _, Oracle(hvgTrendSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid),
+      globalWindow = Some("|features| aggregate")),
+    Op("kruskal_wallis", kruskalWallisQuery _, Oracle(kruskalWallisSql),
+      globalWindow = Some("|features| BH ranks")),
+    Op("regress_out", regressOutMatrix _, Oracle(
       """WITH x AS (
            SELECT l_orderkey, l_linenumber, l_partkey,
                   CAST(epoch(o_orderdate) AS DOUBLE)/1e9 AS xv, l_quantity AS y
@@ -1241,8 +1219,8 @@ object SingleCell {
          SELECT x.l_orderkey, x.l_linenumber, x.l_partkey,
                 round(CASE WHEN b IS NULL THEN y - my
                            ELSE y - (a + b*xv) END, 6) AS residual
-         FROM x JOIN coef ON x.l_partkey = coef.l_partkey""",
-    "quantile_normalize" ->
+         FROM x JOIN coef ON x.l_partkey = coef.l_partkey""")),
+    Op("quantile_normalize", quantileNormalizeMatrix _, Oracle(
       s"""WITH ranked AS (
             SELECT entity, feature, value,
                    row_number() OVER (PARTITION BY entity
@@ -1250,15 +1228,15 @@ object SingleCell {
             FROM ($matrixSql)),
           rank_means AS (SELECT rnk, avg(value) AS qnorm FROM ranked GROUP BY rnk)
           SELECT entity, feature, value, round(qnorm, 6) AS qnorm
-          FROM ranked JOIN rank_means USING (rnk)""",
-    "qc_cell_metrics" ->
+          FROM ranked JOIN rank_means USING (rnk)""")),
+    Op("qc_cell_metrics", qcCellMetrics _, Oracle(
       """SELECT l_orderkey AS entity,
          round(sum(l_quantity),4) AS total,
          count(DISTINCT l_partkey) AS detected,
          round(100.0 * sum(CASE WHEN l_partkey % 10 = 0 THEN l_quantity ELSE 0.0 END)
                / sum(l_quantity), 6) AS pct_subset
-         FROM lineitem GROUP BY l_orderkey""",
-    "qc_mad_outliers" ->
+         FROM lineitem GROUP BY l_orderkey""")),
+    Op("qc_mad_outliers", qcMadOutliers _, Oracle(
       """WITH totals AS (
            SELECT l_orderkey AS entity, o_orderpriority AS batch,
                   ln(1 + sum(l_quantity)) AS lx
@@ -1271,17 +1249,18 @@ object SingleCell {
                 abs(t.lx - m.med) > 3*1.4826*d.mad AS outlier,
                 t.lx < m.med - 3*1.4826*d.mad AS outlier_low
          FROM totals t JOIN med m ON t.batch = m.batch
-         JOIN mad d ON t.batch = d.batch""",
-    "feature_filter" ->
+         JOIN mad d ON t.batch = d.batch""")),
+    Op("feature_filter", featureFilter _, Oracle(
       """WITH m AS (SELECT l_orderkey AS entity, l_partkey AS feature,
                     sum(l_quantity) AS value
                     FROM lineitem GROUP BY 1,2),
          tot AS (SELECT count(DISTINCT entity) AS n_entities FROM m)
          SELECT feature, count(*) AS n_detected,
                 (count(*) >= 5 OR CAST(count(*) AS DOUBLE)/max(tot.n_entities) >= 0.02) AS keep
-         FROM m, tot GROUP BY feature""",
-    "log_normalize" -> logNormSql,
-    "annotation_deltas" ->
+         FROM m, tot GROUP BY feature"""),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("log_normalize", logNormalize _, Oracle(logNormSql)),
+    Op("annotation_deltas", annotationDeltas _, Oracle(
       """WITH scores AS (
            SELECT l_orderkey AS entity, l_returnflag AS label,
                   sum(l_extendedprice) AS score
@@ -1295,8 +1274,8 @@ object SingleCell {
          SELECT entity, label AS top_label, round(score,4) AS score,
                 round(score - med,4) AS delta_med,
                 round(score - coalesce(nxt, 0.0),4) AS delta_next
-         FROM ranked WHERE rk = 1""",
-    "annotation_combine" ->
+         FROM ranked WHERE rk = 1""")),
+    Op("annotation_combine", annotationCombine _, Oracle(
       """WITH m1 AS (
            SELECT entity, label AS label_m1 FROM (
              SELECT l_orderkey AS entity, l_returnflag AS label,
@@ -1311,8 +1290,8 @@ object SingleCell {
              FROM lineitem GROUP BY 1,2) WHERE rk = 1)
          SELECT m1.entity, label_m1, label_m2,
                 CASE WHEN label_m1 = label_m2 THEN label_m1 ELSE 'Ambiguous' END AS final_label
-         FROM m1 JOIN m2 ON m1.entity = m2.entity""",
-    "threshold_tally" ->
+         FROM m1 JOIN m2 ON m1.entity = m2.entity""")),
+    Op("threshold_tally", thresholdTally _, Oracle(
       """WITH metrics AS (
            SELECT l_orderkey AS entity, sum(l_quantity) AS total,
                   CAST(count(DISTINCT l_partkey) AS DOUBLE) AS detected
@@ -1323,8 +1302,9 @@ object SingleCell {
          SELECT (total >= t_total AND detected >= t_detected) AS pass,
                 round(t_total,6) AS t_total, round(t_detected,6) AS t_detected,
                 count(*) AS n
-         FROM metrics, thr GROUP BY 1, 2, 3""",
-    "label_group_diversity" ->
+         FROM metrics, thr GROUP BY 1, 2, 3"""),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("label_group_diversity", labelGroupDiversity _, Oracle(
       """WITH counts AS (
            SELECT c_nationkey AS grp, c_mktsegment AS label, count(*) AS n
            FROM customer GROUP BY 1,2),
@@ -1334,15 +1314,15 @@ object SingleCell {
            FROM counts)
          SELECT label, count(*) AS n_groups,
                 round(stddev_pop(prop)/avg(prop),6) AS cv
-         FROM props GROUP BY label""",
-    "inverse_simpson" ->
+         FROM props GROUP BY label""")),
+    Op("inverse_simpson", inverseSimpson _, Oracle(
       """WITH counts AS (
            SELECT c_nationkey AS grp, c_mktsegment AS label, count(*) AS n
            FROM customer GROUP BY 1,2)
          SELECT grp, CAST(sum(n) AS BIGINT) AS n_total,
                 round(CAST(sum(n) AS DOUBLE)*sum(n)/sum(n*n),6) AS inv_simpson
-         FROM counts GROUP BY grp""",
-    "enrichment_ora" ->
+         FROM counts GROUP BY grp""")),
+    Op("enrichment_ora", enrichmentOra _, Oracle(
       """WITH hits AS (SELECT DISTINCT l_partkey FROM lineitem
                        WHERE l_returnflag = 'R' AND l_quantity >= 50),
          base AS (
@@ -1369,9 +1349,14 @@ object SingleCell {
                 round(p,6) AS p_value,
                 round(least(1.0, min(p*m/rk) OVER (ORDER BY rk ASC
                   ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)),6) AS p_adj
-         FROM ranked""",
-    "tf_activity_ulm" -> tfActivityUlmSql,
-    "module_score" ->
+         FROM ranked"""),
+      quadratic = Some(Reasons.BruteForceBaseline),
+      globalWindow = Some("|terms| BH ranks")),
+    Op("tf_activity_ulm", tfActivityUlm _, Oracle(tfActivityUlmSql),
+      quadratic = Some("tf_activity_ulm crosses each entity's stats with the |TFs|-row " +
+        "(25 brands) target-count broadcast — the dense activity matrix is the operator " +
+        "(ma_stats scaffold precedent)")),
+    Op("module_score", moduleScore _, Oracle(
       s"""WITH lognorm AS (
             SELECT entity, feature,
                    ln(1 + value / sum(value) OVER (PARTITION BY entity) * 10000) AS lognorm
@@ -1380,8 +1365,8 @@ object SingleCell {
                  round(avg(CASE WHEN p_size <= 10 THEN lognorm END)
                      - avg(CASE WHEN p_size > 10 THEN lognorm END),6) AS module_score
           FROM lognorm JOIN part ON feature = p_partkey
-          GROUP BY entity""",
-    "variance_explained" ->
+          GROUP BY entity""")),
+    Op("variance_explained", varianceExplained _, Oracle(
       """WITH x AS (
            SELECT l_partkey AS feature, o_orderpriority AS grp, l_quantity AS x
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -1394,8 +1379,8 @@ object SingleCell {
          SELECT g.feature, o.n_all,
                 round(sum(n_g*(m_g-m_all)*(m_g-m_all)) / (n_all*nullif(v_all,0.0)),6) AS r2
          FROM by_group g JOIN overall o ON g.feature = o.feature
-         GROUP BY g.feature, o.n_all, o.v_all""",
-    "hvg_mean_var" ->
+         GROUP BY g.feature, o.n_all, o.v_all""")),
+    Op("hvg_mean_var", hvgMeanVar _, Oracle(
       s"""WITH lognorm AS (
             SELECT entity, feature,
                    ln(1 + value / sum(value) OVER (PARTITION BY entity) * 10000) AS lognorm
@@ -1407,8 +1392,9 @@ object SingleCell {
           SELECT feature, n, mean_ln, var_ln,
                  row_number() OVER (ORDER BY var_ln DESC, feature ASC) AS hvg_rank,
                  row_number() OVER (ORDER BY var_ln DESC, feature ASC) <= 50 AS is_hvg
-          FROM stats""",
-    "batch_standardize" ->
+          FROM stats"""),
+      globalWindow = Some("|features| aggregate")),
+    Op("batch_standardize", batchStandardize _, Oracle(
       """WITH x AS (
            SELECT l_orderkey, l_linenumber, o_orderpriority AS batch, l_quantity AS x
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -1416,12 +1402,12 @@ object SingleCell {
            SELECT batch, avg(x) AS mu, stddev_pop(x) AS sigma FROM x GROUP BY batch)
          SELECT l_orderkey, l_linenumber, x.batch,
                 round((x.x - mu)/nullif(sigma,0.0),6) AS z
-         FROM x JOIN moments ON x.batch = moments.batch""",
-    "pseudotime_assoc" ->
+         FROM x JOIN moments ON x.batch = moments.batch""")),
+    Op("pseudotime_assoc", pseudotimeAssoc _, Oracle(
       """WITH x AS (
            SELECT l_partkey AS feature,
                   CAST(epoch(o_orderdate) AS DOUBLE) AS pt, l_quantity AS x
            FROM lineitem JOIN orders ON l_orderkey = o_orderkey)
          SELECT feature, count(*) AS n, round(corr(x, pt),6) + 0 AS assoc
-         FROM x GROUP BY feature""")
+         FROM x GROUP BY feature""")))
 }

@@ -1,6 +1,6 @@
 package graft.sc
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * analytic-in-place-of-GAM simplification start_vs_end (#122) uses
   * for startVsEndTest).
   */
-object Trajectory {
+object Trajectory extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -626,23 +626,23 @@ object Trajectory {
        SELECT branch_id, count(*) AS n_cells
        FROM cells JOIN combo USING (label) GROUP BY 1"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "cluster_mst"        -> (clusterMst _),
-    "pattern_diff"       -> (patternDiff _),
-    "early_de"           -> (earlyDe _),
-    "condition_test"     -> (conditionTest _),
-    "diff_end"           -> (diffEnd _),
-    "pseudotime_assign"  -> (pseudotimeAssign _),
-    "pseudotime_de"      -> (pseudotimeDe _),
-    "lineage_membership" -> (lineageMembership _))
-
-  val oracles: Map[String, String] = Map(
-    "cluster_mst"        -> clusterMstSql,
-    "pattern_diff"       -> patternDiffSql,
-    "early_de"           -> earlyDeSql,
-    "condition_test"     -> conditionTestSql,
-    "diff_end"           -> diffEndSql,
-    "pseudotime_assign"  -> pseudotimeAssignSql,
-    "pseudotime_de"      -> pseudotimeDeSql,
-    "lineage_membership" -> lineageMembershipSql)
+  val ops: Seq[Op] = Seq(
+    Op("cluster_mst", clusterMst _, Oracle(clusterMstSql),
+      quadratic = Some(Reasons.EveryLabelCentroid)),
+    Op("pattern_diff", patternDiff _, Oracle(patternDiffSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid),
+      globalWindow = Some("|features|x|bins| profile")),
+    Op("early_de", earlyDe _, Oracle(earlyDeSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid),
+      globalWindow = Some("|features|x|bins| profile")),
+    Op("condition_test", conditionTest _, Oracle(conditionTestSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid),
+      globalWindow = Some("|features|x|bins| profile")),
+    Op("diff_end", diffEnd _, Oracle(diffEndSql),
+      quadratic = Some(Reasons.GlobalScalarsOrBinGrid),
+      globalWindow = Some("|features| endpoint stats")),
+    Op("pseudotime_assign", pseudotimeAssign _, Oracle(pseudotimeAssignSql)),
+    Op("pseudotime_de", pseudotimeDe _, Oracle(pseudotimeDeSql),
+      globalWindow = Some("|features| BH ranks")),
+    Op("lineage_membership", lineageMembership _, Oracle(lineageMembershipSql)))
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   * All vector math is double-precision higher-order folds over the
   * packed array column — no per-dimension rows, no UDFs.
   */
-object Ann {
+object Ann extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -1331,71 +1331,79 @@ object Ann {
        FROM selall5"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "pagerank_knn"        -> (pagerankKnn _),
-    "pagerank_knn_lsh"    -> (pagerankKnnLsh _),
-    "local_lisi"          -> (localLisi _),
-    "local_lisi_lsh"      -> (localLisiLsh _),
-    "knn_components"      -> (knnComponents _),
-    "knn_components_lsh"  -> (knnComponentsLsh _),
-    "knn_clustering_coeff"     -> (knnClusteringCoeff _),
-    "knn_clustering_coeff_lsh" -> (knnClusteringCoeffLsh _),
-    "ann_bruteforce_topk" -> (annBruteforceTopk _),
-    "ivf_nprobe_sweep"    -> (ivfNprobeSweep _),
-    "lsh_planes_sweep"    -> (lshPlanesSweep _),
-    "ivf_cell_balance"    -> (ivfCellBalance _),
-    "mmr_diversified_topk" -> (mmrDiversifiedTopk _),
-    "ann_lsh_topk"        -> (annLshTopk _),
-    "ann_ivf_topk"        -> (annIvfTopk _),
-    "ann_recall_eval"     -> (annRecallEval _),
-    "ann_rbo_eval"        -> (annRboEval _),
-    "ann_ndcg_eval"       -> (annNdcgEval _),
-    "hard_negatives"      -> (hardNegatives _),
-    "hard_negatives_lsh"  -> (hardNegativesLsh _),
-    "label_prop_knn"      -> (labelPropKnn _),
-    "label_prop_knn_lsh"  -> (labelPropKnnLsh _),
-    "louvain_knn"         -> (louvainKnn _),
-    "louvain_knn_lsh"     -> (louvainKnnLsh _))
+  private val ExactTruthScorer =
+    "ann_recall_eval / hard_negatives / label_prop_knn ride the documented brute-force " +
+      "scorer (oracle paths; the _lsh twins are the scale feeds and stay BNL-free)"
+  private val RankEvalTruth =
+    "RBO + NDCG evals score the LSH feed against the documented brute-force exact truth " +
+      "(the ann_recall_eval precedent)"
 
-  val oracles: Map[String, String] = Map(
-    "pagerank_knn" -> s"WITH ${bruteKnnSql(5)},\n$pagerankTailSql",
-    "pagerank_knn_lsh" ->
-      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$pagerankTailSql",
-    "local_lisi" -> s"WITH ${bruteKnnSql(30)},\n$lisiTailSql",
-    "local_lisi_lsh" ->
-      s"WITH $lshSigPrefixSql,\n${lshKnnSql(30)},\n$lisiTailSql",
-    "knn_components" ->
-      s"WITH RECURSIVE ${bruteKnnSql(5)},\n$componentsTailSql",
-    "knn_clustering_coeff" ->
-      s"WITH ${bruteKnnSql(5)},\n$clusteringTailSql",
-    "knn_clustering_coeff_lsh" ->
-      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$clusteringTailSql",
-    "knn_components_lsh" ->
-      s"WITH RECURSIVE $lshSigPrefixSql,\n${lshKnnSql(5)},\n$componentsTailSql",
-    "ivf_nprobe_sweep" -> ivfNprobeSweepSql,
-    "ann_ivf_topk" -> ivfOracleSql(
-      "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings"),
-    "lsh_planes_sweep" -> lshPlanesSweepSql,
-    "ivf_cell_balance" -> ivfCellBalanceSql,
-    "ann_recall_eval" -> annRecallEvalSql,
-    "ann_rbo_eval" -> annRboEvalSql,
-    "ann_ndcg_eval" -> annNdcgEvalSql,
-    "hard_negatives" -> hardNegativesSql,
-    "hard_negatives_lsh" -> hardNegativesLshSql,
-    "label_prop_knn" -> s"WITH ${bruteKnnSql(5)},\n$labelPropTailSql",
-    "label_prop_knn_lsh" ->
-      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$labelPropTailSql",
-    "louvain_knn" -> s"WITH ${bruteKnnSql(5)},\n$louvainTailSql",
-    "louvain_knn_lsh" ->
-      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$louvainTailSql",
-    "mmr_diversified_topk" -> mmrDiversifiedTopkSql,
-    "ann_lsh_topk" ->
+  val ops: Seq[Op] = Seq(
+    Op("pagerank_knn", pagerankKnn _, Oracle(s"WITH ${bruteKnnSql(5)},\n$pagerankTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("pagerank_knn_lsh", pagerankKnnLsh _, Oracle(
+      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$pagerankTailSql")),
+    Op("local_lisi", localLisi _, Oracle(s"WITH ${bruteKnnSql(30)},\n$lisiTailSql"),
+      untimed = Some(Reasons.ExactAllPairsCosine),
+      quadratic = Some("local_lisi's neighborhoods come from the documented brute-force " +
+        "scorer (LSH/IVF candidates are the scale path)")),
+    Op("local_lisi_lsh", localLisiLsh _, Oracle(
+      s"WITH $lshSigPrefixSql,\n${lshKnnSql(30)},\n$lisiTailSql")),
+    Op("knn_components", knnComponents _, Oracle(
+      s"WITH RECURSIVE ${bruteKnnSql(5)},\n$componentsTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("knn_clustering_coeff", knnClusteringCoeff _, Oracle(
+      s"WITH ${bruteKnnSql(5)},\n$clusteringTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some("exact triangle feed rides the documented brute-force kNN oracle " +
+        "path; the _lsh twin is the scale feed and stays BNL-free")),
+    Op("knn_clustering_coeff_lsh", knnClusteringCoeffLsh _, Oracle(
+      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$clusteringTailSql")),
+    Op("knn_components_lsh", knnComponentsLsh _, Oracle(
+      s"WITH RECURSIVE $lshSigPrefixSql,\n${lshKnnSql(5)},\n$componentsTailSql")),
+    Op("ivf_nprobe_sweep", ivfNprobeSweep _, Oracle(ivfNprobeSweepSql),
+      quadratic = Some(Reasons.SampledOrTruthScorer)),
+    Op("ann_ivf_topk", annIvfTopk _, Oracle(ivfOracleSql(
+      "SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings")),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("lsh_planes_sweep", lshPlanesSweep _, Oracle(lshPlanesSweepSql),
+      quadratic = Some("lsh_planes_sweep rides the brute-force truth scorer " +
+        "(ann_recall_eval precedent); its candidate joins are bucketed")),
+    Op("ivf_cell_balance", ivfCellBalance _, Oracle(ivfCellBalanceSql),
+      quadratic = Some("ivf_cell_balance attaches the 1-row totals agg to the 16-row " +
+        "cell counts — scalar attach, not a pair join")),
+    Op("ann_recall_eval", annRecallEval _, Oracle(annRecallEvalSql),
+      quadratic = Some(ExactTruthScorer)),
+    Op("ann_rbo_eval", annRboEval _, Oracle(annRboEvalSql),
+      quadratic = Some(RankEvalTruth)),
+    Op("ann_ndcg_eval", annNdcgEval _, Oracle(annNdcgEvalSql),
+      quadratic = Some(RankEvalTruth)),
+    Op("hard_negatives", hardNegatives _, Oracle(hardNegativesSql),
+      quadratic = Some(ExactTruthScorer)),
+    Op("hard_negatives_lsh", hardNegativesLsh _, Oracle(hardNegativesLshSql)),
+    Op("label_prop_knn", labelPropKnn _, Oracle(s"WITH ${bruteKnnSql(5)},\n$labelPropTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactTruthScorer)),
+    Op("label_prop_knn_lsh", labelPropKnnLsh _, Oracle(
+      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$labelPropTailSql")),
+    Op("louvain_knn", louvainKnn _, Oracle(s"WITH ${bruteKnnSql(5)},\n$louvainTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some("louvain's exact feed rides the same brute-force scorer; the " +
+        "_lsh twin is the scale feed and stays BNL-free (m is a bounded driver scalar " +
+        "off the checkpointed edge list, not a 1-row BNL)")),
+    Op("louvain_knn_lsh", louvainKnnLsh _, Oracle(
+      s"WITH $lshSigPrefixSql,\n${lshKnnSql(5)},\n$louvainTailSql")),
+    Op("mmr_diversified_topk", mmrDiversifiedTopk _, Oracle(mmrDiversifiedTopkSql)),
+    Op("ann_lsh_topk", annLshTopk _, Oracle(
       s"""WITH $lshSigPrefixSql,
          ${lshKnnSql(10, "WHERE s.vec_id % 50 = 0")}
          SELECT qid, nid AS neighbor_id, round(cs, 6) AS cos_sim,
                 CAST(rk AS BIGINT) AS rk
-         FROM scored WHERE rk <= 10""",
-    "ann_bruteforce_topk" ->
+         FROM scored WHERE rk <= 10"""),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("ann_bruteforce_topk", annBruteforceTopk _, Oracle(
       """SELECT qid, neighbor_id, cos_sim, rk FROM (
            SELECT q.vec_id AS qid, c.vec_id AS neighbor_id,
                   round(list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]), 6) AS cos_sim,
@@ -1404,5 +1412,6 @@ object Ann {
                              c.vec_id ASC) AS rk
            FROM embeddings q JOIN embeddings c ON q.vec_id != c.vec_id
            WHERE q.vec_id % 50 = 0)
-         WHERE rk <= 10""")
+         WHERE rk <= 10"""),
+      quadratic = Some(Reasons.BruteForceBaseline)))
 }

@@ -1,6 +1,6 @@
 package graft.sim
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * feed contract (brute-force oracle / hyperplane-LSH scale path), like
   * every other graph query.
   */
-object GraphOps {
+object GraphOps extends Op.Registry {
 
   private val SnnK = 5
 
@@ -1009,83 +1009,84 @@ object GraphOps {
        JOIN deg db ON db.v = c.b
        ORDER BY c.common_neighbors DESC, c.a ASC, c.b ASC LIMIT 50"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "link_predict_knn"     -> (linkPredictKnn _),
-    "link_predict_knn_lsh" -> (linkPredictKnnLsh _),
-    "centroid_stability"  -> (centroidStability _),
-    "label_centroid_sims" -> (labelCentroidSims _),
-    "ppr_knn"             -> (pprKnn _),
-    "ppr_knn_lsh"         -> (pprKnnLsh _),
-    "distance_histogram"  -> (distanceHistogram _),
-    "knn_label_noise"     -> (knnLabelNoise _),
-    "knn_da_screen"       -> (knnDaScreen _),
-    "knn_da_screen_lsh"   -> (knnDaScreenLsh _),
-    "knn_label_noise_lsh" -> (knnLabelNoiseLsh _),
-    "embedding_mmd"       -> (embeddingMmd _),
-    "leiden_refine"       -> (leidenRefine _),
-    "leiden_refine_lsh"   -> (leidenRefineLsh _),
-    "modularity_score"    -> (modularityScore _),
-    "modularity_score_lsh" -> (modularityScoreLsh _),
-    "knn_assortativity"   -> (knnAssortativity _),
-    "knn_assortativity_lsh" -> (knnAssortativityLsh _),
-    "louvain_snn"       -> (louvainSnn _),
-    "louvain_snn_lsh"   -> (louvainSnnLsh _),
-    "knn_bfs_dists"     -> (knnBfsDists _),
-    "knn_bfs_dists_lsh" -> (knnBfsDistsLsh _),
-    "snn_graph"     -> (snnGraph _),
-    "snn_graph_lsh" -> (snnGraphLsh _),
-    "kcore_knn"     -> (kcoreKnn _),
-    "kcore_knn_lsh" -> (kcoreKnnLsh _))
-
   private val mutualPrefixSql =
     """mutual AS MATERIALIZED (
          SELECT x.qid AS a, x.nid AS b FROM knn x
          JOIN knn y ON x.qid = y.nid AND x.nid = y.qid
          WHERE x.qid < x.nid)"""
 
-  val oracles: Map[String, String] = Map(
-    "link_predict_knn" ->
-      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$mutualPrefixSql,\n$linkPredictTailSql",
-    "link_predict_knn_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$mutualPrefixSql,\n$linkPredictTailSql",
-    "label_centroid_sims" -> labelCentroidSimsSql,
-    "centroid_stability" -> centroidStabilitySql,
-    "ppr_knn" -> s"WITH ${Ann.bruteKnnSql(SnnK)},\n$pprTailSql",
-    "ppr_knn_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$pprTailSql",
-    "distance_histogram" -> distanceHistogramSql,
-    "knn_label_noise" ->
-      s"WITH ${Ann.bruteKnnSql(SnnK)}\n$labelNoiseTailSql",
-    "knn_da_screen" ->
-      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$daScreenTailSql",
-    "knn_da_screen_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$daScreenTailSql",
-    "knn_label_noise_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)}\n$labelNoiseTailSql",
-    "embedding_mmd" -> embeddingMmdSql,
-    "leiden_refine" ->
-      s"WITH RECURSIVE ${Ann.bruteKnnSql(SnnK)},\n$leidenTailSql",
-    "leiden_refine_lsh" ->
-      s"WITH RECURSIVE ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$leidenTailSql",
-    "modularity_score" ->
-      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$modularityTailSql",
-    "modularity_score_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$modularityTailSql",
-    "knn_assortativity" ->
-      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$mutualPrefixSql,\n$assortTailSql",
-    "knn_assortativity_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$mutualPrefixSql,\n$assortTailSql",
-    "louvain_snn" ->
-      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$snnPrefixSql,\n$louvainSnnTailSql",
-    "louvain_snn_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$snnPrefixSql,\n$louvainSnnTailSql",
-    "knn_bfs_dists" -> s"WITH ${Ann.bruteKnnSql(SnnK)},\n$bfsTailSql",
-    "knn_bfs_dists_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$bfsTailSql",
-    "snn_graph" -> s"WITH ${Ann.bruteKnnSql(SnnK)},\n$snnTailSql",
-    "snn_graph_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$snnTailSql",
-    "kcore_knn" -> s"WITH ${Ann.bruteKnnSql(SnnK)},\n$kcoreTailSql",
-    "kcore_knn_lsh" ->
-      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$kcoreTailSql")
+  private val ExactKnnFeeds =
+    "the SNN / k-core / BFS / weighted-Louvain exact feeds ride the same documented " +
+      "brute-force kNN scorer (louvain_knn precedent); their _lsh twins are the scale " +
+      "feeds and stay BNL-free"
+
+  val ops: Seq[Op] = Seq(
+    Op("link_predict_knn", linkPredictKnn _, Oracle(
+      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$mutualPrefixSql,\n$linkPredictTailSql")),
+    Op("link_predict_knn_lsh", linkPredictKnnLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$mutualPrefixSql,\n$linkPredictTailSql")),
+    Op("label_centroid_sims", labelCentroidSims _, Oracle(labelCentroidSimsSql),
+      quadratic = Some("label_centroid_sims crosses the |labels|-row centroid arrays " +
+        "(the cluster_mst |labels|² precedent)")),
+    Op("centroid_stability", centroidStability _, Oracle(centroidStabilitySql)),
+    Op("ppr_knn", pprKnn _, Oracle(s"WITH ${Ann.bruteKnnSql(SnnK)},\n$pprTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some("ppr_knn's exact feed rides the brute-force scorer (pagerank_knn " +
+        "precedent); the _lsh twin is the scale feed")),
+    Op("ppr_knn_lsh", pprKnnLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$pprTailSql")),
+    Op("distance_histogram", distanceHistogram _, Oracle(distanceHistogramSql),
+      quadratic = Some(Reasons.SampledOrTruthScorer)),
+    Op("knn_label_noise", knnLabelNoise _, Oracle(
+      s"WITH ${Ann.bruteKnnSql(SnnK)}\n$labelNoiseTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("knn_da_screen", knnDaScreen _, Oracle(
+      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$daScreenTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("knn_da_screen_lsh", knnDaScreenLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$daScreenTailSql")),
+    Op("knn_label_noise_lsh", knnLabelNoiseLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)}\n$labelNoiseTailSql")),
+    Op("embedding_mmd", embeddingMmd _, Oracle(embeddingMmdSql)),
+    Op("leiden_refine", leidenRefine _, Oracle(
+      s"WITH RECURSIVE ${Ann.bruteKnnSql(SnnK)},\n$leidenTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("leiden_refine_lsh", leidenRefineLsh _, Oracle(
+      s"WITH RECURSIVE ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$leidenTailSql")),
+    Op("modularity_score", modularityScore _, Oracle(
+      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$modularityTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("modularity_score_lsh", modularityScoreLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$modularityTailSql")),
+    Op("knn_assortativity", knnAssortativity _, Oracle(
+      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$mutualPrefixSql,\n$assortTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("knn_assortativity_lsh", knnAssortativityLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$mutualPrefixSql,\n$assortTailSql")),
+    Op("louvain_snn", louvainSnn _, Oracle(
+      s"WITH ${Ann.bruteKnnSql(SnnK)},\n$snnPrefixSql,\n$louvainSnnTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("louvain_snn_lsh", louvainSnnLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$snnPrefixSql,\n$louvainSnnTailSql")),
+    Op("knn_bfs_dists", knnBfsDists _, Oracle(s"WITH ${Ann.bruteKnnSql(SnnK)},\n$bfsTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("knn_bfs_dists_lsh", knnBfsDistsLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$bfsTailSql")),
+    Op("snn_graph", snnGraph _, Oracle(s"WITH ${Ann.bruteKnnSql(SnnK)},\n$snnTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("snn_graph_lsh", snnGraphLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$snnTailSql")),
+    Op("kcore_knn", kcoreKnn _, Oracle(s"WITH ${Ann.bruteKnnSql(SnnK)},\n$kcoreTailSql"),
+      untimed = Some(Reasons.ExactKnnGraphFeed),
+      quadratic = Some(ExactKnnFeeds)),
+    Op("kcore_knn_lsh", kcoreKnnLsh _, Oracle(
+      s"WITH ${Ann.lshSigPrefixSql},\n${Ann.lshKnnSql(SnnK)},\n$kcoreTailSql")))
 }

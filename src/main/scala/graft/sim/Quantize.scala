@@ -2,7 +2,7 @@ package graft.sim
 
 import scala.jdk.CollectionConverters._
 
-import graft.Tables
+import graft.{Op, Tables}, Op.Oracle
 import graft.functions.QuantOuterProduct.q
 import graft.ml.Reduce.{LloydCents, LloydPoint, lloydRounds, nearest, sqDist}
 import org.apache.spark.rdd.RDD
@@ -37,7 +37,7 @@ import org.apache.spark.sql.types._
   *    Grid-Lloyd-trained (Reduce.gridLloyd, r6) → hash-checked like
   *    the rest of the SQ family; recall re-pinned in QuantizeSpec.
   */
-object Quantize {
+object Quantize extends Op.Registry {
 
   import graft.functions.VectorFunctions.dot
 
@@ -723,21 +723,17 @@ object Quantize {
       |                     * (maxs[i] - mins[i]) / 255.0 END) AS vq
       |  FROM embeddings, mm)""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "embedding_quantize_audit" -> (embeddingQuantizeAudit _),
-    "ann_sq_topk"              -> (annSqTopk _),
-    "ann_pq_topk"              -> (annPqTopk _),
-    "ann_ivfpq_topk"           -> (annIvfPqTopk _),
-    "ann_ivfpq_residual_topk"  -> (annIvfPqResidualTopk _),
-    "ann_ivf_sq_topk"          -> (annIvfSqTopk _),
-    "ann_binary_topk"          -> (annBinaryTopk _),
-    "ann_binary_rerank_topk"   -> (annBinaryRerankTopk _),
-    "ann_rrf_fusion_topk"      -> (annRrfFusionTopk _),
-    "ann_matryoshka_eval"      -> (annMatryoshkaEval _),
-    "ann_jl_projection_eval"   -> (annJlProjEval _))
+  private val Sq8Family =
+    "SQ8 family: quantize audit attaches the 1-row per-dim codebook; ann_sq_topk is the " +
+      "documented ADC brute-force baseline; ann_ivf_sq_topk broadcasts the 16-row " +
+      "centroid table"
+  private val BinaryCodeFamily =
+    "binary-code family: the popcount hamming scan IS the documented scale plan (32× " +
+      "smaller corpus, SIMD popcount full scan) and the rerank stage touches only " +
+      "|queries|·50 vectors"
 
-  val oracles: Map[String, String] = Map(
-    "embedding_quantize_audit" ->
+  val ops: Seq[Op] = Seq(
+    Op("embedding_quantize_audit", embeddingQuantizeAudit _, Oracle(
       s"""WITH $dqPrefixSql,
          |err AS (
          |  SELECT label,
@@ -751,8 +747,9 @@ object Quantize {
          |       round(avg(mse) * 1e6, 6) AS avg_mse_e6,
          |       round(max(maxe), 9) AS max_abs_err,
          |       round(avg(cs), 6) AS avg_cos_sim
-         |FROM err GROUP BY label""".stripMargin,
-    "ann_sq_topk" ->
+         |FROM err GROUP BY label""".stripMargin),
+      quadratic = Some(Sq8Family)),
+    Op("ann_sq_topk", annSqTopk _, Oracle(
       s"""WITH $dqPrefixSql
          |SELECT qid, neighbor_id, cos_sim, rk FROM (
          |  SELECT q.vec_id AS qid, c.vec_id AS neighbor_id,
@@ -762,17 +759,20 @@ object Quantize {
          |                    c.vec_id ASC) AS rk
          |  FROM dq q JOIN dq c ON q.vec_id != c.vec_id
          |  WHERE q.vec_id % 50 = 0)
-         |WHERE rk <= 10""".stripMargin,
-    "ann_ivf_sq_topk" ->
+         |WHERE rk <= 10""".stripMargin),
+      quadratic = Some(Sq8Family)),
+    Op("ann_ivf_sq_topk", annIvfSqTopk _, Oracle(
       s"""WITH $dqPrefixSql,
 ${graft.ml.Reduce.lloydPrefixSql(Seq(Ann.IvfCells), "SELECT vec_id, vq AS v FROM dq")},
-${Ann.ivfTailSql}""",
-    "ann_binary_topk" ->
+${Ann.ivfTailSql}"""),
+      quadratic = Some(Sq8Family)),
+    Op("ann_binary_topk", annBinaryTopk _, Oracle(
       s"""WITH $binaryScoredSql
          |SELECT qid, nid AS neighbor_id, CAST(ham AS BIGINT) AS hamming,
          |       srk AS rk
-         |FROM hscore WHERE srk <= 10""".stripMargin,
-    "ann_binary_rerank_topk" ->
+         |FROM hscore WHERE srk <= 10""".stripMargin),
+      quadratic = Some(BinaryCodeFamily)),
+    Op("ann_binary_rerank_topk", annBinaryRerankTopk _, Oracle(
       s"""WITH $binaryScoredSql,
          |shortlist AS (SELECT qid, nid FROM hscore WHERE srk <= 50),
          |rer AS (
@@ -785,8 +785,9 @@ ${Ann.ivfTailSql}""",
          |  JOIN bsig q ON s.qid = q.vec_id
          |  JOIN bsig c ON s.nid = c.vec_id)
          |SELECT qid, nid AS neighbor_id, round(cs, 6) AS cos_sim, rk
-         |FROM rer WHERE rk <= 10""".stripMargin,
-    "ann_rrf_fusion_topk" ->
+         |FROM rer WHERE rk <= 10""".stripMargin),
+      quadratic = Some(BinaryCodeFamily)),
+    Op("ann_rrf_fusion_topk", annRrfFusionTopk _, Oracle(
       s"""WITH ${Ann.lshSigPrefixSql},
          |${Ann.lshKnnSql(10, "WHERE s.vec_id % 50 = 0")},
          |$binaryScoredSql,
@@ -804,10 +805,16 @@ ${Ann.ivfTailSql}""",
          |    ORDER BY rrf DESC, nid ASC) AS rk FROM fused)
          |SELECT qid, nid AS neighbor_id, round(rrf, 6) AS rrf_score,
          |       CAST(rk AS BIGINT) AS rk
-         |FROM rnk WHERE rk <= 10""".stripMargin,
-    "ann_matryoshka_eval" -> annMatryoshkaEvalSql,
-    "ann_jl_projection_eval" -> annJlProjEvalSql,
-    "ann_pq_topk" -> annPqTopkSql,
-    "ann_ivfpq_topk" -> annIvfPqTopkSql,
-    "ann_ivfpq_residual_topk" -> annIvfPqResidualTopkSql)
+         |FROM rnk WHERE rk <= 10""".stripMargin),
+      quadratic = Some("rrf fusion composes the two allowed shortlist scans " +
+        "(ann_lsh_topk, ann_binary_topk)")),
+    Op("ann_matryoshka_eval", annMatryoshkaEval _, Oracle(annMatryoshkaEvalSql),
+      quadratic = Some("matryoshka eval rides the documented brute-force scorer on both " +
+        "rank cuts (the ann_recall_eval precedent)")),
+    Op("ann_jl_projection_eval", annJlProjEval _, Oracle(annJlProjEvalSql),
+      quadratic = Some("JL projection eval rides the same broadcast-queries exact " +
+        "scorer twice (projected + full-precision truth) — the matryoshka precedent")),
+    Op("ann_pq_topk", annPqTopk _, Oracle(annPqTopkSql)),
+    Op("ann_ivfpq_topk", annIvfPqTopk _, Oracle(annIvfPqTopkSql)),
+    Op("ann_ivfpq_residual_topk", annIvfPqResidualTopk _, Oracle(annIvfPqResidualTopkSql)))
 }

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Op, Op.{Oracle, RowsOnly}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -24,7 +25,7 @@ import org.apache.spark.sql.functions._
   *
   * Results are memoized per (session, dir, query): PlanSpec's analysis
   * sweep, Verify, and repeated calls reuse one replay run. Bench
-  * QUARANTINES this family (Bench.skip) — a MemoryStream replay
+  * QUARANTINES this family (each Op is `untimed`) — a MemoryStream replay
   * collects the fact table to the driver, which is the correctness
   * lane's price, not a scale path; the batch twins (windowed_events,
   * sessionize_events, active_users, psi_drift, range_join_clicks,
@@ -33,7 +34,7 @@ import org.apache.spark.sql.functions._
   * test harness (collect + MemoryStream) is driver-bounded; the
   * operator state itself stays watermark-bounded.
   */
-object StreamReplay {
+object StreamReplay extends Op.Registry {
 
   private val Batches = 8
   private val HourMs = 3600L * 1000
@@ -235,9 +236,7 @@ object StreamReplay {
   // -----------------------------------------------------------------
   // 325. funnel replay (rows-only): the flatMapGroupsWithState ordered
   // view→click→purchase tracker over the real events; completions emit
-  // inline, sentinels time out every partial. Deterministic under the
-  // ordered feed, but the per-user automaton has no clean SQL twin —
-  // declared rows-only (the text_compression precedent).
+  // inline, sentinels time out every partial. Rows-only: see its Op.
   def funnelReplay(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "funnel") {
       val ev = orderedEvents(s, dir)
@@ -254,11 +253,8 @@ object StreamReplay {
   // -----------------------------------------------------------------
   // 326. near-dup stream replay (rows-only): every doc explodes into 16
   // LSH band keys; bands already claimed within the watermark horizon
-  // are dropped, so fresh-band counts measure novelty. Rows-only: docs
-  // sharing a band key inside one micro-batch race for the claim
-  // (dropDuplicates keeps an arbitrary one), so per-doc counts are not
-  // SQL-pinnable — the suite's StreamingSpec pins the semantics on
-  // controlled input instead.
+  // are dropped, so fresh-band counts measure novelty. Rows-only: see
+  // its Op.
   def nearDupReplay(s: SparkSession, dir: String): DataFrame =
     memo(s, dir, "near_dup") {
       import s.implicits._
@@ -278,23 +274,19 @@ object StreamReplay {
     }
 
   // -----------------------------------------------------------------
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "stream_windowed_replay"    -> (windowedReplay _),
-    "stream_sessionize_replay"  -> (sessionizeReplay _),
-    "stream_dau_replay"         -> (dauReplay _),
-    "stream_psi_replay"         -> (psiReplay _),
-    "stream_ingest_filter_replay" -> (ingestFilterReplay _),
-    "stream_click_attribution_replay" -> (clickAttributionReplay _),
-    "stream_funnel_replay"      -> (funnelReplay _),
-    "stream_neardup_replay"     -> (nearDupReplay _)
-  )
+  private val ReplayLane =
+    "the streaming replay lane: correctness-gate entries that collect the fact table to " +
+      "a driver-side MemoryStream — by construction not a scale path; the batch twins " +
+      "(windowed_events, sessionize_events, active_users, psi_drift, range_join_clicks, " +
+      "filter_decision) carry the scale numbers"
 
-  def oracles: Map[String, String] = Map(
-    "stream_windowed_replay" ->
+  val ops: Seq[Op] = Seq(
+    Op("stream_windowed_replay", windowedReplay _, Oracle(
       """SELECT epoch_us(date_trunc('hour', ts)) AS window_start_us,
                 event_type, count(*) AS n, round(sum(value), 4) AS sum_value
-         FROM events GROUP BY 1, 2""",
-    "stream_sessionize_replay" ->
+         FROM events GROUP BY 1, 2"""),
+      untimed = Some(ReplayLane)),
+    Op("stream_sessionize_replay", sessionizeReplay _, Oracle(
       """WITH e AS (SELECT user_id, epoch_ms(ts) AS ms, value FROM events),
          flagged AS (
            SELECT user_id, ms, value,
@@ -308,12 +300,14 @@ object StreamReplay {
            FROM flagged)
          SELECT user_id, min(ms) AS start_ms, max(ms) AS end_ms,
                 count(*) AS n_events, round(sum(value), 4) AS sum_value
-         FROM sess GROUP BY user_id, sid""",
-    "stream_dau_replay" ->
+         FROM sess GROUP BY user_id, sid"""),
+      untimed = Some(ReplayLane)),
+    Op("stream_dau_replay", dauReplay _, Oracle(
       """SELECT epoch_us(date_trunc('day', ts)) AS day_start_us,
                 count(DISTINCT user_id) AS dau
-         FROM events GROUP BY 1""",
-    "stream_psi_replay" -> {
+         FROM events GROUP BY 1"""),
+      untimed = Some(ReplayLane)),
+    Op("stream_psi_replay", psiReplay _, Oracle {
       val terms = (0 until 10).map { i =>
         s"(((c$i + 0.5) / (n + 5.0)) - q$i) * ln(((c$i + 0.5) / (n + 5.0)) / q$i)"
       }.mkString(" + ")
@@ -347,7 +341,8 @@ object StreamReplay {
          SELECT window_start_us, wc.event_type, n, round($terms, 6) AS psi
          FROM wc JOIN q ON wc.event_type = q.event_type"""
     },
-    "stream_ingest_filter_replay" ->
+      untimed = Some(ReplayLane)),
+    Op("stream_ingest_filter_replay", ingestFilterReplay _, Oracle(
       """WITH pri AS (
            SELECT source,
                   CAST(count(*) AS DOUBLE)
@@ -362,12 +357,22 @@ object StreamReplay {
                  AND CAST(len(regexp_extract_all(text, '[0-9]')) AS DOUBLE)
                      / length(text) <= 0.3
                  AND coalesce(w, 1.0) >= 0.2) AS keep
-         FROM documents JOIN pri USING (source)""",
-    "stream_click_attribution_replay" ->
+         FROM documents JOIN pri USING (source)"""),
+      untimed = Some(ReplayLane)),
+    Op("stream_click_attribution_replay", clickAttributionReplay _, Oracle(
       """SELECT p.event_id, p.user_id, epoch_us(p.ts) AS p_ts_us,
                 epoch_us(c.ts) AS c_ts_us, c.value AS c_val
          FROM events p JOIN events c ON c.user_id = p.user_id
          WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-           AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts"""
-  )
+           AND c.ts >= p.ts - INTERVAL 1 HOUR AND c.ts <= p.ts"""),
+      untimed = Some(ReplayLane)),
+    Op("stream_funnel_replay", funnelReplay _, RowsOnly("Deterministic under the " +
+      "ordered feed, but the per-user automaton has no clean SQL twin — declared " +
+      "rows-only (the text_compression precedent)."),
+      untimed = Some(ReplayLane)),
+    Op("stream_neardup_replay", nearDupReplay _, RowsOnly("docs sharing a band key " +
+      "inside one micro-batch race for the claim (dropDuplicates keeps an arbitrary " +
+      "one), so per-doc counts are not SQL-pinnable — the suite's StreamingSpec pins " +
+      "the semantics on controlled input instead"),
+      untimed = Some(ReplayLane)))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * the engine's cross-engine deterministic randomness primitive);
   * re-keying an epoch = salting the hash input.
   */
-object Batching {
+object Batching extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -158,13 +158,8 @@ object Batching {
                     ELSE 0.0 END, 6) AS pad_waste
        FROM cut GROUP BY 1, 2"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "shard_assign"          -> (shardAssign _),
-    "length_bucket_batches" -> (lengthBucketBatches _),
-    "chunk_documents"       -> (chunkDocuments _))
-
-  val oracles: Map[String, String] = Map(
-    "shard_assign"          -> shardAssignSql,
-    "length_bucket_batches" -> lengthBucketBatchesSql,
-    "chunk_documents"       -> chunkDocumentsSql)
+  val ops: Seq[Op] = Seq(
+    Op("shard_assign", shardAssign _, Oracle(shardAssignSql)),
+    Op("length_bucket_batches", lengthBucketBatches _, Oracle(lengthBucketBatchesSql)),
+    Op("chunk_documents", chunkDocuments _, Oracle(chunkDocumentsSql)))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * between rounds. At 100 TB: identical plan, bucket count is the
   * capacity lever (2^18 buckets is still a broadcast).
   */
-object Classify {
+object Classify extends Op.Registry {
 
   private val NumBuckets = 64
   private val Rounds = 3
@@ -288,7 +288,7 @@ object Classify {
         round(col("n") / col("n_true").cast("double"), 6).as("row_share"))
 
   private def langidConfusionSql =
-    s"""WITH li AS (${TextOps.oracles("lang_id")}),
+    s"""WITH li AS (${TextOps.langIdSql}),
        conf AS (
          SELECT tagged_lang, pred_lang, count(*) AS n
          FROM li GROUP BY 1, 2),
@@ -616,23 +616,29 @@ object Classify {
        |JOIN rgt USING (w2), nb
        |GROUP BY 1""".stripMargin
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "kneser_ney_score"   -> (kneserNeyScore _),
-    "trigram_sb_score"   -> (trigramSbScore _),
-    "source_style_kl"    -> (sourceStyleKl _),
-    "doremi_weights"     -> (doremiWeights _),
-    "langid_confusion"   -> (langidConfusion _),
-    "perceptron_quality" -> (perceptronQuality _),
-    "classifier_eval"    -> (classifierEval _),
-    "word_lm_score"      -> (wordLmScore _))
+  private val PerceptronWeights =
+    "the perceptron's margin pass attaches the 1-row 65-slot weight ARRAY per round " +
+      "(the cuped scalar-attach shape, bounded by the bucket-count capacity lever) — " +
+      "the per-round doc-keyed feature shuffles it replaced were the scale cost"
 
-  val oracles: Map[String, String] = Map(
-    "kneser_ney_score"   -> kneserNeyScoreSql,
-    "trigram_sb_score"   -> trigramSbScoreSql,
-    "source_style_kl"    -> sourceStyleKlSql,
-    "doremi_weights"     -> doremiWeightsSql,
-    "langid_confusion"   -> langidConfusionSql,
-    "perceptron_quality" -> perceptronQualitySql,
-    "classifier_eval"    -> classifierEvalSql,
-    "word_lm_score"      -> wordLmScoreSql)
+  val ops: Seq[Op] = Seq(
+    Op("kneser_ney_score", kneserNeyScore _, Oracle(kneserNeyScoreSql),
+      quadratic = Some("kneser_ney_score attaches the 1-row distinct-bigram total NB " +
+        "(the word_lm_score scalar-attach precedent)")),
+    Op("trigram_sb_score", trigramSbScore _, Oracle(trigramSbScoreSql),
+      quadratic = Some("trigram_sb_score attaches the 1-row unigram total N (the " +
+        "char_lm_score scalar-attach precedent)")),
+    Op("source_style_kl", sourceStyleKl _, Oracle(sourceStyleKlSql),
+      quadratic = Some("source_style_kl attaches the 1-row corpus word-total (the " +
+        "char_lm_score scalar-attach precedent)")),
+    Op("doremi_weights", doremiWeights _, Oracle(doremiWeightsSql),
+      quadratic = Some("doremi_weights attaches the 1-row corpus-total / corpus-loss / " +
+        "normalizer scalars (the source_mix_weights precedent)")),
+    Op("langid_confusion", langidConfusion _, Oracle(langidConfusionSql)),
+    Op("perceptron_quality", perceptronQuality _, Oracle(perceptronQualitySql),
+      quadratic = Some(PerceptronWeights)),
+    Op("classifier_eval", classifierEval _, Oracle(classifierEvalSql),
+      quadratic = Some(PerceptronWeights)),
+    Op("word_lm_score", wordLmScore _, Oracle(wordLmScoreSql),
+      quadratic = Some(Reasons.TotalsAttach)))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * (Dolma/RefinedWeb keep-or-route signal) from pure per-row regex
   * counts.
   */
-object Clean {
+object Clean extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -196,11 +196,7 @@ object Clean {
        FROM documents"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "dedup_span_removal" -> (dedupSpanRemoval _),
-    "code_detect"        -> (codeDetect _))
-
-  val oracles: Map[String, String] = Map(
-    "dedup_span_removal" -> dedupSpanRemovalSql,
-    "code_detect"        -> codeDetectSql)
+  val ops: Seq[Op] = Seq(
+    Op("dedup_span_removal", dedupSpanRemoval _, Oracle(dedupSpanRemovalSql)),
+    Op("code_detect", codeDetect _, Oracle(codeDetectSql)))
 }

@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.{Oracle, RowsOnly}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * chosen to evaluate identically under Java regex (Spark) and RE2
   * (DuckDB oracle): no backrefs, no lookaround, shared escapes only.
   */
-object TextOps {
+object TextOps extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -1555,8 +1555,7 @@ object TextOps {
   // summary. Templated/repeated text compresses far below natural
   // prose; high-entropy noise sits near 1.0 — a one-pass, shuffle-free
   // screen that catches boilerplate the word-level repetition stats
-  // (#61) miss. Rows-only at the gate (no zlib in the oracle engine);
-  // semantics + determinism spec'd in VectorExprsPropSpec.
+  // (#61) miss. Rows-only at the gate: see its Op.
   def textCompression(s: SparkSession, dir: String): DataFrame =
     Tables.documents(s, dir).select(
       col("doc_id"), col("source"),
@@ -1911,52 +1910,6 @@ object TextOps {
        FROM pf CROSS JOIN gstat"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "chrf_proxy"       -> (chrfProxy _),
-    "length_profile"   -> (lengthProfile _),
-    "heavy_hitters"    -> (heavyHitters _),
-    "text_compression" -> (textCompression _),
-    "text_compression_proxy" -> (textCompressionProxy _),
-    "quality_signal_corr" -> (qualitySignalCorr _),
-    "token_gini" -> (tokenGini _),
-    "para_dedup"       -> (paraDedup _),
-    "dup_ngram_fraction" -> (dupNgramFraction _),
-    "char_lm_score"    -> (charLmScore _),
-    "perplexity_buckets" -> (perplexityBuckets _),
-    "filter_decision"  -> (filterDecision _),
-    "zipf_fit"         -> (zipfFit _),
-    "zipf_by_source"   -> (zipfBySource _),
-    "bm25_top_terms"   -> (bm25TopTerms _),
-    "corpus_bleu_proxy" -> (corpusBleuProxy _),
-    "pmi_bigrams"      -> (pmiBigrams _),
-    "dsir_weights"     -> (dsirWeights _),
-    "dsir_weights_hashed" -> (dsirWeightsHashed _),
-    "source_mix_weights" -> (sourceMixWeights _),
-    "ngram_diversity"  -> (ngramDiversity _),
-    "mix_resample"     -> (mixResample _),
-    "token_budget_alloc" -> (tokenBudgetAlloc _),
-    "topic_assign"     -> (topicAssign _),
-    "topic_top_terms"  -> (topicTopTerms _),
-    "topic_coherence_npmi" -> (topicCoherenceNpmi _),
-    "topic_mix_by_source" -> (topicMixBySource _),
-    "gopher_rules"     -> (gopherRules _),
-    "token_fertility"  -> (tokenFertility _),
-    "curation_funnel"  -> (curationFunnel _),
-    "word_lang_mi"     -> (wordLangMi _),
-    "proportional_allocation" -> (proportionalAllocation _),
-    "dataset_split"    -> (datasetSplit _),
-    "text_token_stats" -> (textTokenStats _),
-    "text_quality"     -> (textQuality _),
-    "text_entropy"     -> (textEntropy _),
-    "readability"      -> (readability _),
-    "blocklist_filter" -> (blocklistFilter _),
-    "oov_rate"         -> (oovRate _),
-    "lang_id"          -> (langId _),
-    "doc_fingerprint"  -> (docFingerprint _),
-    "tfidf_top_terms"  -> (tfidfTopTerms _),
-    "text_repetition"  -> (textRepetition _),
-    "pack_sequences"   -> (packSequences _))
-
   private val qualitySql = {
     val len = "CAST(length(text) AS DOUBLE)"
     val nWs = raw"CAST(len(regexp_extract_all(text, '\S+')) AS DOUBLE)"
@@ -1973,7 +1926,7 @@ object TextOps {
         FROM documents"""
   }
 
-  private val langIdSql = {
+  private[text] val langIdSql = {
     val padded = "(' ' || lower(text) || ' ')"
     val scores = markers.map { case (l, toks) =>
       l -> toks.map(tokenCountSql(padded, _)).mkString("(", " + ", ")")
@@ -2023,37 +1976,68 @@ object TextOps {
        FROM documents d JOIN f ON d.source = f.source, fm"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "text_compression_proxy" -> textCompressionProxySql,
-    "quality_signal_corr" -> qualitySignalCorrSql,
-    "token_gini" -> tokenGiniSql,
-    "mix_resample" -> mixResampleSql,
-    "length_profile" -> lengthProfileSql,
-    "heavy_hitters" -> heavyHittersSql,
-    "para_dedup" -> paraDedupSql,
-    "dup_ngram_fraction" -> dupNgramFractionSql,
-    "topic_assign" -> topicAssignSql,
-    "topic_top_terms" -> topicTopTermsSql,
-    "topic_coherence_npmi" -> topicCoherenceNpmiSql,
-    "topic_mix_by_source" -> topicMixBySourceSql,
-    "gopher_rules" -> gopherRulesSql,
-    "token_fertility" -> tokenFertilitySql,
-    "curation_funnel" -> curationFunnelSql,
-    "word_lang_mi" -> wordLangMiSql,
-    "proportional_allocation" -> proportionalAllocationSql,
-    "char_lm_score" -> charLmScoreSql,
-    "filter_decision" -> filterDecisionSql,
-    "perplexity_buckets" ->
+  private val CorpusBigramTotal =
+    "char_lm_score attaches the 1-row corpus bigram total; perplexity_buckets inherits " +
+      "the same attach through it"
+  private val MixScalarAttach =
+    "dsir_weights (+ hashed twin) / source_mix_weights / mix_resample attach 1-row " +
+      "LM-total / normalizer / max-factor scalars — scalar attaches, not pair joins"
+  private val DocCountAttach =
+    "topic_assign / topic_top_terms / topic_mix attach the 1-row doc-count scalar for " +
+      "the stopword df cut — scalar attach, not a pair join; token_budget_alloc " +
+      "attaches the 1-row capped-totals agg"
+  private val VocabLangScaffold =
+    "word_lang_mi builds the bounded |vocab|x|langs| scaffold (the ma_stats precedent) " +
+      "+ 1-row N attach; proportional_allocation attaches the 1-row totals/seats " +
+      "aggregates"
+
+  val ops: Seq[Op] = Seq(
+    Op("text_compression_proxy", textCompressionProxy _, Oracle(textCompressionProxySql)),
+    Op("quality_signal_corr", qualitySignalCorr _, Oracle(qualitySignalCorrSql)),
+    Op("token_gini", tokenGini _, Oracle(tokenGiniSql)),
+    Op("mix_resample", mixResample _, Oracle(mixResampleSql),
+      quadratic = Some(MixScalarAttach)),
+    Op("length_profile", lengthProfile _, Oracle(lengthProfileSql)),
+    Op("heavy_hitters", heavyHitters _, Oracle(heavyHittersSql)),
+    Op("text_compression", textCompression _, RowsOnly("Rows-only at the gate (no zlib " +
+      "in the oracle engine); semantics + determinism spec'd in VectorExprsPropSpec.")),
+    Op("para_dedup", paraDedup _, Oracle(paraDedupSql)),
+    Op("dup_ngram_fraction", dupNgramFraction _, Oracle(dupNgramFractionSql)),
+    Op("topic_assign", topicAssign _, Oracle(topicAssignSql),
+      quadratic = Some(DocCountAttach)),
+    Op("topic_top_terms", topicTopTerms _, Oracle(topicTopTermsSql),
+      quadratic = Some(DocCountAttach)),
+    Op("topic_coherence_npmi", topicCoherenceNpmi _, Oracle(topicCoherenceNpmiSql),
+      quadratic = Some("topic_coherence_npmi attaches the 1-row doc-count scalar (the " +
+        "topic_assign precedent); its pair join is term-equi-keyed")),
+    Op("topic_mix_by_source", topicMixBySource _, Oracle(topicMixBySourceSql),
+      quadratic = Some(DocCountAttach)),
+    Op("gopher_rules", gopherRules _, Oracle(gopherRulesSql)),
+    Op("token_fertility", tokenFertility _, Oracle(tokenFertilitySql)),
+    Op("curation_funnel", curationFunnel _, Oracle(curationFunnelSql)),
+    Op("word_lang_mi", wordLangMi _, Oracle(wordLangMiSql),
+      quadratic = Some(VocabLangScaffold)),
+    Op("proportional_allocation", proportionalAllocation _, Oracle(proportionalAllocationSql),
+      quadratic = Some(VocabLangScaffold),
+      globalWindow = Some("|sources| rows")),
+    Op("char_lm_score", charLmScore _, Oracle(charLmScoreSql),
+      quadratic = Some(CorpusBigramTotal)),
+    Op("filter_decision", filterDecision _, Oracle(filterDecisionSql)),
+    Op("perplexity_buckets", perplexityBuckets _, Oracle(
       s"""SELECT d.doc_id, d.lang, s.lm_score,
             ntile(3) OVER (PARTITION BY d.lang
               ORDER BY s.lm_score DESC, d.doc_id ASC) AS tercile,
             CASE ntile(3) OVER (PARTITION BY d.lang
               ORDER BY s.lm_score DESC, d.doc_id ASC)
               WHEN 1 THEN 'head' WHEN 2 THEN 'middle' ELSE 'tail' END AS bucket
-          FROM ($charLmScoreSql) s JOIN documents d USING (doc_id)""",
-    "zipf_fit" -> zipfFitSql,
-    "zipf_by_source" -> zipfBySourceSql,
-    "bm25_top_terms" ->
+          FROM ($charLmScoreSql) s JOIN documents d USING (doc_id)"""),
+      quadratic = Some(CorpusBigramTotal)),
+    // vocabulary-bounded rank tables (corpus-sublinear; cap at top-N
+    // vocab at larger scale — documented in SURVEY §5)
+    Op("zipf_fit", zipfFit _, Oracle(zipfFitSql),
+      globalWindow = Some("vocab rank (sublinear)")),
+    Op("zipf_by_source", zipfBySource _, Oracle(zipfBySourceSql)),
+    Op("bm25_top_terms", bm25TopTerms _, Oracle(
       """WITH terms AS (
            SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term FROM documents),
          tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY 1, 2),
@@ -2067,10 +2051,15 @@ object TextOps {
            FROM tf JOIN dft ON tf.term = dft.term JOIN dlen ON tf.doc_id = dlen.doc_id, n)
          SELECT doc_id, term, tf, df, round(bm25_raw, 6) AS bm25,
                 row_number() OVER (PARTITION BY doc_id ORDER BY bm25_raw DESC, term ASC) AS rk
-         FROM scored QUALIFY rk <= 3""",
-    "corpus_bleu_proxy" -> corpusBleuProxySql,
-    "chrf_proxy" -> chrfProxySql,
-    "pmi_bigrams" ->
+         FROM scored QUALIFY rk <= 3"""),
+      quadratic = Some(Reasons.OneRowTotals)),
+    Op("corpus_bleu_proxy", corpusBleuProxy _, Oracle(corpusBleuProxySql),
+      quadratic = Some(Reasons.BoundedScaffolds)),
+    Op("chrf_proxy", chrfProxy _, Oracle(chrfProxySql),
+      quadratic = Some(Reasons.RoundScalarAttach)),
+    // vocabulary-bounded rank tables (corpus-sublinear; cap at top-N
+    // vocab at larger scale — documented in SURVEY §5)
+    Op("pmi_bigrams", pmiBigrams _, Oracle(
       """WITH ws AS (
            SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws FROM documents),
          uni AS (SELECT unnest(ws) AS w FROM ws),
@@ -2089,8 +2078,10 @@ object TextOps {
            WHERE c_ab >= 5)
          SELECT a, b, c_ab, c_a, c_b, round(pmi_raw, 6) AS pmi,
                 row_number() OVER (ORDER BY pmi_raw DESC, a ASC, b ASC) AS rk
-         FROM scored QUALIFY rk <= 20""",
-    "dsir_weights" ->
+         FROM scored QUALIFY rk <= 20"""),
+      quadratic = Some(Reasons.OneRowTotals),
+      globalWindow = Some("bigram vocab rank (df-cut)")),
+    Op("dsir_weights", dsirWeights _, Oracle(
       """WITH words AS (
            SELECT doc_id, source,
                   unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w
@@ -2107,8 +2098,9 @@ object TextOps {
                 round(sum(dt.n * (ln((lm.ct + 1.0) / (nt + v))
                                   - ln((lm.cr + 1.0) / (nr + v)))), 6) AS log_weight
          FROM dt JOIN lm USING (w), tot
-         GROUP BY 1""",
-    "dsir_weights_hashed" ->
+         GROUP BY 1"""),
+      quadratic = Some(MixScalarAttach)),
+    Op("dsir_weights_hashed", dsirWeightsHashed _, Oracle(
       """WITH words0 AS (
            SELECT doc_id, source,
                   unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS w0
@@ -2134,8 +2126,9 @@ object TextOps {
                 round(sum(dt.n * (ln((lm.ct + 1.0) / (nt + v))
                                   - ln((lm.cr + 1.0) / (nr + v)))), 6) AS log_weight
          FROM dt JOIN lm USING (w), tot
-         GROUP BY 1""",
-    "source_mix_weights" ->
+         GROUP BY 1"""),
+      quadratic = Some(MixScalarAttach)),
+    Op("source_mix_weights", sourceMixWeights _, Oracle(
       """WITH toks AS (
            SELECT source,
                   CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS n_tokens
@@ -2146,8 +2139,9 @@ object TextOps {
                 round(n_tokens / n_all, 6) AS p_natural,
                 round(pow(n_tokens, 0.3) / z, 6) AS p_mix,
                 round((pow(n_tokens, 0.3) / z) / (n_tokens / n_all), 6) AS resample_factor
-         FROM toks, tot""",
-    "token_budget_alloc" ->
+         FROM toks, tot"""),
+      quadratic = Some(MixScalarAttach)),
+    Op("token_budget_alloc", tokenBudgetAlloc _, Oracle(
       """WITH toks AS (
            SELECT source,
                   CAST(sum(len(regexp_extract_all(lower(text), '[a-z0-9]+'))) AS BIGINT) AS n_tokens
@@ -2179,8 +2173,10 @@ object TextOps {
                 round(CASE WHEN capped THEN CAST(n_tokens AS DOUBLE)
                       ELSE p_mix * (t_budget - cap_n) / (1.0 - cap_p) END
                       / n_tokens, 6) AS fill_rate
-         FROM cap, ct""",
-    "ngram_diversity" ->
+         FROM cap, ct"""),
+      quadratic = Some(DocCountAttach),
+      globalWindow = Some("|sources| rows")),
+    Op("ngram_diversity", ngramDiversity _, Oracle(
       """WITH ws AS (
            SELECT source, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
            FROM documents),
@@ -2193,18 +2189,18 @@ object TextOps {
                 round(v_words / CAST(n_words AS DOUBLE), 6) AS ttr_words,
                 n_bigrams, v_bigrams,
                 round(v_bigrams / CAST(n_bigrams AS DOUBLE), 6) AS ttr_bigrams
-         FROM uni JOIN bi USING (source)""",
-    "dataset_split" -> datasetSplitSql,
-    "text_token_stats" ->
+         FROM uni JOIN bi USING (source)""")),
+    Op("dataset_split", datasetSplit _, Oracle(datasetSplitSql)),
+    Op("text_token_stats", textTokenStats _, Oracle(
       raw"""SELECT doc_id, CAST(length(text) AS BIGINT) AS len_chars,
            CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS n_ws_tokens,
            CAST(len(regexp_extract_all(lower(text), '$bpePat')) AS BIGINT) AS n_bpe_tokens
-           FROM documents""",
-    "text_quality" -> qualitySql,
-    "readability" -> readabilitySql,
-    "blocklist_filter" -> blocklistFilterSql,
-    "oov_rate" -> oovRateSql,
-    "text_entropy" ->
+           FROM documents""")),
+    Op("text_quality", textQuality _, Oracle(qualitySql)),
+    Op("readability", readability _, Oracle(readabilitySql)),
+    Op("blocklist_filter", blocklistFilter _, Oracle(blocklistFilterSql)),
+    Op("oov_rate", oovRate _, Oracle(oovRateSql)),
+    Op("text_entropy", textEntropy _, Oracle(
       """WITH d AS (SELECT doc_id, lower(text) AS t FROM documents),
          ch AS (
            SELECT doc_id, tok, count(*) AS c
@@ -2224,9 +2220,9 @@ object TextOps {
            FROM wd GROUP BY 1)
          SELECT ce.doc_id, ce.n_chars, ce.char_alphabet, ce.char_entropy,
                 we.n_words, we.word_alphabet, we.word_entropy
-         FROM ce LEFT JOIN we ON ce.doc_id = we.doc_id""",
-    "lang_id" -> langIdSql,
-    "text_repetition" ->
+         FROM ce LEFT JOIN we ON ce.doc_id = we.doc_id""")),
+    Op("lang_id", langId _, Oracle(langIdSql)),
+    Op("text_repetition", textRepetition _, Oracle(
       raw"""WITH base AS (
              SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS w
              FROM documents),
@@ -2249,8 +2245,8 @@ object TextOps {
                     THEN CAST(list_max(list_transform(list_distinct(g2),
                       g -> len(list_filter(g2, x -> x = g)))) AS DOUBLE)/len(g2)
                     ELSE 0.0 END, 6) AS top_2gram_frac
-           FROM g""",
-    "pack_sequences" ->
+           FROM g""")),
+    Op("pack_sequences", packSequences _, Oracle(
       raw"""WITH d AS (
              SELECT doc_id, source,
                     CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT) AS tok
@@ -2266,8 +2262,8 @@ object TextOps {
                   CAST(floor(greatest(end_off - 1, end_off - tok)/512.0) AS BIGINT) AS seq_last,
                   CAST(floor(greatest(end_off - 1, end_off - tok)/512.0) AS BIGINT)
                     - CAST(floor((end_off - tok)/512.0) AS BIGINT) + 1 AS n_seqs
-           FROM o""",
-    "tfidf_top_terms" ->
+           FROM o""")),
+    Op("tfidf_top_terms", tfidfTopTerms _, Oracle(
       """WITH terms AS (
            SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
            FROM documents),
@@ -2281,12 +2277,13 @@ object TextOps {
          SELECT doc_id, term, tf, df, round(tfidf_raw, 6) AS tfidf,
                 row_number() OVER (PARTITION BY doc_id
                   ORDER BY tfidf_raw DESC, term ASC) AS rk
-         FROM scored QUALIFY rk <= 3""",
-    "doc_fingerprint" ->
+         FROM scored QUALIFY rk <= 3"""),
+      quadratic = Some(Reasons.BruteForceBaseline)),
+    Op("doc_fingerprint", docFingerprint _, Oracle(
       """SELECT d.doc_id, CAST(length(d.text) AS BIGINT) AS len_chars,
          COALESCE((
            SELECT CAST(sum(ascii(substr(d.text, CAST(i AS INT), 1))
                   * ((i * 2654435761) % 1000000007) % 1000000007) % 1000000007 AS BIGINT)
            FROM unnest(generate_series(1, length(d.text))) AS t(i)), 0) AS fp
-         FROM documents d""")
+         FROM documents d""")))
 }

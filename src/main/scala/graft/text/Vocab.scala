@@ -1,6 +1,6 @@
 package graft.text
 
-import graft.Tables
+import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * integer counts, deterministic tie-breaks, and (for the one OLS fit)
   * the same regr_* aggregates the zipf_fit precedent established.
   */
-object Vocab {
+object Vocab extends Op.Registry {
 
   private def r(c: Column, d: Int): Column = round(c, d)
 
@@ -1163,39 +1163,34 @@ object Vocab {
   FROM be JOIN ue USING (doc_id)"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "unigram_lm_train"    -> (unigramLmTrain _),
-    "unigram_lm_encode"   -> (unigramLmEncode _),
-    "tokenizer_compare"   -> (tokenizerCompare _),
-    "good_turing_mass"    -> (goodTuringMass _),
-    "cms_frequency"       -> (cmsFrequency _),
-    "token_quota_cut"     -> (tokenQuotaCut _),
-    "ngram_novelty_curve" -> (ngramNoveltyCurve _),
-    "bpe_merges"        -> (bpeMerges _),
-    "bpe_merge_curve"   -> (bpeMergeCurve _),
-    "bpe_train_deep"    -> (bpeTrainDeep _),
-    "bpe_vocab_inventory" -> (bpeVocabInventory _),
-    "word_burstiness"   -> (wordBurstiness _),
-    "hapax_rate"        -> (hapaxRate _),
-    "bpe_encode"        -> (bpeEncode _),
-    "heaps_fit"         -> (heapsFit _),
-    "charclass_profile" -> (charclassProfile _))
+  private val RangeOrTotalAttach =
+    "ngram_novelty_curve attaches the 1-row doc_id range (the value_per_bin precedent); " +
+      "token_quota_cut attaches the 1-row corpus-total/normalizer agg (the " +
+      "token_budget_alloc precedent)"
 
-  val oracles: Map[String, String] = Map(
-    "unigram_lm_train"    -> unigramLmTrainSql,
-    "unigram_lm_encode"   -> unigramLmEncodeSql,
-    "tokenizer_compare"   -> tokenizerCompareSql,
-    "good_turing_mass"    -> goodTuringMassSql,
-    "cms_frequency"       -> cmsFrequencySql,
-    "token_quota_cut"     -> tokenQuotaCutSql,
-    "ngram_novelty_curve" -> ngramNoveltyCurveSql,
-    "bpe_merges"        -> bpeMergesSql,
-    "bpe_merge_curve"   -> bpeMergeCurveSql,
-    "bpe_train_deep"    -> bpeTrainDeepSql,
-    "bpe_vocab_inventory" -> bpeVocabInventorySql,
-    "word_burstiness"   -> wordBurstinessSql,
-    "hapax_rate"        -> hapaxRateSql,
-    "bpe_encode"        -> bpeEncodeSql,
-    "heaps_fit"         -> heapsFitSql,
-    "charclass_profile" -> charclassProfileSql)
+  val ops: Seq[Op] = Seq(
+    Op("unigram_lm_train", unigramLmTrain _, Oracle(unigramLmTrainSql),
+      quadratic = Some(Reasons.RoundScalarAttach)),
+    Op("unigram_lm_encode", unigramLmEncode _, Oracle(unigramLmEncodeSql),
+      quadratic = Some(Reasons.RoundScalarAttach)),
+    Op("tokenizer_compare", tokenizerCompare _, Oracle(tokenizerCompareSql),
+      quadratic = Some("tokenizer_compare joins the two memoized encode outputs and " +
+        "inherits the unigram scalar-attach scaffolds")),
+    Op("good_turing_mass", goodTuringMass _, Oracle(goodTuringMassSql),
+      quadratic = Some(Reasons.BoundedScaffolds)),
+    Op("cms_frequency", cmsFrequency _, Oracle(cmsFrequencySql),
+      globalWindow = Some("post-limit top-100 rank (TakeOrdered feeds it)")),
+    Op("token_quota_cut", tokenQuotaCut _, Oracle(tokenQuotaCutSql),
+      quadratic = Some(RangeOrTotalAttach)),
+    Op("ngram_novelty_curve", ngramNoveltyCurve _, Oracle(ngramNoveltyCurveSql),
+      quadratic = Some(RangeOrTotalAttach)),
+    Op("bpe_merges", bpeMerges _, Oracle(bpeMergesSql)),
+    Op("bpe_merge_curve", bpeMergeCurve _, Oracle(bpeMergeCurveSql)),
+    Op("bpe_train_deep", bpeTrainDeep _, Oracle(bpeTrainDeepSql)),
+    Op("bpe_vocab_inventory", bpeVocabInventory _, Oracle(bpeVocabInventorySql)),
+    Op("word_burstiness", wordBurstiness _, Oracle(wordBurstinessSql)),
+    Op("hapax_rate", hapaxRate _, Oracle(hapaxRateSql)),
+    Op("bpe_encode", bpeEncode _, Oracle(bpeEncodeSql)),
+    Op("heaps_fit", heapsFit _, Oracle(heapsFitSql)),
+    Op("charclass_profile", charclassProfile _, Oracle(charclassProfileSql)))
 }
