@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local session graft's tools (Bench, Verify, Profile,
-  * Explain, ScaleData) and the spec suite run on, with its warm-up and
+/** The one local session graft's tools (Bench, Verify, Explain,
+  * ScaleData) and the spec suite run on, with its warm-up and
   * its cold reset. perfbench's `Harness.session` is a hand copy of the
   * settings in [[apply]]; change both together.
   */
@@ -23,6 +23,10 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowExec warns on every plan with an unpartitioned window; the
+    // declared ones are named once per run instead (Op.windowNote)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

@@ -4,16 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One registered query, declared once in the module that implements
   * it. Every registry-wide fact about the query lives here, and Bench,
-  * Profile, Verify and PlanSpec read it instead of keeping their own
-  * name lists.
+  * Verify and PlanSpec read it instead of keeping their own name lists.
   *
   * `build` returns the query's DataFrame for an SF directory. It may run
   * Spark jobs while it constructs that frame: the trainers (Lloyd,
   * Louvain, PQ, the perceptron, BPE and unigram) collect, checkpoint or
   * memoize their state eagerly, so even a plan-only consumer such as
   * `explain`, a schema check or a PlanSpec sweep pays for that work, and
-  * Profile books it under "build". No caller may assume `build` is
-  * lazy.
+  * Bench books it under "build". No caller may assume `build` is lazy.
   *
   * @param check        the DuckDB oracle SQL the gate hashes the result
   *                     against, or the reason the query is checked for
@@ -49,6 +47,14 @@ object Op {
     def ops: Seq[Op]
     lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
       ops.map(o => o.name -> o.build).toMap
+  }
+
+  /** The one line a tool ends with in place of Spark's per-plan window
+    * warnings (silenced in `GraftSession`): the ops it ran that declare a
+    * global window. */
+  def windowNote(tool: String, ran: Seq[Op]): String = {
+    val w = ran.filter(_.globalWindow.isDefined).map(_.name).sorted
+    s"[$tool] ${w.size} ops ran a declared global window: ${w.mkString(", ")}"
   }
 }
 

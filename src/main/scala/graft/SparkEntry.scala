@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The query registry: every module's ops in one sequence. Each query
   * is a `(SparkSession, sfDir) => DataFrame` with either a DuckDB oracle
   * over the same parquet tables or a declared rows-only reason (see
-  * `Op`). Bench, Profile, Verify, Explain and the specs all read it.
+  * `Op`). Bench, Verify, Explain and the specs all read it.
   */
 object SparkEntry extends Op.Registry {
 

@@ -56,27 +56,15 @@ object Verify {
     pool.shutdown()
     pool.awaitTermination(24, java.util.concurrent.TimeUnit.HOURS)
     spark.catalog.clearCache() // drop per-query persists (LSH sigs etc.)
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql$shardTag.json"), json)
+    val json = SparkEntry.oracleSql.filter { case (k, _) => only.forall(_.contains(k)) }
+    Files.writeString(Paths.get(s"$outDir/oracle_sql$shardTag.json"),
+      Bench.mapper.writeValueAsString(json))
     // manifest of every registered query: a query that CRASHED (no
     // output dir) must fail the gate loudly, not vanish from it
     Files.writeString(Paths.get(s"$outDir/manifest$shardTag.json"),
-      SparkEntry.queries.keys.toSeq.sorted
-        .filter(k => only.forall(_.contains(k))).map(q).mkString("[", ",", "]"))
+      Bench.mapper.writeValueAsString(todo.map(_._1).sorted))
+    System.err.println(Op.windowNote("verify",
+      SparkEntry.ops.filter(o => only.forall(_.contains(o.name)))))
     spark.stop()
   }
 }

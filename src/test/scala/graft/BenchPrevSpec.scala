@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import scala.collection.immutable.SeqMap
 
 /** Pins Bench.parsePrev against every artifact shape a
   * SPARK_GRAFT_BENCH_PREV file has actually shipped in (r12/r13
@@ -29,16 +30,25 @@ class BenchPrevSpec extends AnyFunSuite {
 
   test("per-query object shape reads the suite field as the query's time") {
     val m = Bench.parsePrev(
-      """{"queries":{"q1_agg":{"suite":0.62,"isolated":0.41}}}""")
-    // trailing sub-fields ("isolated") also match the scan — harmless,
-    // they never collide with registry names; what matters is the
-    // query key carries its SUITE number, not the isolated one
-    assert(m("q1_agg") == 0.62)
+      """{"queries":{"q1_agg":{"isolated":0.41,"suite":0.62,"build_s":0.1,"jobs":3}}}""")
+    assert(m == Map("q1_agg" -> 0.62))
+  }
+
+  test("a record written by Bench's writer parses back to name -> suite") {
+    val s = Bench.Sample(0.5, 0.1, 0.05, Nil, Nil)
+    val rec = Bench.record(SeqMap("sf" -> "x"), Seq(
+      Bench.Measured("q1_agg", Seq(s, s.copy(wall = 0.4)), 2, 30, builtMemo = false),
+      Bench.Measured("zipf_fit", Seq(s, s.copy(wall = -1.0)), 0, 0, builtMemo = false)),
+      Map("q1_agg" -> Map("isolated" -> 0.3)))
+    assert(Bench.parsePrev(rec) == Map("q1_agg" -> 0.4, "zipf_fit" -> -1.0))
   }
 
   test("a file with no queries key parses to empty (main then fails hard)") {
     assert(Bench.parsePrev("""{"metric":"total","value":1.0}""").isEmpty)
     assert(Bench.parsePrev("").isEmpty)
+    // a wrapper tail that starts inside the JSON line
+    assert(Bench.parsePrev(
+      """{"tail":"_agg\":0.62,\"zipf_fit\":0.28}}\n[success] done"}""").isEmpty)
   }
 
   // r14 verdict item 4: drift auto-isolation is STANDING — when PREV is

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 
 /** Semantics of the probabilistic dedup paths against the exact
@@ -473,22 +472,8 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("dedup_jaccard_prefix runs in at most 10 jobs") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("dedup.spec") == "prefix"))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty("dedup.spec", "prefix")
-      dedup.Dedup.dedupJaccardPrefix(spark, sf).write.format("noop").mode("overwrite").save()
-      org.apache.spark.sql.GraftGlue.drainListenerBus(spark)
-    } finally {
-      sc.setLocalProperty("dedup.spec", null)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get >= 1 && jobs.get <= 10, s"dedup_jaccard_prefix launched ${jobs.get} jobs")
+    val jobs = Bench.Recorder.jobs(spark)(
+      dedup.Dedup.dedupJaccardPrefix(spark, sf).write.format("noop").mode("overwrite").save())
+    assert(jobs >= 1 && jobs <= 10, s"dedup_jaccard_prefix launched $jobs jobs")
   }
 }

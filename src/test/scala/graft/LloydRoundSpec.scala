@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -78,24 +77,9 @@ class LloydRoundSpec extends SparkSpecBase {
   }
 
   test("kmeans_clusters trains in at most LloydRounds + 2 jobs") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("lloyd.spec") == "train"))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      api.Memo.reset()
-      sc.setLocalProperty("lloyd.spec", "train")
-      ml.Reduce.lloydState(spark, sf, Seq(10)) // kmeans_clusters' training
-      org.apache.spark.sql.GraftGlue.drainListenerBus(spark)
-    } finally {
-      sc.setLocalProperty("lloyd.spec", null)
-      sc.removeSparkListener(listener)
-    }
-    assert(jobs.get >= 1 && jobs.get <= ml.Reduce.LloydRounds + 2,
-      s"kmeans_clusters training launched ${jobs.get} jobs")
+    api.Memo.reset()
+    val jobs = Bench.Recorder.jobs(spark)(ml.Reduce.lloydState(spark, sf, Seq(10))) // kmeans_clusters' training
+    assert(jobs >= 1 && jobs <= ml.Reduce.LloydRounds + 2,
+      s"kmeans_clusters training launched $jobs jobs")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,26 +130,13 @@ class PqScanSpec extends SparkSpecBase {
   }
 
   test("PQ queries launch at most 8 (flat), 9 (IVF) and 12 (residual) jobs") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("pq.spec") == "search"))
-          jobs.incrementAndGet()
-    }
     val caps = Map("ann_pq_topk" -> 8, "ann_ivfpq_topk" -> 9, "ann_ivfpq_residual_topk" -> 12)
-    sc.addSparkListener(listener)
-    try queries.foreach { case (name, run, _, _) =>
+    queries.foreach { case (name, run, _, _) =>
       api.Memo.reset()
-      org.apache.spark.sql.GraftGlue.drainListenerBus(spark)
-      jobs.set(0)
-      sc.setLocalProperty("pq.spec", "search")
-      try run(spark, sf).collect()
-      finally sc.setLocalProperty("pq.spec", null)
-      org.apache.spark.sql.GraftGlue.drainListenerBus(spark)
-      info(s"$name: ${jobs.get} jobs")
-      assert(jobs.get >= 1 && jobs.get <= caps(name), s"$name launched ${jobs.get} jobs")
-    } finally sc.removeSparkListener(listener)
+      val jobs = Bench.Recorder.jobs(spark)(run(spark, sf).collect())
+      info(s"$name: $jobs jobs")
+      assert(jobs >= 1 && jobs <= caps(name), s"$name launched $jobs jobs")
+    }
   }
 
   test("PQ queries on an empty and on a one-vector corpus return no rows, declared schema") {

@@ -3,7 +3,7 @@
 
 Usage: python3 tools/bench_diff.py OLD_full.json NEW_full.json [topN]
 
-Reads two committed full bench maps (the one-line JSON Bench writes via
+Reads two committed full bench maps (the record Bench writes to
 SPARK_GRAFT_BENCH_FULL_OUT, or a driver BENCH_rN.json) and prints, from
 the artifacts alone:
   - per-map totals over every timed (>=0) query;
@@ -12,9 +12,9 @@ the artifacts alone:
 SURVEY §7h round-over-round figures must be pasted from this output —
 hand-carried numbers went stale in r4 and again in r7.
 
-Bench full maps may carry per-query objects ({"suite": s, "isolated": i})
-for the drift-set protocol; the SUITE number is the comparable one and is
-what this script reads (isolated is the drift-immune re-measure).
+A record holds one object per query ({"suite": s, "isolated": i, ...});
+older maps hold plain numbers. The SUITE number is the comparable one and
+is what this script reads (isolated is the drift-immune re-measure).
 """
 import json
 import sys
