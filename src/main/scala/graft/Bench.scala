@@ -28,10 +28,12 @@ import scala.jdk.CollectionConverters._
   * BENCH_full_latest.json) holds a run header and, per query: every
   * sample with its min (`suite`), median and max; the fastest sample's
   * build / plan / exec seconds, its jobs, stages, tasks, shuffle and
-  * spill bytes, executor CPU, GC and inter-job gap ms; the classes the
-  * first sample compiled and their compile ms; and the two stage flags
-  * ([[serialStages]], [[repeatedStages]]). Stdout gets one line, the
-  * suite total. `--stages` also prints each query's ten costliest
+  * spill bytes, executor CPU, GC and inter-job gap ms, and its `counters`
+  * (the `graft.*` named accumulators its stages updated, such as the
+  * prefix join's pruning counts); the classes the first sample compiled
+  * and their compile ms; and the two stage flags ([[serialStages]],
+  * [[repeatedStages]]). Stdout gets one line, the suite total.
+  * `--stages` also prints each query's ten costliest
   * stages, its job gaps and the SQL operator metrics of its last sample.
   */
 object Bench {
@@ -46,9 +48,10 @@ object Bench {
       gcMs: Long, shufR: Long, shufW: Long, shufWRecords: Long, spill: Long)
 
   /** One cold sample: wall and build seconds (wall -1 when it failed),
-    * the write's planning seconds, and the jobs and stages it ran. */
+    * the write's planning seconds, the jobs and stages it ran, and its
+    * `graft.*` accumulator totals by name. */
   final case class Sample(wall: Double, build: Double, plan: Double,
-      jobs: Seq[Job], stages: Seq[Stage])
+      jobs: Seq[Job], stages: Seq[Stage], counters: Map[String, Long] = Map.empty)
 
   /** A query's samples, and what its first sample compiled. */
   final case class Measured(name: String, samples: Seq[Sample], classes: Long,
@@ -59,12 +62,16 @@ object Bench {
 
   /** Listens to one sample at a time: each job launched under the
     * [[Recorder.Phase]] local property (build or exec), the stages of
-    * those jobs, and the planning time of the last query execution
-    * (the sample's noop write, from its own planning tracker). */
+    * those jobs, the `graft.*` named accumulators those stages updated,
+    * and the planning time of the last query execution (the sample's
+    * noop write, from its own planning tracker). */
   final class Recorder extends SparkListener with QueryExecutionListener {
     private val jobs = mutable.LinkedHashMap[Int, Job]()
     private val tagged = mutable.Set[Int]()
     private val stages = mutable.ArrayBuffer[Stage]()
+    // accumulator id -> (name, value): a stage reports each accumulator's
+    // running total, so the last report per id is its total
+    private val counters = mutable.Map[Long, (String, Long)]()
     private var planMs = 0L
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
       Option(e.properties).flatMap(p => Option(p.getProperty(Recorder.Phase))).foreach { p =>
@@ -77,19 +84,26 @@ object Bench {
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
       val i = e.stageInfo
       val m = i.taskMetrics
-      if (tagged(i.stageId)) stages += Stage(i.stageId, i.name.split("\n")(0),
-        i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L), i.numTasks,
-        m.executorCpuTime / 1000000, m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
-        m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten,
-        m.diskBytesSpilled)
+      if (tagged(i.stageId)) {
+        stages += Stage(i.stageId, i.name.split("\n")(0),
+          i.completionTime.getOrElse(0L) - i.submissionTime.getOrElse(0L), i.numTasks,
+          m.executorCpuTime / 1000000, m.jvmGCTime, m.shuffleReadMetrics.totalBytesRead,
+          m.shuffleWriteMetrics.bytesWritten, m.shuffleWriteMetrics.recordsWritten,
+          m.diskBytesSpilled)
+        for (a <- i.accumulables.values; n <- a.name if n.startsWith("graft."); v <- a.value)
+          counters(a.id) = (n, v.toString.toLong)
+      }
     }
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
       synchronized { planMs = qe.tracker.phases.values.map(_.durationMs).sum }
     override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    def clear(): Unit = synchronized { jobs.clear(); tagged.clear(); stages.clear(); planMs = 0L }
+    def clear(): Unit = synchronized {
+      jobs.clear(); tagged.clear(); stages.clear(); counters.clear(); planMs = 0L
+    }
     def jobCount: Int = synchronized(jobs.size)
     def sample(wall: Double, build: Double): Sample =
-      synchronized(Sample(wall, build, planMs / 1e3, jobs.values.toSeq, stages.toSeq))
+      synchronized(Sample(wall, build, planMs / 1e3, jobs.values.toSeq, stages.toSeq,
+        counters.values.toSeq.groupMapReduce(_._1)(_._2)(_ + _)))
   }
 
   object Recorder {
@@ -196,7 +210,8 @@ object Bench {
         "spill_bytes" -> s.stages.map(_.spill).sum, "cpu_ms" -> s.stages.map(_.cpuMs).sum,
         "gc_ms" -> s.stages.map(_.gcMs).sum, "gap_ms" -> gaps(s.jobs).sum,
         "serial_stages" -> serialStages(s.stages).map(_.name),
-        "repeated_stages" -> repeatedStages(s.stages).map(_.name))
+        "repeated_stages" -> repeatedStages(s.stages).map(_.name),
+        "counters" -> SeqMap.from(s.counters.toSeq.sorted))
     }
     SeqMap("suite" -> r3(m.suite), "median" -> r3((walls((n - 1) / 2) + walls(n / 2)) / 2),
       "max" -> r3(walls.last), "samples" -> m.samples.map(s => r3(s.wall))) ++ layers ++

@@ -27,6 +27,10 @@ object GraftSession {
     // declared ones are named once per run instead (Op.windowNote)
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window", org.apache.logging.log4j.Level.ERROR)
+    // reset's unpersist sweep frees localCheckpoint blocks on purpose;
+    // the unpersisted RDD warns once per checkpoint that its lineage is gone
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.rdd.MapPartitionsRDD", org.apache.logging.log4j.Level.ERROR)
     spark
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Schema-pruned readers for the driver-generated parquet tables
   * (see TESTDATA.md). Column pruning + predicate pushdown happen at the
@@ -12,8 +13,29 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** Inferred schemas by (session, path, `Memo.dirStamp` of the path:
+    * the name, length and modification time of every file under it).
+    * Spark infers a parquet schema in a one-task job on every read; with
+    * the schema passed, a read launches no job. The key is checked file
+    * metadata, not query state, so `Memo.reset` leaves this cache; a
+    * rewritten table gets a new stamp and evicts its old entry. */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (SparkSession, String, Long), StructType]()
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val stamp = graft.api.Memo.dirStamp(path)
+    // a path dirStamp cannot see (missing, or not on the local file
+    // system) reads as before, so a missing table fails with Spark's error
+    if (stamp == 0L) spark.read.parquet(path)
+    else {
+      val key = (spark, path, stamp)
+      if (!schemas.containsKey(key))
+        schemas.keySet().removeIf(k => (k._1 eq spark) && k._2 == path)
+      spark.read.schema(schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema))
+        .parquet(path)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

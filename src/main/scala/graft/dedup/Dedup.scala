@@ -2,8 +2,14 @@ package graft.dedup
 
 import graft.{Op, Reasons, Tables}, Op.Oracle
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.mutable
 
 /** Deduplication for LLM-data pipelines (SURVEY.md §2.3): exact hash,
   * n-gram Jaccard, MinHash+LSH, SimHash, embedding-cosine.
@@ -151,109 +157,209 @@ object Dedup extends Op.Registry {
   // shares a token inside both prefixes (prefix-filter lemma), and
   // rare-first order keeps the prefix df's small.
   //
-  // Plan shape:
-  //  1. `gr`: one md5 rendezvous over the normalized text (distinct
-  //     texts run the pair machinery once; members expand at the end)
-  //     that also shingles each distinct text once. The explicit
-  //     repartition on the md5 key is the aggregation's own exchange;
-  //     AQE does not coalesce a numbered repartition, so the shingle
-  //     pass runs on every core however small the texts are in bytes.
-  //  2. The dictionary: (shingle, df) counts collected to the driver,
-  //     ranked by (df, shingle) into dense 1-based ids and broadcast.
-  //     It is vocabulary-bounded (distinct 5-grams, charset⁵-capped).
-  //  3. `docs`: one narrow map per rep encodes its shingles to the
-  //     sorted id array `ids`, so a prefix is the HEAD of `ids`.
-  //  4. The candidate join on a prefix id, both sides carrying the full
-  //     `ids` (record replication, Vernica et al. SIGMOD 2010). The
-  //     probe prefix for J ≥ 0.7 is n − ⌈0.7n⌉ + 1 = n − (7n+9) div 10
-  //     + 1; the (n, id)-smaller side only needs its index prefix
+  // Pipeline shape: one RDD DAG from the scan on, in two jobs (the
+  // dictionary, then the consuming write). An RDD's shuffles run inside
+  // the job that consumes them, where a DataFrame exchange would run
+  // under AQE as a job of its own, and only the scan projection and the
+  // output projection compile code:
+  //  1. The scan projection (doc_id and the normalized text `t`) keeps
+  //     the oracle's text semantics as Spark expressions.
+  //  2. One shuffle groups the docs by their text: each distinct text
+  //     runs the pair machinery once with its sorted members (the rep
+  //     is the first). The CharShingles expression shingles it once,
+  //     into one packed byte array, persisted for both jobs (the #190
+  //     caching contract: the result is lazy, so the caller's reset
+  //     sweep frees it).
+  //  3. The dictionary: each partition counts its (shingle, df) pairs,
+  //     the driver merges them and ranks by (df, shingle) into dense
+  //     1-based ids, then broadcasts. It is vocabulary-bounded (distinct
+  //     5-grams). Each rep encodes to its sorted id array, so a prefix
+  //     is the HEAD.
+  //  4. One shuffle partitioned by prefix id carries every probe-prefix
+  //     entry with the rep's whole id array (record replication,
+  //     Vernica et al. SIGMOD 2010), in one record per (rep, partition)
+  //     so the arrays travel once per partition. The probe prefix for
+  //     J ≥ 0.7 is n − ⌈0.7n⌉ + 1 = n − (7n+9) div 10 + 1; the
+  //     (n, rep)-smaller side only needs its index prefix
   //     n − ⌈14n/17⌉ + 1 (overlap ≥ 2t/(1+t)·|smaller|). Integer bounds
   //     throughout: a float ⌈0.7n⌉ could cut a prefix unsafely short.
-  //     The condition runs the O(1) length filter (10·|B| ≥ 7·|A|) and
-  //     positional filter first, then FirstSharedOverlap, which keeps
-  //     the row only if its id is the FIRST id the two sets share and
-  //     returns the exact overlap, stopping early once J ≥ 0.7 is out
-  //     of reach.
+  //     A partition sorts its entries by (id, n, rep); within an id,
+  //     every entry meets every smaller index entry, and the pair runs
+  //     the O(1) length bound (10·|B| ≥ 7·|A|), the positional bound,
+  //     then [[firstSharedOverlap]]'s merge.
+  //  5. A true rep pair expands over both member lists, and each group
+  //     of identical texts into its own J = 1 pairs (at the rep's first
+  //     prefix entry), both in the same task. The rows carry the
+  //     overlap and both set sizes; the Jaccard division, its round and
+  //     the 0.7 bound stay Spark expressions.
   //
   // Exactness of the first-shared rule: let s be the smallest id a
   // qualifying pair shares. Some shared id lies in both prefixes, and
   // prefixes are heads of the sorted arrays, so s (no later than it in
   // either array) lies in both prefixes too: the pair meets at s. At s
   // nothing has matched yet, so the overlap is at most 1 + min(ids left
-  // after s on either side) — the positional filter's bound there, and
-  // no larger than at any later shared id. So every qualifying pair is
-  // emitted exactly once (at s, oriented by (n, id)) and no pruning
-  // drops it; the kernel's stop rule uses the same bound with the
-  // matches so far. No distinct is needed. Same output, same oracle
-  // as #33.
+  // after s on either side) — the positional bound there, and no larger
+  // than at any later shared id. So every qualifying pair is emitted
+  // exactly once (at s, oriented by (n, rep)) and no pruning drops it;
+  // the merge's stop rule uses the same bound with the matches so far.
+  // No distinct is needed. Same output, same oracle as #33.
+  //
+  // The candidate stage adds its counts at partition end to the named
+  // accumulators graft.dedup.prefix.{emitted, length_pruned,
+  // position_pruned, verified, true}: emitted = length_pruned +
+  // position_pruned + verified, and `true` counts the verified pairs
+  // the merge keeps (Bench records them per query under `counters`).
   def dedupJaccardPrefix(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val nrm = docsNorm(s, dir)
+    val sc = s.sparkContext
     val parts = s.sessionState.conf.numShufflePartitions
-    val gr = nrm.withColumn("h", md5(col("t")))
-      .repartition(parts, col("h"))
-      .groupBy(col("h"))
-      .agg(min(col("doc_id")).as("rep"), max(col("t")).as("t"),
-        collect_list(col("doc_id")).as("ms"))
-      .select(col("rep"), col("ms"), shinglesExpr("t").as("sg"))
-      .localCheckpoint()
-    val ranked = gr.select(explode(col("sg"))).as[String].rdd.countByValue()
-      .toSeq.map { case (g, df) => (df, g) }.sorted
-    val dict = s.sparkContext.broadcast(
-      ranked.iterator.zipWithIndex.map { case ((_, g), i) => g -> (i + 1) }.toMap)
-    val docs = gr.select(col("rep"), col("sg")).as[(Long, Array[String])]
-      .map { case (rep, sg) =>
-        val ids = sg.map(dict.value)
+    val texts = Tables.documents(s, dir).filter(col("text").isNotNull)
+      .select(col("doc_id"), norm(col("text")))
+      .queryExecution.toRdd
+      .map(r => (r.getUTF8String(1).clone(), r.getLong(0)))
+      .groupByKey(parts)
+      .map { case (t, ds) => Shingled(ds.toArray.sorted, t) }
+      .persist()
+    // each partition's (shingle, df) counts, merged on the driver
+    val df = mutable.HashMap[UTF8String, Long]()
+    texts.mapPartitions { it =>
+      val m = mutable.HashMap[UTF8String, Long]()
+      it.foreach(_.shingles.foreach(g => m(g) = m.getOrElse(g, 0L) + 1))
+      Iterator(m)
+    }.collect().foreach(_.foreach { case (g, n) => df(g) = df.getOrElse(g, 0L) + n })
+    val ranked = df.toArray.sortBy { case (g, n) => (n, g) }
+    val dict = sc.broadcast(ranked.iterator.map(_._1).zipWithIndex.map { case (g, i) => g -> (i + 1) }.toMap)
+    val acc = PrefixCounters.map(n => sc.longAccumulator(s"graft.dedup.prefix.$n"))
+    val rows = texts.flatMap { t =>
+        val ids = t.shingles.map(dict.value).toArray
         java.util.Arrays.sort(ids)
-        (rep, ids, ids.length.toLong)
-      }.toDF("doc_id", "ids", "n")
-    val prefix = docs.select(col("doc_id"), col("n"), col("ids"),
-      posexplode(slice(col("ids"), lit(1),
-        (col("n") - expr("(n * 7 + 9) div 10") + 1).cast("int"))).as(Seq("pos", "gid")))
-    val idx = prefix.filter(
-      col("pos") + 1 <= col("n") - expr("(n * 14 + 16) div 17") + 1)
-    // Both sides are pinned at the shuffle parallelism: the exchanges
-    // are byte-small but each row's downstream work (the hash-chain
-    // scan and the verify) is heavy, so AQE's size-based coalescing
-    // would leave cores idle. shuffle_hash, not broadcast: few distinct
-    // gids means long hash chains in one broadcast relation.
-    // The Jaccard filter sits in the join condition, after the kernel:
-    // as a filter over the join's output, Catalyst would push it into
-    // the condition AHEAD of the O(1) filters, running the kernel on
-    // every hash match.
-    val overlap = graft.functions.VectorFunctions.firstSharedOverlap(
-      col("a.ids"), col("b.ids"), col("a.gid"))
-    val jac = overlap.cast("double") / (col("a.n") + col("b.n") - overlap)
-    val repPairs = prefix.repartition(parts, col("gid")).as("a")
-      .join(idx.repartition(parts, col("gid")).hint("shuffle_hash").as("b"),
-        col("a.gid") === col("b.gid") &&
-          (col("b.n") < col("a.n") ||
-            (col("b.n") === col("a.n") && col("b.doc_id") < col("a.doc_id"))) &&
-          col("a.n") * 7 <= col("b.n") * 10 &&
-          (lit(1L) + least(col("a.n") - 1 - col("a.pos"), col("b.n") - 1 - col("b.pos"))) * 17
-            >= (col("a.n") + col("b.n")) * 7 &&
-          overlap >= 0 && jac >= 0.7)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("d1"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("d2"), r(jac, 6).as("jaccard"))
-    // expand rep-level matches back to record pairs: identical texts
-    // are J = 1 pairs within their group, expanded per row from the
-    // sorted member array; qualifying distinct-text rep pairs fan out
-    // over both member lists (disjoint groups, so least/greatest is a
-    // pure orientation fix). Output-bounded: these are the result rows.
-    val selfPairs = gr.filter(size(col("ms")) > 1)
-      .withColumn("msrt", array_sort(col("ms")))
-      .select(explode(expr(
-        """flatten(transform(sequence(1, size(msrt) - 1),
-          |  j -> transform(slice(msrt, 1, j),
-          |         x -> struct(x AS d1, msrt[j] AS d2))))""".stripMargin)).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"), lit(1.0).as("jaccard"))
-    val members = gr.select(col("rep"), explode(col("ms")).as("m"))
-    val crossPairs = repPairs
-      .join(members.as("ma"), col("d1") === col("ma.rep"))
-      .join(members.as("mb"), col("d2") === col("mb.rep"))
-      .select(least(col("ma.m"), col("mb.m")).as("d1"),
-        greatest(col("ma.m"), col("mb.m")).as("d2"), col("jaccard"))
-    selfPairs.unionByName(crossPairs)
+        val rep = PrefixRep(t.ms, ids)
+        // one record per (rep, partition) carries the rep's arrays once
+        (0 until probeLen(ids.length)).groupBy(ids(_) % parts).iterator
+          .map { case (p, ps) => (p, (rep, ps.toArray)) }
+      }
+      .partitionBy(new org.apache.spark.HashPartitioner(parts))
+      .mapPartitions { it =>
+        val c = new Array[Long](acc.size)
+        val es = it.flatMap { case (_, (rep, ps)) => ps.iterator.map(pos => (rep.ids(pos), pos, rep)) }
+          .toArray.sorted(ByIdSizeRep)
+        val starts = es.indices.filter(k => k == 0 || es(k)._1 != es(k - 1)._1) :+ es.length
+        // `++` takes its tail by name: the counts are added once the
+        // partition's pairs are drained
+        starts.iterator.zip(starts.iterator.drop(1)).flatMap { case (lo, hi) => prefixPairs(es, lo, hi, c) } ++
+          { acc.indices.foreach(i => acc(i).add(c(i))); Iterator.empty }
+      }
+    val jac = col("i").cast("double") / (col("n1") + col("n2") - col("i"))
+    org.apache.spark.sql.GraftGlue.internalFrame(s, rows, PrefixPairSchema)
+      .filter(jac >= 0.7)
+      .select(col("d1"), col("d2"), r(jac, 6).as("jaccard"))
+  }
+
+  private val PrefixCounters = Seq("emitted", "length_pruned", "position_pruned", "verified", "true")
+
+  /** (d1, d2, overlap, both set sizes). */
+  private val PrefixPairSchema = StructType(Seq("d1", "d2", "i", "n1", "n2")
+    .map(StructField(_, LongType, nullable = false)))
+
+  /** One distinct text: its sorted members (the rep first) and its
+    * sorted shingle ids. */
+  private final case class PrefixRep(ms: Array[Long], ids: Array[Int])
+
+  private val charShingles5 = graft.functions.CharShingles(
+    org.apache.spark.sql.catalyst.expressions.BoundReference(0, StringType, nullable = false), 5)
+
+  /** One distinct text: its sorted members (the rep first) and its
+    * distinct 5-gram shingles packed into one byte array, shingle k
+    * at bytes at(k) until at(k + 1). */
+  private final class Shingled(val ms: Array[Long], bytes: Array[Byte], at: Array[Int])
+      extends Serializable {
+    def shingles: Iterator[UTF8String] =
+      Iterator.range(0, at.length - 1).map(k => UTF8String.fromBytes(bytes, at(k), at(k + 1) - at(k)))
+  }
+
+  private object Shingled {
+    /** Shingles the normalized text `t` with the CharShingles expression. */
+    def apply(ms: Array[Long], t: UTF8String): Shingled = {
+      val a = charShingles5.eval(InternalRow(t)).asInstanceOf[ArrayData]
+      val gs = Array.tabulate(a.numElements)(a.getUTF8String)
+      val at = gs.scanLeft(0)(_ + _.numBytes)
+      val bytes = new Array[Byte](at.last)
+      gs.indices.foreach(k => gs(k).writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + at(k)))
+      new Shingled(ms, bytes, at)
+    }
+  }
+
+  /** Probe prefix length for J ≥ 0.7: n − ⌈0.7n⌉ + 1. */
+  private def probeLen(n: Int): Int = n - (n * 7 + 9) / 10 + 1
+
+  /** Index prefix length for J ≥ 0.7: n − ⌈14n/17⌉ + 1. */
+  private def indexLen(n: Int): Int = n - (n * 14 + 16) / 17 + 1
+
+  /** Prefix entries (id, pos, rep) by id, then by (set size, rep). */
+  private val ByIdSizeRep: Ordering[(Int, Int, PrefixRep)] =
+    Ordering.by[(Int, Int, PrefixRep), Int](_._1).orElseBy(_._3.ids.length).orElseBy(_._3.ms(0))
+
+  /** The pairs met on one prefix id, whose entries are es(lo until hi)
+    * in (set size, rep) order, as output rows: each rep's self pairs at
+    * its first prefix entry, and every verified pair of a larger probe
+    * entry with a smaller index entry, over both member lists. Counts go
+    * to `c` in [[PrefixCounters]] order. */
+  private def prefixPairs(es: Array[(Int, Int, PrefixRep)], lo: Int, hi: Int,
+      c: Array[Long]): Iterator[InternalRow] = {
+    def row(x: Long, y: Long, i: Int, n1: Int, n2: Int): InternalRow =
+      InternalRow(math.min(x, y), math.max(x, y), i.toLong, n1.toLong, n2.toLong)
+    (lo until hi).iterator.flatMap { k =>
+      val (gid, pa, a) = es(k)
+      val na = a.ids.length
+      val self =
+        if (pa > 0) Iterator.empty
+        else for (j <- a.ms.indices.iterator; i <- 0 until j) yield row(a.ms(i), a.ms(j), na, na, na)
+      self ++ (lo until k).iterator.flatMap { j =>
+        val (_, pb, b) = es(j)
+        val nb = b.ids.length
+        if (pb >= indexLen(nb)) Iterator.empty
+        else {
+          c(0) += 1
+          if (na * 7L > nb * 10L) { c(1) += 1; Iterator.empty }
+          else if ((1L + math.min(na - 1 - pa, nb - 1 - pb)) * 17 < (na + nb) * 7L) { c(2) += 1; Iterator.empty }
+          else {
+            c(3) += 1
+            val m = firstSharedOverlap(a.ids, b.ids, gid)
+            if (m < 0) Iterator.empty
+            else {
+              c(4) += 1
+              for (x <- a.ms.iterator; y <- b.ms.iterator) yield row(x, y, m, na, nb)
+            }
+          }
+        }
+      }
+    }
+  }
+
+  /** The prefix join's verify rule: the overlap |A ∩ B| of two SORTED
+    * duplicate-free id arrays, or -1 when the pair is rejected. It is
+    * rejected when `first` is not the smallest id the arrays share (so
+    * a pair met on several shared prefix ids is kept once), or as soon
+    * as Jaccard ≥ 0.7 is out of reach: J ≥ 0.7 ⟺ 17·|A∩B| ≥ 7·(|A|+|B|),
+    * and the overlap can grow to at most matched + min(remaining of A,
+    * remaining of B), so the merge stops once 17·that bound <
+    * 7·(|A|+|B|) (PPJoin's positional bound, applied at every
+    * mismatch). One linear int merge; exact integer arithmetic. */
+  def firstSharedOverlap(a: Array[Int], b: Array[Int], first: Int): Int = {
+    val na = a.length; val nb = b.length
+    val need = 7L * (na + nb)
+    var i = 0; var j = 0; var m = 0
+    var out = if (17L * math.min(na, nb) < need) -1 else 0
+    while (out == 0 && i < na && j < nb) {
+      val u = a(i); val v = b(j)
+      if (u == v) {
+        if (m == 0 && u != first) out = -1
+        m += 1; i += 1; j += 1
+      } else {
+        if (u < v) i += 1 else j += 1
+        if (17L * (m + math.min(na - i, nb - j)) < need) out = -1
+      }
+    }
+    if (out < 0 || m == 0 || 17L * m < need) -1 else m
   }
 
   // ---------------------------------------------------------------

@@ -341,8 +341,6 @@ object VectorFunctions {
   def charShingles(c: Column, n: Int = 5): Column = GraftGlue.column(CharShingles(toExpr(c), n))
   def charNgrams(c: Column, n: Int): Column = GraftGlue.column(CharNgrams(toExpr(c), n))
   def jaccardSim(a: Column, b: Column): Column = GraftGlue.column(JaccardSim(toExpr(a), toExpr(b)))
-  def firstSharedOverlap(a: Column, b: Column, first: Column): Column =
-    GraftGlue.column(FirstSharedOverlap(toExpr(a), toExpr(b), toExpr(first)))
   def jaroWinklerSim(a: Column, b: Column): Column =
     GraftGlue.column(JaroWinklerSim(toExpr(a), toExpr(b)))
   def randomProjection(c: Column, outDims: Int): Column =
@@ -543,89 +541,6 @@ case class CharNgramCounts(child: Expression, n: Int)
 
   override protected def withNewChildInternal(newChild: Expression): CharNgramCounts =
     copy(child = newChild)
-}
-
-/** Verification kernel of the prefix-filtered Jaccard join: the
-  * overlap |A ∩ B| of two SORTED duplicate-free int arrays (ascending,
-  * as sort_array over a distinct-element collect produces), or -1 when
-  * the candidate row is rejected. A row is rejected when `first` is not
-  * the smallest id the arrays share (so a pair met once per shared
-  * prefix token is kept exactly once), or as soon as Jaccard ≥ 0.7 is
-  * out of reach: J ≥ 0.7 ⟺ 17·|A∩B| ≥ 7·(|A|+|B|), and the overlap can
-  * grow to at most matched + min(remaining of A, remaining of B), so
-  * the merge stops once 17·that bound < 7·(|A|+|B|) (PPJoin's
-  * positional bound, Xiao et al. WWW 2008, applied at every mismatch).
-  * One linear int merge, zero allocation; exact integer arithmetic. */
-case class FirstSharedOverlap(a: Expression, b: Expression, firstId: Expression)
-    extends TernaryExpression {
-  override def first: Expression = a
-  override def second: Expression = b
-  override def third: Expression = firstId
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "first_shared_overlap"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (a.dataType, b.dataType, firstId.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(IntegerType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (x, y, z) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<int>, array<int>, int, got ${x.sql}, ${y.sql} and ${z.sql}")
-    }
-
-  protected override def nullSafeEval(l: Any, r: Any, f: Any): Any = {
-    val x = l.asInstanceOf[ArrayData]
-    val y = r.asInstanceOf[ArrayData]
-    val g = f.asInstanceOf[Int]
-    val na = x.numElements(); val nb = y.numElements()
-    val need = 7L * (na + nb)
-    var i = 0; var j = 0; var m = 0
-    var out = if (17L * math.min(na, nb) < need) -1 else 0
-    while (out == 0 && i < na && j < nb) {
-      val u = x.getInt(i); val v = y.getInt(j)
-      if (u == v) {
-        if (m == 0 && u != g) out = -1
-        m += 1; i += 1; j += 1
-      } else {
-        if (u < v) i += 1 else j += 1
-        if (17L * (m + math.min(na - i, nb - j)) < need) out = -1
-      }
-    }
-    if (out < 0 || m == 0 || 17L * m < need) -1 else m
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y, g) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val need = ctx.freshName("need")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val m = ctx.freshName("m")
-      val out = ctx.freshName("out")
-      val u = ctx.freshName("u")
-      val v = ctx.freshName("v")
-      s"""
-        int $na = $x.numElements(); int $nb = $y.numElements();
-        long $need = 7L * ($na + $nb);
-        int $i = 0; int $j = 0; int $m = 0;
-        int $out = 17L * java.lang.Math.min($na, $nb) < $need ? -1 : 0;
-        while ($out == 0 && $i < $na && $j < $nb) {
-          int $u = $x.getInt($i); int $v = $y.getInt($j);
-          if ($u == $v) {
-            if ($m == 0 && $u != $g) $out = -1;
-            $m++; $i++; $j++;
-          } else {
-            if ($u < $v) { $i++; } else { $j++; }
-            if (17L * ($m + java.lang.Math.min($na - $i, $nb - $j)) < $need) $out = -1;
-          }
-        }
-        ${ev.value} = ($out < 0 || $m == 0 || 17L * $m < $need) ? -1 : $m;
-      """
-    })
-
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): FirstSharedOverlap =
-    copy(a = newFirst, b = newSecond, firstId = newThird)
 }
 
 /** Space-join of the words whose 1-BASED position is NOT in the SORTED

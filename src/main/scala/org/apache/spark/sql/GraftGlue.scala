@@ -19,6 +19,13 @@ object GraftGlue {
     classic.ClassicConversions.castToImpl(spark).sessionState.functionRegistry
       .registerFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name), info, builder)
 
+  /** A DataFrame over the rows of an RDD pipeline: a plain scan of
+    * `rows`, so planning adds no exchange and no job of its own. */
+  def internalFrame(spark: SparkSession, rows: org.apache.spark.rdd.RDD[
+      org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    classic.ClassicConversions.castToImpl(spark).internalCreateDataFrame(rows, schema)
+
   /** Block until every listener event posted so far has been delivered:
     * listeners see events asynchronously, so counters read or reset
     * right after an action can miss its last events. */

@@ -3,29 +3,40 @@ package graft
 import com.fasterxml.jackson.databind.JsonNode
 import scala.collection.immutable.SeqMap
 
-/** Bench's per-query record on two queries at the smallest SF: an eager
-  * trainer and a lazy relational query, two cold samples each, plus the
+/** Bench's per-query record on three queries at the smallest SF: an
+  * eager trainer, a lazy relational query and the prefix join (whose
+  * stages update named counters), two cold samples each, plus the
   * stage-flag rules on hand-made stage rows. */
 class BenchRecordSpec extends SparkSpecBase {
   private val runs = 2
 
   private lazy val record: JsonNode = {
+    // Bench's warm-up reads every table first; lineitem stands in here
+    Tables.lineitem(spark, sf)
     val rec = Bench.Recorder.attach(spark)
     val byName = SparkEntry.ops.map(o => o.name -> o).toMap
     try Bench.mapper.readTree(Bench.record(SeqMap("sf" -> sf, "runs" -> runs),
-      Seq("kmeans_clusters", "q1_pricing_summary").map(n =>
+      Seq("kmeans_clusters", "q1_pricing_summary", "dedup_jaccard_prefix").map(n =>
         Bench.measure(spark, sf, byName(n), runs, rec))))
     finally Bench.Recorder.detach(spark, rec)
   }
   private def q(name: String): JsonNode = record.get("queries").get(name)
 
-  // Spark's parquet reader infers a table's schema in a one-task job
-  // while the frame is built, so a lazy query books one build job per
-  // table read: q1 reads lineitem once and runs the rest under exec
-  test("an eager trainer books its rounds under build, a lazy query only its table read") {
+  // a table read passes the schema inferred once per file version, so
+  // building a lazy query launches no job: q1 runs all of its jobs under
+  // exec
+  test("an eager trainer books its rounds under build, a lazy query none") {
     assert(q("kmeans_clusters").get("build_jobs").asInt > 2)
-    assert(q("q1_pricing_summary").get("build_jobs").asInt == 1)
+    assert(q("q1_pricing_summary").get("build_jobs").asInt == 0)
     assert(q("q1_pricing_summary").get("jobs").asInt > 1)
+  }
+
+  test("prefix join counters: emitted = pruned + verified, true <= verified") {
+    val c = q("dedup_jaccard_prefix").get("counters")
+    def n(k: String): Long = c.get(s"graft.dedup.prefix.$k").asLong
+    assert(n("emitted") == n("length_pruned") + n("position_pruned") + n("verified"), c)
+    assert(n("true") > 0 && n("true") <= n("verified"), c)
+    assert(q("kmeans_clusters").get("counters").isEmpty)
   }
 
   test("each query keeps every sample, and min <= median <= max") {

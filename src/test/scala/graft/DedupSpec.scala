@@ -471,9 +471,12 @@ class DedupSpec extends SparkSpecBase {
     assert(dedup.Dedup.dedupNgramJaccard(spark, dir).count() == 0)
   }
 
-  test("dedup_jaccard_prefix runs in at most 10 jobs") {
+  test("dedup_jaccard_prefix runs in at most 2 jobs") {
+    // the dictionary job and the consuming write; the table's schema is
+    // read first, as Bench's warm-up does, so no inference job is counted
+    Tables.documents(spark, sf)
     val jobs = Bench.Recorder.jobs(spark)(
       dedup.Dedup.dedupJaccardPrefix(spark, sf).write.format("noop").mode("overwrite").save())
-    assert(jobs >= 1 && jobs <= 10, s"dedup_jaccard_prefix launched $jobs jobs")
+    assert(jobs >= 1 && jobs <= 2, s"dedup_jaccard_prefix launched $jobs jobs")
   }
 }

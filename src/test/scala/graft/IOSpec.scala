@@ -10,6 +10,18 @@ class IOSpec extends SparkSpecBase {
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graft-io-$name").toString
 
+  test("a table rewritten with another schema reads with its new schema") {
+    import spark.implicits._
+    val dir = tmp("schema")
+    Seq((1L, "a")).toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    assert(Tables.documents(spark, dir).columns.toSeq == Seq("doc_id", "text"))
+    Seq((2L, 0.5, "b")).toDF("doc_id", "score", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val again = Tables.documents(spark, dir)
+    assert(again.columns.toSeq == Seq("doc_id", "score", "text"))
+    assert(again.collect().toSeq == Seq(org.apache.spark.sql.Row(2L, 0.5, "b")))
+  }
+
   test("csv round-trip preserves rows and schema (explicit schema, no inference)") {
     val orig = Tables.nation(spark, sf)
     val dir = tmp("csv")
