@@ -1,5 +1,6 @@
 package graft.api
 
+import graft.functions.LongSet
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -408,60 +409,33 @@ object Similarity {
   /** Training-set decontamination: flag train docs sharing ≥ minShared
     * distinct character n-gram shingles with ANY doc in the eval set —
     * the standard benchmark-leakage filter for pretraining corpora.
-    * The eval side (benchmarks — small by construction) is deduped and
-    * broadcast, so the train corpus is one narrow scan + explode +
-    * per-doc count: no train-side pair join, no shuffle of text.
-    * Shingles are joined as xxhash64 longs (CharShingleHashes) — the
-    * join needs only equality, and hashing at the source skips
-    * materializing an n-char string per position; collision odds are
-    * ~|train|·|eval| / 2⁶⁴, vanishing at any real scale. */
+    * The eval side (benchmarks — small by construction) is collected
+    * once as shingle hashes ([[sharedShingles]]) and probed inside one
+    * projection over the spread train scan: no explode, no join, no
+    * shuffle of text. Output: `doc_id`, `n_shared` (bigint) and
+    * `contaminated`, both non-null — a null train text shares 0. */
   def decontaminate(train: DataFrame, id: Column, text: Column,
       evalSet: DataFrame, evalText: Column,
       shingle: Int = 20, minShared: Int = 5): DataFrame = {
-    val tSh = Analytics.spread(train.select(id.as("doc_id"), text.as("__t")))
-      .select(col("doc_id"),
-        explode(charShingleHashes(normalizeText(col("__t")), shingle)).as("g"))
-    val eSh = evalSet.select(
-      explode(charShingleHashes(normalizeText(evalText), shingle)).as("g")).distinct()
-    // charShingleHashes emits DISTINCT shingles per doc, so count(1) == #shared
-    val shared = tSh.join(broadcast(eSh), "g")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-    train.select(id.as("doc_id"))
-      .join(shared, Seq("doc_id"), "left")
-      .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
+    val shared = sharedShingles(evalSet, evalText, shingle)
+    Analytics.spread(train.select(id.as("doc_id"), text.as("__t")))
+      .select(col("doc_id"), shared(col("__t")).as("n_shared"))
       .withColumn("contaminated", col("n_shared") >= minShared)
   }
 
-  /** Bloom-filter decontamination — the scale path of [[decontaminate]]
-    * for eval sets too big to broadcast as a hash set: the eval shingle
-    * hashes fold into ONE bloom filter (driver-built here; at cluster
-    * scale a treeAggregate), shipped as a literal into the native
-    * codegen'd BloomFilterMightContain predicate on the train scan.
-    * Train docs keep the same one-scan/no-pair-join plan shape. False
-    * positives can only OVER-count n_shared (never under), so at fpp ≪
-    * minShared/|shingles per doc| the flag set matches the exact path;
-    * there are no false negatives by bloom construction. */
-  def decontaminateBloom(train: DataFrame, id: Column, text: Column,
-      evalSet: DataFrame, evalText: Column,
-      shingle: Int = 20, minShared: Int = 5, fpp: Double = 1e-4): DataFrame = {
-    val eSh = evalSet.select(
-      explode(charShingleHashes(normalizeText(evalText), shingle)).as("g")).distinct()
-    val expected = math.max(eSh.count(), 64L)
-    val bf = eSh.stat.bloomFilter("g", expected, fpp)
-    val bos = new java.io.ByteArrayOutputStream()
-    bf.writeTo(bos)
-    val mightContain = org.apache.spark.sql.GraftGlue.column(
-      graft.functions.BloomMightContain(bos.toByteArray,
-        org.apache.spark.sql.GraftGlue.expression(col("g"))))
-    val tSh = Analytics.spread(train.select(id.as("doc_id"), text.as("__t")))
-      .select(col("doc_id"),
-        explode(charShingleHashes(normalizeText(col("__t")), shingle)).as("g"))
-    val shared = tSh.filter(mightContain)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared"))
-    train.select(id.as("doc_id"))
-      .join(shared, Seq("doc_id"), "left")
-      .withColumn("n_shared", coalesce(col("n_shared"), lit(0L)))
-      .withColumn("contaminated", col("n_shared") >= minShared)
+  /** The decontamination probe: a function from a text column to the
+    * number of its distinct `shingle`-char shingles (of
+    * [[normalizeText]]) that occur in any text of `evalSet`. Building
+    * it runs one job — the eval texts' `charShingleHashes`, collected
+    * and folded into one hash set on the driver — and the set rides in
+    * the native [[graft.functions.ShingleHits]] kernel. Shingles match
+    * as xxhash64 longs; collision odds are ~|train|·|eval| / 2⁶⁴. */
+  def sharedShingles(evalSet: DataFrame, evalText: Column, shingle: Int): Column => Column = {
+    val set = new LongSet(1024)
+    evalSet.select(charShingleHashes(normalizeText(evalText), shingle))
+      .collect().foreach(r => if (!r.isNullAt(0)) r.getSeq[Long](0).foreach(set.add))
+    val hashes = set.toArray
+    t => shingleHits(normalizeText(t), shingle, hashes)
   }
 
   /** Connected components over an undirected pair list via iterative

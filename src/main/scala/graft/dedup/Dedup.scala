@@ -861,8 +861,9 @@ object Dedup extends Op.Registry {
   // ---------------------------------------------------------------
   // 64. training-set decontamination: drop/flag train docs sharing ≥5
   // distinct 20-char shingles with the eval set (source 'src0' plays
-  // the benchmark corpus). Eval shingles broadcast; train side is one
-  // narrow scan — no pair join (graft.api.Similarity.decontaminate).
+  // the benchmark corpus). The eval shingle hashes are collected once
+  // and probed inside one projection over the train scan — no join, no
+  // explode (graft.api.Similarity.decontaminate).
   def decontaminate(s: SparkSession, dir: String): DataFrame =
     decontaminate(Tables.documents(s, dir))
 

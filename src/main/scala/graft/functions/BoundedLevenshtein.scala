@@ -89,43 +89,3 @@ object BoundedLevenshtein {
     GraftGlue.column(BoundedLevenshtein(
       GraftGlue.expression(l), GraftGlue.expression(r), max))
 }
-
-/** Bloom membership probe over a serialized filter — replaces Spark's
-  * internal BloomFilterMightContain, whose generated code casts a
-  * primitive long to boxed Long and fails Janino compilation (the whole
-  * stage then silently drops to interpreted eval — the opposite of what
-  * a scan-side runtime filter is for). The filter bytes deserialize
-  * once per task via a transient lazy. */
-case class BloomMightContain(bytes: Array[Byte], child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a bigint probe, got ${t.sql}")
-  }
-
-  @transient private lazy val bloom =
-    org.apache.spark.util.sketch.BloomFilter.readFrom(
-      new java.io.ByteArrayInputStream(bytes))
-
-  def mightContain(v: Long): Boolean = bloom.mightContainLong(v)
-
-  protected override def nullSafeEval(input: Any): Any =
-    mightContain(input.asInstanceOf[Long])
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    val ref = ctx.addReferenceObj("bloomExpr", this, classOf[BloomMightContain].getName)
-    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $ref.mightContain($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BloomMightContain =
-    copy(child = newChild)
-}

@@ -6,8 +6,10 @@ import org.apache.spark.sql.GraftGlue
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expressions for the vector / sketch hot paths.
@@ -353,6 +355,8 @@ object VectorFunctions {
     GraftGlue.column(RepetitionStats(toExpr(c)))
   def charShingleHashes(c: Column, n: Int): Column =
     GraftGlue.column(CharShingleHashes(toExpr(c), n))
+  def shingleHits(c: Column, n: Int, hashes: Array[Long]): Column =
+    GraftGlue.column(ShingleHits(toExpr(c), n, hashes))
   def charShingleFnvHashes(c: Column, n: Int): Column =
     GraftGlue.column(CharShingleFnvHashes(toExpr(c), n))
   def charNgramCounts(c: Column, n: Int): Column =
@@ -402,35 +406,26 @@ case class CharShingles(child: Expression, n: Int)
       s"$prettyName requires a string, got ${t.sql}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val last = math.max(len - (n - 1), 1)
-    val set = new java.util.LinkedHashSet[UTF8String]()
-    var i = 1
-    while (i <= last) { set.add(t.substringSQL(i, n)); i += 1 }
-    new GenericArrayData(set.toArray.asInstanceOf[Array[AnyRef]])
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    CharShingles.compute(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val last = ctx.freshName("last")
-      val set = ctx.freshName("set")
-      val i = ctx.freshName("i")
-      s"""
-        int $len = $c.numChars();
-        int $last = java.lang.Math.max($len - ${n - 1}, 1);
-        java.util.LinkedHashSet $set = new java.util.LinkedHashSet();
-        for (int $i = 1; $i <= $last; $i++) {
-          $set.add($c.substringSQL($i, $n));
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($set.toArray());
-      """
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = CharShingles.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.compute($c, $n);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CharShingles =
     copy(child = newChild)
+}
+
+object CharShingles {
+  /** Kernel shared by eval and codegen. */
+  def compute(t: UTF8String, n: Int): ArrayData = {
+    val set = new java.util.LinkedHashSet[UTF8String]()
+    val w = new ShingleWalk(t, n)
+    while (w.next()) set.add(w.utf8)
+    new GenericArrayData(set.toArray.asInstanceOf[Array[AnyRef]])
+  }
 }
 
 /** ALL character n-grams of a string, in order WITH multiplicity —
@@ -450,35 +445,27 @@ case class CharNgrams(child: Expression, n: Int)
       s"$prettyName requires a string, got ${t.sql}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val last = math.max(len - (n - 1), 1)
-    val out = new Array[AnyRef](last)
-    var i = 1
-    while (i <= last) { out(i - 1) = t.substringSQL(i, n); i += 1 }
-    new GenericArrayData(out)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    CharNgrams.compute(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val last = ctx.freshName("last")
-      val arr = ctx.freshName("arr")
-      val i = ctx.freshName("i")
-      s"""
-        int $len = $c.numChars();
-        int $last = java.lang.Math.max($len - ${n - 1}, 1);
-        Object[] $arr = new Object[$last];
-        for (int $i = 1; $i <= $last; $i++) {
-          $arr[$i - 1] = $c.substringSQL($i, $n);
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);
-      """
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = CharNgrams.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.compute($c, $n);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CharNgrams =
     copy(child = newChild)
+}
+
+object CharNgrams {
+  /** Kernel shared by eval and codegen. */
+  def compute(t: UTF8String, n: Int): ArrayData = {
+    val out = new Array[AnyRef](ShingleWalk.count(t, n))
+    val w = new ShingleWalk(t, n)
+    var i = 0
+    while (w.next()) { out(i) = w.utf8; i += 1 }
+    new GenericArrayData(out)
+  }
 }
 
 /** Character n-gram COUNTS as a map<string, long> — the fused form of
@@ -499,48 +486,32 @@ case class CharNgramCounts(child: Expression, n: Int)
       s"$prettyName requires a string, got ${t.sql}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val last = math.max(len - (n - 1), 1)
-    val m = new java.util.LinkedHashMap[UTF8String, java.lang.Long]()
-    var i = 1
-    while (i <= last) {
-      val g = t.substringSQL(i, n)
-      val prev = m.get(g)
-      m.put(g, if (prev == null) 1L else prev + 1L)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-      new GenericArrayData(m.keySet.toArray.asInstanceOf[Array[AnyRef]]),
-      new GenericArrayData(m.values.toArray.asInstanceOf[Array[AnyRef]]))
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    CharNgramCounts.compute(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val last = ctx.freshName("last")
-      val m = ctx.freshName("m")
-      val i = ctx.freshName("i")
-      val g = ctx.freshName("g")
-      val prev = ctx.freshName("prev")
-      s"""
-        int $len = $c.numChars();
-        int $last = java.lang.Math.max($len - ${n - 1}, 1);
-        java.util.LinkedHashMap $m = new java.util.LinkedHashMap();
-        for (int $i = 1; $i <= $last; $i++) {
-          Object $g = $c.substringSQL($i, $n);
-          Object $prev = $m.get($g);
-          $m.put($g, $prev == null ? (Object) 1L : (Object) (((Long) $prev) + 1L));
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-          new org.apache.spark.sql.catalyst.util.GenericArrayData($m.keySet().toArray()),
-          new org.apache.spark.sql.catalyst.util.GenericArrayData($m.values().toArray()));
-      """
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = CharNgramCounts.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.compute($c, $n);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CharNgramCounts =
     copy(child = newChild)
+}
+
+object CharNgramCounts {
+  /** Kernel shared by eval and codegen. */
+  def compute(t: UTF8String, n: Int): MapData = {
+    val m = new java.util.LinkedHashMap[UTF8String, java.lang.Long]()
+    val w = new ShingleWalk(t, n)
+    while (w.next()) {
+      val g = w.utf8
+      val prev = m.get(g)
+      m.put(g, if (prev == null) 1L else prev + 1L)
+    }
+    new ArrayBasedMapData(
+      new GenericArrayData(m.keySet.toArray.asInstanceOf[Array[AnyRef]]),
+      new GenericArrayData(m.values.toArray.asInstanceOf[Array[AnyRef]]))
+  }
 }
 
 /** Space-join of the words whose 1-BASED position is NOT in the SORTED
@@ -796,54 +767,13 @@ case class MinHashSigText(child: Expression, n: Int, numHashes: Int)
       s"$prettyName requires a string, got ${t.sql}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val last = math.max(len - (n - 1), 1)
-    val sig = Array.fill(numHashes)(Long.MaxValue)
-    var i = 1
-    while (i <= last) {
-      val s = t.substringSQL(i, n)
-      val h1 = MinHashSigText.fnv1a64(s)
-      var j = 0
-      var seed = h1
-      while (j < numHashes) {
-        val h = HyperplaneBucket.mix64(seed)
-        if (h < sig(j)) sig(j) = h
-        seed += MinHashSigText.Gamma
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(sig)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    MinHashSigText.compute(input.asInstanceOf[UTF8String], n, numHashes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val last = ctx.freshName("last")
-      val sig = ctx.freshName("sig")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val h = ctx.freshName("h")
-      s"""
-        int $len = $c.numChars();
-        int $last = java.lang.Math.max($len - ${n - 1}, 1);
-        long[] $sig = new long[$numHashes];
-        java.util.Arrays.fill($sig, Long.MAX_VALUE);
-        for (int $i = 1; $i <= $last; $i++) {
-          UTF8String $s = $c.substringSQL($i, $n);
-          long ${h}seed = graft.functions.MinHashSigText$$.MODULE$$.fnv1a64($s);
-          for (int $j = 0; $j < $numHashes; $j++) {
-            long $h = graft.functions.HyperplaneBucket.mix64(${h}seed);
-            if ($h < $sig[$j]) $sig[$j] = $h;
-            ${h}seed += graft.functions.MinHashSigText$$.MODULE$$.Gamma();
-          }
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
-      """
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = MinHashSigText.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.compute($c, $n, $numHashes);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): MinHashSigText =
     copy(child = newChild)
@@ -855,15 +785,34 @@ object MinHashSigText {
 
   /** FNV-1a 64 over a UTF8String's bytes — called from generated code,
     * must be public. Same fold as SimHash64's word hash. */
-  def fnv1a64(s: UTF8String): Long = {
-    val bytes = s.getBytes
+  def fnv1a64(s: UTF8String): Long = fnv1a64(s.getBaseObject, s.getBaseOffset, s.numBytes)
+
+  /** FNV-1a 64 over `len` bytes at `offset` of `base`. */
+  def fnv1a64(base: AnyRef, offset: Long, len: Int): Long = {
     var h = SimHash64.FnvBasis
     var j = 0
-    while (j < bytes.length) {
-      h = (h ^ (bytes(j) & 0xffL)) * SimHash64.FnvPrime
+    while (j < len) {
+      h = (h ^ (Platform.getByte(base, offset + j) & 0xffL)) * SimHash64.FnvPrime
       j += 1
     }
     h
+  }
+
+  /** Kernel shared by eval and codegen. */
+  def compute(t: UTF8String, n: Int, numHashes: Int): ArrayData = {
+    val sig = Array.fill(numHashes)(Long.MaxValue)
+    val w = new ShingleWalk(t, n)
+    while (w.next()) {
+      var seed = w.fnv1a64
+      var j = 0
+      while (j < numHashes) {
+        val h = HyperplaneBucket.mix64(seed)
+        if (h < sig(j)) sig(j) = h
+        seed += Gamma
+        j += 1
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(sig)
   }
 }
 
@@ -884,38 +833,27 @@ case class CharShingleFnvHashes(child: Expression, n: Int)
       s"$prettyName requires a string, got ${t.sql}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val last = math.max(len - (n - 1), 1)
-    val out = new Array[Long](last)
-    var i = 1
-    while (i <= last) {
-      out(i - 1) = MinHashSigText.fnv1a64(t.substringSQL(i, n))
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    CharShingleFnvHashes.compute(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val last = ctx.freshName("last")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      s"""
-        int $len = $c.numChars();
-        int $last = java.lang.Math.max($len - ${n - 1}, 1);
-        long[] $out = new long[$last];
-        for (int $i = 1; $i <= $last; $i++) {
-          $out[$i - 1] = graft.functions.MinHashSigText$$.MODULE$$.fnv1a64($c.substringSQL($i, $n));
-        }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = CharShingleFnvHashes.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.compute($c, $n);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CharShingleFnvHashes =
     copy(child = newChild)
+}
+
+object CharShingleFnvHashes {
+  /** Kernel shared by eval and codegen. */
+  def compute(t: UTF8String, n: Int): ArrayData = {
+    val out = new Array[Long](ShingleWalk.count(t, n))
+    val w = new ShingleWalk(t, n)
+    var i = 0
+    while (w.next()) { out(i) = w.fnv1a64; i += 1 }
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
 }
 
 /** Random-hyperplane LSH bucket id: bit j of the result is the sign of
@@ -1148,12 +1086,12 @@ case class SplitMixComp(child: Expression) extends UnaryExpression {
 }
 
 /** Distinct xxhash64 values of the character n-gram shingles — the
-  * join-key form of CharShingles. Near-dup / decontamination joins only
-  * need shingle EQUALITY, so hashing at the source skips materializing
-  * n-char strings per position and joins on primitive longs instead
-  * (collision odds across a corpus-scale join are ~|A|·|B|/2⁶⁴ — far
-  * below any oracle rounding). Same 1-based substr semantics as
-  * CharShingles. */
+  * join-key form of CharShingles (and the eval side of the
+  * [[ShingleHits]] probe). Shingle joins only need EQUALITY, so hashing
+  * at the source skips materializing n-char strings per position and
+  * joins on primitive longs instead (collision odds across a
+  * corpus-scale join are ~|A|·|B|/2⁶⁴ — far below any oracle rounding).
+  * Same 1-based substr semantics as CharShingles. */
 case class CharShingleHashes(child: Expression, n: Int)
     extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -1165,57 +1103,32 @@ case class CharShingleHashes(child: Expression, n: Int)
       s"$prettyName requires a string, got ${t.sql}")
   }
 
-  protected override def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[UTF8String]
-    val len = t.numChars()
-    val last = math.max(len - (n - 1), 1)
-    val set = new java.util.LinkedHashSet[java.lang.Long]()
-    var i = 1
-    while (i <= last) {
-      val s = t.substringSQL(i, n)
-      set.add(XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 0L))
-      i += 1
-    }
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var j = 0
-    while (it.hasNext) { out(j) = it.next(); j += 1 }
-    new GenericArrayData(out)
-  }
+  protected override def nullSafeEval(input: Any): Any =
+    CharShingleHashes.compute(input.asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val len = ctx.freshName("len")
-      val last = ctx.freshName("last")
-      val set = ctx.freshName("set")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val out = ctx.freshName("out")
-      val it = ctx.freshName("it")
-      val j = ctx.freshName("j")
-      // RAW collection types + explicit boxing: Janino compiles no
-      // generics and no autoboxing — the generic version failed to
-      // compile and silently dropped the WHOLE stage to interpreted eval
-      s"""
-        int $len = $c.numChars();
-        int $last = java.lang.Math.max($len - ${n - 1}, 1);
-        java.util.LinkedHashSet $set = new java.util.LinkedHashSet();
-        for (int $i = 1; $i <= $last; $i++) {
-          UTF8String $s = $c.substringSQL($i, $n);
-          $set.add(java.lang.Long.valueOf(
-            org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-              $s.getBaseObject(), $s.getBaseOffset(), $s.numBytes(), 0L)));
-        }
-        long[] $out = new long[$set.size()];
-        java.util.Iterator $it = $set.iterator();
-        int $j = 0;
-        while ($it.hasNext()) { $out[$j++] = ((java.lang.Long) $it.next()).longValue(); }
-        ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-      """
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val cls = CharShingleHashes.getClass.getName.stripSuffix("$")
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $cls.compute($c, $n);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CharShingleHashes =
     copy(child = newChild)
+}
+
+object CharShingleHashes {
+  /** Kernel shared by eval and codegen: distinct hashes in first-seen
+    * order. */
+  def compute(t: UTF8String, n: Int): ArrayData = {
+    val out = new Array[Long](ShingleWalk.count(t, n))
+    val seen = new LongSet(out.length)
+    val w = new ShingleWalk(t, n)
+    var k = 0
+    while (w.next()) {
+      val h = w.xxh64
+      if (seen.add(h)) { out(k) = h; k += 1 }
+    }
+    UnsafeArrayData.fromPrimitiveArray(java.util.Arrays.copyOf(out, k))
+  }
 }
 
 /** One-pass repetition statistics over a word array — the Gopher-style

@@ -481,9 +481,9 @@ object TextOps extends Op.Registry {
   //   3_decontaminated   drops docs sharing ≥5 20-char shingles with
   //                      the eval corpus
   // Plan: gopher flags are per-row codegen; dedup is one window over
-  // the norm-hash shuffle; decontamination broadcasts eval shingles
-  // (the #64 plan); then ONE aggregation emits all stages via
-  // conditional sums — no per-stage rescans.
+  // the norm-hash shuffle; decontamination probes the eval shingle set
+  // in a projection (the #64 plan); then ONE aggregation emits all
+  // stages via conditional sums — no per-stage rescans.
   def curationFunnel(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val flags = gopherRules(s, dir).select(col("doc_id"), col("pass_no_stop"))
@@ -1090,29 +1090,34 @@ object TextOps extends Op.Registry {
   // Every ratio is ONE division of exact integer counts, so the
   // threshold comparisons are bit-identical cross-engine (no rounding
   // anywhere in the decision path).
-  // 100 TB shape: one norm-hash shuffle (the dedup exchange), the
-  // broadcast-eval contamination join, and a narrow gate scan — the
-  // decision adds nothing beyond the signals it composes.
+  // 100 TB shape: one eval-side job collects the src0 shingle hashes
+  // (the #64 probe); then `documents` is read and spread once, ONE
+  // projection computes every per-row signal (norm hash, shared-shingle
+  // count, regex counts) so the text never crosses a shuffle, and the
+  // only keyed exchange is the norm-hash window that finds each group's
+  // min-id keeper — no join of any kind. src0 rows take part in the
+  // window (a train doc may copy an eval doc verbatim) and leave after.
   def filterDecision(s: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
     val all = Tables.documents(s, dir)
-    val keepers = graft.api.Similarity.exactDupGroups(all, col("doc_id"), col("text"))
-      .select(col("norm_hash"), col("keep_id"))
-    val contam = graft.dedup.Dedup.decontaminate(all)
-      .select(col("doc_id"), col("contaminated"))
+    val shared = graft.api.Similarity.sharedShingles(
+      all.filter(col("source") === "src0"), col("text"), shingle = 20)
     val len = length(col("text")).cast("double")
     val nWs = reCount(col("text"), "\\S+").cast("double")
     val stops = reCount(lower(col("text")), "\\b(the|and|of|to|in|is|a)\\b").cast("double")
     val digits = reCount(col("text"), "[0-9]").cast("double")
-    all.filter(col("source") =!= "src0")
-      .withColumn("norm_hash", md5(graft.api.Similarity.normalizeText(col("text"))))
-      .join(keepers, "norm_hash")
-      .join(contam, "doc_id")
-      .withColumn("g_dup", col("doc_id") =!= col("keep_id"))
-      .withColumn("g_contam", col("contaminated"))
-      .withColumn("g_stop", (stops / nWs) < 0.03)
-      .withColumn("g_digit", (digits / len) > 0.3)
-      .withColumn("g_short", nWs < 10)
-      .withColumn("g_long", nWs > 100000)
+    graft.api.Analytics.spread(all.select(col("doc_id"), col("source"), col("text")))
+      .select(col("doc_id"), col("source"),
+        md5(graft.api.Similarity.normalizeText(col("text"))).as("norm_hash"),
+        (shared(col("text")) >= 5).as("g_contam"),
+        ((stops / nWs) < 0.03).as("g_stop"),
+        ((digits / len) > 0.3).as("g_digit"),
+        (nWs < 10).as("g_short"),
+        (nWs > 100000).as("g_long"))
+      .filter(col("norm_hash").isNotNull)
+      .withColumn("g_dup",
+        col("doc_id") =!= min(col("doc_id")).over(Window.partitionBy(col("norm_hash"))))
+      .filter(col("source") =!= "src0")
       .select(col("doc_id"),
         (!col("g_dup") && !col("g_contam") && !col("g_stop") && !col("g_digit")
           && !col("g_short") && !col("g_long")).as("keep"),

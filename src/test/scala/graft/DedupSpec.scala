@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 
 /** Semantics of the probabilistic dedup paths against the exact
   * inverted-index Jaccard (the oracle-checked path). */
@@ -415,8 +416,12 @@ class DedupSpec extends SparkSpecBase {
   /** `documents` (doc_id, text) written to a fresh temp dir. */
   private def documentsDir(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
+    documentsDir(docs.toDF("doc_id", "text"))
+  }
+
+  private def documentsDir(docs: org.apache.spark.sql.DataFrame): String = {
     val dir = java.nio.file.Files.createTempDirectory("dedup-fixture").toString
-    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    docs.write.parquet(s"$dir/documents.parquet")
     dir
   }
 
@@ -478,5 +483,103 @@ class DedupSpec extends SparkSpecBase {
     val jobs = Bench.Recorder.jobs(spark)(
       dedup.Dedup.dedupJaccardPrefix(spark, sf).write.format("noop").mode("overwrite").save())
     assert(jobs >= 1 && jobs <= 2, s"dedup_jaccard_prefix launched $jobs jobs")
+  }
+
+  /** `api.Similarity.decontaminate` of `train` against `eval`, both
+    * (id, text), at the default 20-char shingles: id -> (n_shared,
+    * contaminated). */
+  private def decontaminated(train: Seq[(Long, String)], eval: Seq[(Long, String)])
+      : Map[Long, (Long, Boolean)] = {
+    import spark.implicits._
+    api.Similarity.decontaminate(train.toDF("id", "text"), col("id"), col("text"),
+        eval.toDF("id", "text"), col("text"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+  }
+
+  private val fox = "the quick brown fox jumps over the lazy dog again and again tonight"
+
+  test("decontaminate: an empty eval set shares nothing") {
+    assert(decontaminated(Seq(1L -> fox, 2L -> ""), Nil) ==
+      Map(1L -> (0L, false), 2L -> (0L, false)))
+  }
+
+  test("decontaminate: a null train text shares 0 and is not contaminated") {
+    val out = decontaminated(Seq(1L -> fox, 2L -> null), Seq(100L -> fox))
+    assert(out(2L) == ((0L, false)))
+    assert(out(1L)._2)
+  }
+
+  test("decontaminate: a text under the shingle length copied into eval shares 1") {
+    // one shingle: the whole normalized text
+    val out = decontaminated(Seq(1L -> "Short  Text", 2L -> "other text"),
+      Seq(100L -> "short text", 101L -> fox))
+    assert(out == Map(1L -> (1L, false), 2L -> (0L, false)))
+  }
+
+  test("decontaminate: a shingle repeated in one text counts once") {
+    val unit = "abcdefghijklmnopqrst" // exactly 20 chars
+    val out = decontaminated(Seq(1L -> (unit + " " + unit + " " + unit)),
+      Seq(100L -> unit))
+    assert(out(1L) == ((1L, false)))
+  }
+
+  test("decontaminate: multi-byte texts equal a driver reference") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val alphabet = Seq("a", "b", " ", "é", "漢", "字", "😀", "ß")
+    def gen(len: Int) = Seq.fill(len)(alphabet(rnd.nextInt(alphabet.size))).mkString
+    val eval = (1 to 5).map(i => (100L + i, gen(60)))
+    // train texts copy spans of eval texts into fresh ones, so counts vary
+    val train = (1 to 40).map { i =>
+      val src = eval(i % eval.size)._2
+      val from = rnd.nextInt(30)
+      (i.toLong, gen(rnd.nextInt(30)) + src.slice(from, from + rnd.nextInt(40)) + gen(10))
+    }
+    // reference: normalize in Spark, shingle by code points on the driver
+    def normalized(rows: Seq[(Long, String)]): Map[Long, String] =
+      rows.toDF("id", "text")
+        .select(col("id"), api.Similarity.normalizeText(col("text")))
+        .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    def shingles(t: String): Set[String] = {
+      val cps = t.codePoints().toArray
+      (0 to math.max(cps.length - 20, 0))
+        .map(i => new String(cps, i, math.min(20, cps.length - i))).toSet
+    }
+    val evalShingles = normalized(eval).values.flatMap(shingles).toSet
+    val want = normalized(train).map { case (id, t) =>
+      val n = shingles(t).count(evalShingles).toLong
+      id -> (n, n >= 5)
+    }
+    assert(want.values.exists(_._1 >= 5) && want.values.exists(_._1 == 0),
+      "the fixture must hold contaminated and clean docs")
+    assert(decontaminated(train, eval) == want)
+  }
+
+  test("filter_decision leaves out a doc whose text is null") {
+    import spark.implicits._
+    val dir = documentsDir(Seq[(Long, String, String)](
+      (1L, "src0", fox),
+      (2L, "src1", fox + " and more words to read"),
+      (3L, "src1", null),
+      (4L, "src2", "The cat sat on the mat and the dog sat in the hall of the house"),
+      (5L, "src2", "the CAT sat on the mat and the dog sat in the hall of the house"))
+      .toDF("doc_id", "source", "text"))
+    val out = text.TextOps.filterDecision(spark, dir)
+      .collect().map(r => r.getLong(0) -> r.getString(2)).toMap
+    assert(out.keySet == Set(2L, 4L, 5L))
+    assert(out(2L).split(",").contains("contaminated"))
+    assert(out(4L).isEmpty && out(5L) == "exact_dup")
+  }
+
+  test("filter_decision runs in at most 4 jobs, decontaminate in at most 3") {
+    // the eval-side collect, the spread and window stages and the
+    // consuming write; the schema is read first, as Bench's warm-up does
+    Tables.documents(spark, sf)
+    def jobs(df: => org.apache.spark.sql.DataFrame): Int =
+      Bench.Recorder.jobs(spark)(df.write.format("noop").mode("overwrite").save())
+    val fd = jobs(text.TextOps.filterDecision(spark, sf))
+    assert(fd >= 1 && fd <= 4, s"filter_decision launched $fd jobs")
+    val dc = jobs(dedup.Dedup.decontaminate(spark, sf))
+    assert(dc >= 1 && dc <= 3, s"decontaminate launched $dc jobs")
   }
 }

@@ -38,21 +38,4 @@ class PiiSpec extends SparkSpecBase {
     assert(got(4L) == (("nothing sensitive here, just 42 words", false)))
     assert(got(5L) == (("", false)))
   }
-
-  test("decontaminateBloom matches the exact broadcast path on the corpus") {
-    val sf = "/root/testdata/sf0.001"
-    val d = Tables.documents(spark, sf)
-    val train = d.filter(col("source") =!= "src0")
-    val eval_ = d.filter(col("source") === "src0")
-    val exact = graft.api.Similarity.decontaminate(
-        train, col("doc_id"), col("text"), eval_, col("text"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    // fpp 1e-9: low enough that ZERO false positives occur on this
-    // corpus (bloom is seed-deterministic, so this is a stable check);
-    // at the default fpp the bloom path may over-count by design
-    val bloom = graft.api.Similarity.decontaminateBloom(
-        train, col("doc_id"), col("text"), eval_, col("text"), fpp = 1e-9)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
-    assert(bloom == exact)
-  }
 }

@@ -363,4 +363,74 @@ class VectorExprsPropSpec extends SparkSpecBase {
         s"case ${(a, b, g)}")
     }
   }
+
+  test("shingle kernels equal the substringSQL reference, codegen and interpreted") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions._
+    import org.apache.spark.sql.GraftGlue
+    import spark.implicits._
+    val ascii = Gen.listOf(Gen.oneOf('a', 'b', 'c', ' ', '7')).map(_.mkString)
+    // 1- to 4-byte UTF-8 chars, including a surrogate pair
+    val multi = Gen.listOf(Gen.oneOf("a", " ", "é", "ß", "漢", "字", "😀"))
+      .map(_.mkString)
+    val texts = (samples(ascii, 40) ++ samples(multi, 40) ++
+      Seq("", "a", "é", "😀😀", "漢字 ab", "x" * 25)).distinct
+    def refs(t: String, n: Int): Seq[UTF8String] = {
+      val u = UTF8String.fromString(t)
+      (1 to math.max(u.numChars - n + 1, 1)).map(i => u.substringSQL(i, n))
+    }
+    def xxh(u: UTF8String): Long =
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
+        u.getBaseObject, u.getBaseOffset, u.numBytes, 0L)
+    def sig(gs: Seq[UTF8String]): Seq[Long] = (0 until 64).map { j =>
+      gs.map(g => HyperplaneBucket.mix64(
+        MinHashSigText.fnv1a64(g) + j * MinHashSigText.Gamma)).min
+    }
+    // (kernel, its expected value from the references, a Scala view of its result)
+    def strs(a: ArrayData): Any = (0 until a.numElements()).map(a.getUTF8String(_).toString)
+    def longs(a: ArrayData): Any = a.toLongArray().toSeq
+    def counts(m: MapData): Any = (0 until m.numElements()).map(k =>
+      m.keyArray().getUTF8String(k).toString -> m.valueArray().getLong(k)).toMap
+    val kernels: Seq[(String, (Expression, Int) => Expression, Seq[UTF8String] => Any, Any => Any)] = Seq(
+      ("char_shingles", CharShingles(_, _), _.map(_.toString).distinct,
+        v => strs(v.asInstanceOf[ArrayData])),
+      ("char_ngrams", CharNgrams(_, _), _.map(_.toString),
+        v => strs(v.asInstanceOf[ArrayData])),
+      ("char_ngram_counts", CharNgramCounts(_, _),
+        _.groupBy(_.toString).map { case (g, xs) => g -> xs.size.toLong },
+        v => counts(v.asInstanceOf[MapData])),
+      ("minhash_sig_text", MinHashSigText(_, _, 64), sig,
+        v => longs(v.asInstanceOf[ArrayData])),
+      ("char_shingle_fnv_hashes", CharShingleFnvHashes(_, _), _.map(g => MinHashSigText.fnv1a64(g)),
+        v => longs(v.asInstanceOf[ArrayData])),
+      ("char_shingle_hashes", CharShingleHashes(_, _), _.map(xxh).distinct,
+        v => longs(v.asInstanceOf[ArrayData])))
+    // an RDD source keeps the projection out of ConvertToLocalRelation,
+    // and no fallback lets a compile failure pass as interpreted eval
+    val df = spark.sparkContext.parallelize(texts.zipWithIndex, 2).toDF("t", "i")
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      for (n <- Seq(1, 2, 5, 20); (name, make, expect, view) <- kernels) {
+        val e = make(GraftGlue.expression(col("t")), n)
+        val rows = df.select(col("i"), GraftGlue.column(e).as("v"))
+          .queryExecution.toRdd.map(_.copy()).collect()
+          .map(r => r.getInt(0) -> view(r.get(1, e.dataType))).toMap
+        texts.zipWithIndex.foreach { case (t, i) =>
+          val want = expect(refs(t, n))
+          assert(rows(i) == want, s"$name codegen, n=$n, '$t'")
+          val interp = make(Literal.create(t, StringType), n).eval(null)
+          assert(view(interp) == want, s"$name interpreted, n=$n, '$t'")
+        }
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }
